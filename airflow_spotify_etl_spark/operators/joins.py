@@ -104,9 +104,14 @@ def asof_join_pandas(
 
 def incremental_anti_append(new: DataFrame, existing: DataFrame, key: str) -> DataFrame:
     """Rows of ``new`` whose key is absent from ``existing`` (J4) — the
-    idempotent-append guard. Broadcast ``existing``'s key projection when the
-    target's recent-key set is small; at scale, partition both by key."""
-    return new.join(existing.select(key).distinct(), key, "left_anti")
+    idempotent-append guard. Callers pass the narrowest ``existing`` that
+    can hold a replayed key: ``append_table`` on a partitioned sink reads
+    only the key column of the partitions the batch touches, so the key
+    side is as small as those partitions whatever the sink's depth.
+    Repeated keys on the ``existing`` side cannot change an anti-join's
+    result, so they are not deduplicated first (that would cost a
+    shuffle)."""
+    return new.join(existing.select(key), key, "left_anti")
 
 
 def fuzzy_self_join(

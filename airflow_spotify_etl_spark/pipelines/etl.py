@@ -112,8 +112,9 @@ def run_recently_played_etl(
         return {"tracks_processed": 0, "status": "no_data"}
 
     # Partition the sink by the date slice: downstream reads of "recent
-    # days" prune to those directories, and the anti-join's key scan
-    # stays bounded at scale.
+    # days" prune to those directories, and the append guard reads only
+    # the batch's own dates (the date is played_at[:10], a function of the
+    # key), so its key scan follows the batch, not the sink's age.
     appended = append_table(
         flat.drop("played_ts"), db_path, key="played_at",
         partition_date_col="timestamp",

@@ -749,14 +749,14 @@ def q263_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             " x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
         ).alias("qarr"),
     )
-    # ONE distributed job (r12, VERDICT r11 item 6): the s_i sums and the
-    # row count ride the P pass as a tagged union — s rows carry j = -1,
-    # and because every embedding contributes exactly one qi per dim i,
-    # the (i, -1) group's row count IS n. Previously this ran three
-    # sequential actions (count, s collect, P collect), paying two extra
-    # job round-trips and re-scanning the table each time; the union's
-    # two legs now materialize inside a single job. Collected volume is
-    # unchanged: 64 + 4096 bounded cells.
+    # ONE distributed job (r12, VERDICT r11 item 6): the s_i sums, the
+    # row count and the width check ride the P pass as a tagged union —
+    # s rows carry j = -1, and one (-1, -2) row per embedding carries its
+    # width (NULL embedding → -1), so that group's count IS n and its
+    # min/max prove every row is a vector of one fixed width. Previously
+    # this ran three sequential actions (count, s collect, P collect),
+    # paying two extra job round-trips and re-scanning the table each
+    # time. Collected volume: 1 + 64 + 4096 bounded cells.
     cells = (
         dims.select("i", F.lit(-1).alias("j"), F.col("qi").alias("val"))
         .unionAll(
@@ -767,12 +767,31 @@ def q263_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("j", "pij"),
             ).select("i", "j", F.col("pij").alias("val"))
         )
+        .unionAll(
+            emb.select(
+                F.lit(-1).alias("i"),
+                F.lit(-2).alias("j"),
+                F.coalesce(F.size("embedding"), F.lit(-1)).cast("bigint").alias("val"),
+            )
+        )
         .groupBy("i", "j")
-        .agg(F.sum("val").alias("s"), F.count("*").alias("cnt"))
+        .agg(
+            F.sum("val").alias("s"),
+            F.count("*").alias("cnt"),
+            F.min("val").alias("lo"),
+            F.max("val").alias("hi"),
+        )
         .collect()
     )
+    width = next((r for r in cells if r.j == -2), None)
+    if width is not None and (width.lo < 1 or width.lo != width.hi):
+        raise ValueError(
+            "q263_pca_power_iteration: every embedding must be a non-null "
+            f"vector of one fixed width; widths span {width.lo}..{width.hi} "
+            "(-1 = NULL)"
+        )
+    n = int(width.cnt) if width is not None else 0
     s = {r.i: int(r.s) for r in cells if r.j == -1}
-    n = next((int(r.cnt) for r in cells if r.j == -1), 0)
     d = len(s)
     P = {(r.i, r.j): int(r.s) for r in cells if r.j >= 0}
 

@@ -9,10 +9,14 @@
 - ``append_table``    — K2: idempotent relational append. The reference's
   SQLite ``if_exists="append"`` double-inserts on re-run
   (spotify_etl2.py:220); here the anti-join guard (J4) makes the append
-  exactly-once per key. Partitioned by date for pruning at scale. Sink
-  existence is probed by attempting the read (AnalysisException → first
-  run), so the same code works on local disk, HDFS, or s3a:// — no
-  driver-local filesystem assumptions.
+  exactly-once per key. Partitioned by date, the guard reads only the
+  partitions the batch touches, so its cost follows the batch, not the
+  sink's age. That rests on the key→partition contract: rows with the
+  same key have the same partition value (the date is ``played_at[:10]``),
+  so a replayed key can only sit in a partition the batch touches.
+  Partition directories are probed through the path's Hadoop
+  ``FileSystem``, so the same code works on local disk, HDFS, or s3a://
+  — no driver-local filesystem assumptions.
 - ``append_jdbc``     — K2 RDBMS parity: the reference's ``to_sql(...
   SQLite...)`` (spotify_etl2.py:220) as ``df.write.jdbc(mode="append")``
   with the same anti-join idempotency guard reading the remote keys back.
@@ -36,8 +40,9 @@
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.joins import incremental_anti_append
 
@@ -97,7 +102,16 @@ def append_table(
     key: str,
     partition_date_col: str | None = None,
 ) -> int:
-    """Idempotent append to a Parquet table; returns rows actually added."""
+    """Idempotent append to a Parquet table; returns rows actually added.
+
+    Unpartitioned, the guard anti-joins the batch against the whole
+    table's keys. With ``partition_date_col`` it reads only the key column
+    of the partitions the batch touches (_append_partitioned), so the
+    append costs O(batch), not O(table). Contract: rows with the same key
+    have the same partition value — a sink that breaks it (one key under
+    two dates) can take a replayed key a second time."""
+    if partition_date_col:
+        return _append_partitioned(new, path, key, partition_date_col)
     try:
         existing = new.sparkSession.read.parquet(path)
     except AnalysisException:
@@ -109,11 +123,56 @@ def append_table(
     fresh = fresh.localCheckpoint(eager=True)
     n = fresh.count()
     if n:
-        writer = fresh.write.mode("append")
-        if partition_date_col:
-            writer = writer.partitionBy(partition_date_col)
-        writer.parquet(path)
+        fresh.write.mode("append").parquet(path)
     return n
+
+
+def _append_partitioned(new: DataFrame, path: str, key: str, part_col: str) -> int:
+    """``append_table`` for a sink partitioned by ``part_col``.
+
+    1. Collect the batch's distinct partition values (one small job).
+    2. Keep the ``part_col=value`` directories that exist, named by Spark's
+       own partition-path rule (string cast, escaping, null or empty →
+       ``__HIVE_DEFAULT_PARTITION__``) and probed through the Hadoop
+       ``FileSystem`` of ``path``.
+    3. Read only those directories with the one-column schema of ``key``:
+       fewer than 32 paths (Spark's parallel-discovery threshold) list on
+       the driver and a given schema needs no inference, so neither costs
+       a job however deep the sink is. Data
+       files that also carry ``part_col`` (writers other than Spark's
+       ``partitionBy``) read the same way.
+    4. Count the appended rows with an ``Observation`` on the write, so
+       the count and the write are one action over the same rows."""
+    spark = new.sparkSession
+    as_str = F.col(part_col).cast("string")
+    values = [r[0] for r in new.select(as_str).distinct().collect()]
+    if not values:
+        return 0
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    base = Path(path)
+    fs = base.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = [Path(base, catalog_utils.getPartitionPathString(part_col, v)) for v in values]
+    dirs = [d.toString() for d in dirs if fs.exists(d)]
+    fresh = new
+    if dirs:
+        existing = spark.read.schema(T.StructType([new.schema[key]])).parquet(*dirs)
+        fresh = incremental_anti_append(new, existing, key)
+    # Only the partitions collected above were guarded: a batch that
+    # recomputes into another one (a non-deterministic source) fails the
+    # write instead of landing unguarded.
+    touched = as_str.isin([v for v in values if v is not None])
+    if None in values:
+        touched = touched | as_str.isNull()
+    moved = F.raise_error(
+        F.lit(f"append_table: batch changed partitions of {part_col} mid-append")
+    )
+    fresh = fresh.withColumn(part_col, F.when(touched, F.col(part_col)).otherwise(moved))
+    obs = Observation()
+    fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
+    fresh.write.mode("append").partitionBy(part_col).parquet(path)
+    return obs.get["n"]
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
@@ -438,8 +497,6 @@ def summary_record_observed(df: DataFrame, run_action, **aggs: F.Column):
     Reference parity note: spotify_etl2.py:271-278 computes its summary
     stats in separate full passes after writing; ``summary_record``
     fuses them into one pass, and this fuses that pass into the write."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     observed = df.observe(obs, *[c.alias(name) for name, c in aggs.items()])
     result = run_action(observed)

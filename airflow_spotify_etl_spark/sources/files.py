@@ -139,8 +139,9 @@ SCHEMAS: dict[str, T.StructType] = {
 # load_table is called thousands of times per bench run; one driver-side
 # footer read per file VERSION amortizes to nothing, and keying on the
 # stat identity means a regenerated fixture (different row-group count)
-# or a transient read failure never serves stale fan-out decisions in a
-# long-lived session (ADVICE r11).
+# never serves stale fan-out decisions in a long-lived session (ADVICE
+# r11). Only successful reads are cached: a transient failure is retried
+# on the next call rather than pinned for the file version's lifetime.
 _FOOTER_CACHE: dict[tuple[str, int, int], tuple[int, int]] = {}
 
 
@@ -158,11 +159,10 @@ def _footer_facts(path: str) -> tuple[int, int] | None:
             import pyarrow.parquet as pq
 
             meta = pq.ParquetFile(path).metadata
-            _FOOTER_CACHE[key] = (meta.num_row_groups, meta.num_rows)
         except Exception:
-            _FOOTER_CACHE[key] = (-1, -1)
-    rg, rows = _FOOTER_CACHE[key]
-    return None if rg < 0 else (rg, rows)
+            return None
+        _FOOTER_CACHE[key] = (meta.num_row_groups, meta.num_rows)
+    return _FOOTER_CACHE[key]
 
 
 # High-cardinality key per table for the opt-in scan fan-out: hash

@@ -181,9 +181,25 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
         base = item.nodeid.split("[", 1)[0]
         parts = base.split("::")
-        key = parts[0].rpartition("/")[2] + "::" + parts[-1]
+        fname = parts[0].rpartition("/")[2]
+        files.add(fname)
+        key = fname + "::" + parts[-1]
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(key)
+    # A stale entry (test renamed or deleted) would silently stop marking
+    # anything; fail instead. Only files collected whole are checked, so
+    # a run of one file or one node id still works.
+    narrowed = {a.split("::", 1)[0].rpartition("/")[2] for a in config.args if "::" in a}
+    stale = sorted(
+        e for e in _SLOW_TESTS - matched
+        if e.split("::", 1)[0] in files - narrowed
+    )
+    if stale:
+        raise pytest.UsageError(
+            "_SLOW_TESTS entries match no collected test: " + ", ".join(stale)
+        )

@@ -3190,6 +3190,28 @@ def test_q263_pca_vs_numpy(spark, tmp_path, qs):
     assert len({r.share_ppm for r in rows}) == 1
 
 
+def test_q263_rejects_null_or_ragged_embeddings(spark, tmp_path, qs):
+    """n counts embedding rows, so every row must be a vector of one
+    width: a NULL or a shorter embedding raises instead of silently
+    leaving the covariance's n short."""
+    from pyspark.sql.types import (ArrayType, FloatType, IntegerType,
+                                   LongType, StructField, StructType)
+
+    schema = StructType([
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(FloatType())),
+        StructField("label", IntegerType()),
+    ])
+    good = [(i, [float(i), 1.0, -float(i)], 0) for i in range(6)]
+    for bad in ((6, None, 0), (6, [1.0, 2.0], 0)):
+        d = tmp_path / str(len(bad[1] or []))
+        spark.createDataFrame(good + [bad], schema).write.parquet(
+            str(d / "embeddings.parquet")
+        )
+        with pytest.raises(ValueError, match="one fixed width"):
+            qs["q263_pca_power_iteration"](spark, str(d))
+
+
 def test_q264_simpson_classic_reversal(spark, tmp_path, qs):
     """The textbook Simpson construction: cohort A beats B inside BOTH
     segments, yet pooled B beats A because A's volume concentrates in

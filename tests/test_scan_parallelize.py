@@ -81,3 +81,29 @@ def test_results_identical_with_and_without(spark):
     on = rows(ngram_jaccard_pairs(docs_on, threshold=0.5, max_bucket=1000))
     off = rows(ngram_jaccard_pairs(docs_off, threshold=0.5, max_bucket=1000))
     assert on == off and len(on) > 0
+
+
+def test_footer_read_failure_is_not_cached(tmp_path, monkeypatch):
+    """A failed footer read answers None but is retried on the next call;
+    only a successful read is cached for the file version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from airflow_spotify_etl_spark.sources import files
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": [1, 2, 3]}), path)
+    real = pq.ParquetFile
+    calls = []
+
+    def flaky(p, *a, **kw):
+        calls.append(p)
+        if len(calls) == 1:
+            raise OSError("transient read failure")
+        return real(p, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    assert files._footer_facts(path) is None
+    assert files._footer_facts(path) == (1, 3)
+    assert files._footer_facts(path) == (1, 3)
+    assert len(calls) == 2

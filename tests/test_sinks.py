@@ -1,6 +1,8 @@
-"""Sink tests: JDBC idempotent append end-to-end against embedded Derby
-(the JDBC driver bundled with Spark), first-run/table-absent semantics,
-bounded key read-back, and the reference-parity console display."""
+"""Sink tests: the partitioned parquet append guard (replay, first run,
+null partitions, depth-independent cost), JDBC idempotent append
+end-to-end against embedded Derby (the JDBC driver bundled with Spark),
+first-run/table-absent semantics, bounded key read-back, and the
+reference-parity console display."""
 
 from __future__ import annotations
 
@@ -11,8 +13,160 @@ from airflow_spotify_etl_spark.sinks.writers import (
     _jdbc_key_scan,
     _jdbc_table_absent,
     append_jdbc,
+    append_table,
     display_tracks,
 )
+
+
+PLAYS = "played_at string, track string, timestamp string"
+
+
+def _plays(spark, keys):
+    """Sink rows keyed by ``played_at``; the partition value is its date."""
+    return spark.createDataFrame(
+        [(k, f"track-{k}", k[:10]) for k in keys], PLAYS
+    )
+
+
+def _sink_keys(spark, path):
+    return sorted(
+        r[0] for r in spark.read.schema("played_at string").parquet(path).collect()
+    )
+
+
+def _data_files(path):
+    import os
+
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+        if f.endswith(".parquet")
+    )
+
+
+def test_append_table_first_run_on_missing_path(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    keys = ["2026-01-01T10:00:00Z", "2026-01-02T09:00:00Z"]
+    assert append_table(_plays(spark, keys), sink, "played_at", "timestamp") == 2
+    assert _sink_keys(spark, sink) == keys
+    # Empty batch: nothing to guard, nothing written.
+    assert append_table(_plays(spark, []), sink, "played_at", "timestamp") == 0
+    assert _sink_keys(spark, sink) == keys
+
+
+def test_append_table_replay_spanning_two_dates(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    first = ["2026-01-01T10:00:00Z", "2026-01-01T23:59:00Z", "2026-01-02T00:01:00Z"]
+    assert append_table(_plays(spark, first), sink, "played_at", "timestamp") == 3
+    # Replays from both earlier dates plus new plays on an old and a new date.
+    batch = ["2026-01-01T23:59:00Z", "2026-01-02T00:01:00Z",
+             "2026-01-02T08:00:00Z", "2026-01-03T07:00:00Z"]
+    assert append_table(_plays(spark, batch), sink, "played_at", "timestamp") == 2
+    assert _sink_keys(spark, sink) == sorted(set(first) | set(batch))
+
+
+def test_append_table_all_replay_writes_no_file(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    keys = ["2026-01-01T10:00:00Z", "2026-01-02T09:00:00Z"]
+    append_table(_plays(spark, keys), sink, "played_at", "timestamp")
+    files = _data_files(sink)
+    assert append_table(_plays(spark, keys), sink, "played_at", "timestamp") == 0
+    assert _data_files(sink) == files
+
+
+def test_append_table_null_partition_lands_once(spark, tmp_path):
+    import os
+
+    sink = str(tmp_path / "sink")
+    batch = spark.createDataFrame([("k-null", "t", None), ("k-empty", "t", "")], PLAYS)
+    assert append_table(batch, sink, "played_at", "timestamp") == 2
+    assert os.listdir(sink).count("timestamp=__HIVE_DEFAULT_PARTITION__") == 1
+    assert append_table(batch, sink, "played_at", "timestamp") == 0
+    assert _sink_keys(spark, sink) == ["k-empty", "k-null"]
+
+
+def test_append_table_sink_files_carry_partition_column(spark, tmp_path):
+    """Writers other than Spark's partitionBy (DuckDB ``PARTITION_BY``)
+    also store the partition column inside the data files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = tmp_path / "sink"
+    old = ["2026-01-01T10:00:00Z", "2026-01-01T11:00:00Z"]
+    part = sink / "timestamp=2026-01-01"
+    part.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"played_at": old, "track": ["a", "b"], "timestamp": ["2026-01-01"] * 2}),
+        part / "data_0.parquet",
+    )
+    batch = [old[1], "2026-01-01T12:00:00Z", "2026-01-02T01:00:00Z"]
+    assert append_table(_plays(spark, batch), str(sink), "played_at", "timestamp") == 2
+    assert _sink_keys(spark, str(sink)) == sorted(set(old) | set(batch))
+
+
+def test_append_table_fails_if_batch_changes_partitions(spark, tmp_path):
+    """A batch whose recompute lands in a partition the guard did not read
+    fails the write instead of appending unguarded."""
+    import os
+
+    flag = str(tmp_path / "seen")
+
+    def day(k):
+        # First evaluation (the partition-value job): the key's date;
+        # every later one (the write): a date the guard never read.
+        if os.path.exists(flag):
+            return "2026-01-09"
+        open(flag, "w").close()
+        return k[:10]
+
+    batch = spark.createDataFrame(
+        [("2026-01-01T10:00:00Z", "t")], "played_at string, track string"
+    ).withColumn("timestamp", F.udf(day, "string").asNondeterministic()("played_at"))
+    sink = str(tmp_path / "sink")
+    with pytest.raises(Exception, match="changed partitions"):
+        append_table(batch, sink, "played_at", "timestamp")
+    assert _data_files(sink) == []
+
+
+def _append_cost(spark, new, path):
+    """(rows appended, Spark jobs, tasks) of one append_table call, counted
+    through the status tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "append_table cost")
+    try:
+        n = append_table(new, path, "played_at", "timestamp")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    return n, len(jobs), tasks
+
+
+def test_append_table_cost_does_not_grow_with_sink_depth(spark, tmp_path):
+    """The guard reads only the batch's partitions: a 400-day sink costs
+    the same Spark jobs and tasks as a 40-day one."""
+    import datetime
+
+    day0 = datetime.date(2025, 1, 1)
+    batch = ["2025-01-01T08:00:00Z", "2025-01-02T08:00:00Z", "2025-01-02T09:00:00Z"]
+    costs = []
+    for depth in (40, 400):
+        sink = str(tmp_path / f"sink{depth}")
+        days = [(day0 + datetime.timedelta(d)).isoformat() for d in range(depth)]
+        _plays(spark, [f"{d}T08:00:00Z" for d in days]).write.partitionBy(
+            "timestamp"
+        ).parquet(sink)
+        costs.append(_append_cost(spark, _plays(spark, batch), sink))
+    assert costs[0] == costs[1]
+    assert costs[0][0] == 1
 
 
 @pytest.fixture()
