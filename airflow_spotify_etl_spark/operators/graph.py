@@ -483,7 +483,7 @@ def _directed_double(edges: DataFrame, part_key: str) -> DataFrame:
 
     The repartition is kept, but for a different reason than r11 claimed:
     under AQE a localCheckpoint scan reports ``UnknownPartitioning``
-    (plans/r12/q218_kcore_round_after.txt), so the per-round joins can
+    (q218's per-round plans show it), so the per-round joins can
     never REUSE the partitioning — its real value is execution WIDTH.
     Without it, AQE coalesces the (small-at-bench-scale) edge derivation
     to one or two post-shuffle partitions, the checkpointed double
@@ -617,7 +617,7 @@ def label_propagation_trajectory(
     (before the r11 rewrite each round shuffled the edges TWICE, by
     ``a`` and by ``b``, for a byte-identical result); locally the
     node-sized labels broadcast into the checkpointed double, so no
-    edge bytes move in any round (plans/r12/q230_lp_round_join_after).
+    edge bytes move in any round.
     r12: the double is built in ONE explode pass (_directed_double)
     instead of a raw-edge checkpoint followed by a two-leg union +
     repartition + second checkpoint — the r11 extra materialization that

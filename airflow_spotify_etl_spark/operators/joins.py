@@ -105,9 +105,9 @@ def asof_join_pandas(
 def incremental_anti_append(new: DataFrame, existing: DataFrame, key: str) -> DataFrame:
     """Rows of ``new`` whose key is absent from ``existing`` (J4) — the
     idempotent-append guard. Callers pass the narrowest ``existing`` that
-    can hold a replayed key: ``append_table`` on a partitioned sink reads
-    only the key column of the partitions the batch touches, so the key
-    side is as small as those partitions whatever the sink's depth.
+    can hold a replayed key: ``append_table`` reads only the key column of
+    the partitions the batch touches, so the key side is as small as those
+    partitions whatever the sink's depth.
     Repeated keys on the ``existing`` side cannot change an anti-join's
     result, so they are not deduplicated first (that would cost a
     shuffle)."""

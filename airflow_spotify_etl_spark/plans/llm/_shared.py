@@ -22,18 +22,21 @@ def _build_concurrently(builders):
     checkpoint JOBS overlap on the executors instead of running
     back-to-back, so a composite whose arms each materialize an
     intermediate pays max(arm) instead of sum(arm) in wall-clock.
-    ``inheritable_thread_target`` keeps each spawned job attached to the
-    caller's thread-local job group/description. Results return in builder
-    order, so the returned DataFrames — and every downstream plan and
-    result — are identical to sequential construction."""
+    ``inheritable_thread_target`` bound to the active session keeps each
+    spawned job attached to the caller's job group/description and its
+    session tags. Results return in builder order, so the returned
+    DataFrames — and every downstream plan and result — are identical to
+    sequential construction."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     if len(builders) <= 1:
         return [b() for b in builders]
+    session = SparkSession.getActiveSession()
+    wrap = inheritable_thread_target(session) if session else inheritable_thread_target
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = [pool.submit(inheritable_thread_target(b)) for b in builders]
+        futures = [pool.submit(wrap(b)) for b in builders]
         return [f.result() for f in futures]
 
 

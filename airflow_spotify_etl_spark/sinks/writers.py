@@ -9,11 +9,12 @@
 - ``append_table``    — K2: idempotent relational append. The reference's
   SQLite ``if_exists="append"`` double-inserts on re-run
   (spotify_etl2.py:220); here the anti-join guard (J4) makes the append
-  exactly-once per key. Partitioned by date, the guard reads only the
-  partitions the batch touches, so its cost follows the batch, not the
-  sink's age. That rests on the key→partition contract: rows with the
-  same key have the same partition value (the date is ``played_at[:10]``),
-  so a replayed key can only sit in a partition the batch touches.
+  exactly-once per key. The sink is partitioned by date and the guard
+  reads only the partitions the batch touches, so its cost follows the
+  batch, not the sink's age. That rests on the key→partition contract:
+  rows with the same key have the same partition value (the date is
+  ``played_at[:10]``), so a replayed key can only sit in a partition the
+  batch touches.
   Partition directories are probed through the path's Hadoop
   ``FileSystem``, so the same code works on local disk, HDFS, or s3a://
   — no driver-local filesystem assumptions.
@@ -39,7 +40,6 @@
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,55 +96,29 @@ def write_orc(df: DataFrame, path: str) -> str:
     return path
 
 
-def append_table(
-    new: DataFrame,
-    path: str,
-    key: str,
-    partition_date_col: str | None = None,
-) -> int:
-    """Idempotent append to a Parquet table; returns rows actually added.
-
-    Unpartitioned, the guard anti-joins the batch against the whole
-    table's keys. With ``partition_date_col`` it reads only the key column
-    of the partitions the batch touches (_append_partitioned), so the
-    append costs O(batch), not O(table). Contract: rows with the same key
-    have the same partition value — a sink that breaks it (one key under
-    two dates) can take a replayed key a second time."""
-    if partition_date_col:
-        return _append_partitioned(new, path, key, partition_date_col)
-    try:
-        existing = new.sparkSession.read.parquet(path)
-    except AnalysisException:
-        # Missing path or no parquet files yet — first run.
-        existing = None
-    fresh = incremental_anti_append(new, existing, key) if existing is not None else new
-    # localCheckpoint (not cache): the count and the write must see identical
-    # rows even if the source re-fetch would be non-deterministic.
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(path)
-    return n
-
-
-def _append_partitioned(new: DataFrame, path: str, key: str, part_col: str) -> int:
-    """``append_table`` for a sink partitioned by ``part_col``.
+def append_table(new: DataFrame, path: str, key: str, partition_date_col: str) -> int:
+    """Idempotent append to a Parquet table partitioned by
+    ``partition_date_col``; returns rows actually added.
 
     1. Collect the batch's distinct partition values (one small job).
-    2. Keep the ``part_col=value`` directories that exist, named by Spark's
-       own partition-path rule (string cast, escaping, null or empty →
-       ``__HIVE_DEFAULT_PARTITION__``) and probed through the Hadoop
-       ``FileSystem`` of ``path``.
-    3. Read only those directories with the one-column schema of ``key``:
-       fewer than 32 paths (Spark's parallel-discovery threshold) list on
-       the driver and a given schema needs no inference, so neither costs
-       a job however deep the sink is. Data
-       files that also carry ``part_col`` (writers other than Spark's
-       ``partitionBy``) read the same way.
+    2. Keep the ``partition_date_col=value`` directories that exist, named
+       by Spark's own partition-path rule (string cast, escaping, null or
+       empty → ``__HIVE_DEFAULT_PARTITION__``) and probed through the
+       Hadoop ``FileSystem`` of ``path``.
+    3. Read only those directories with the one-column schema of ``key``
+       and anti-join the batch against them: fewer than 32 paths (Spark's
+       parallel-discovery threshold) list on the driver and a given schema
+       needs no inference, so neither costs a job however deep the sink
+       is. Data files that also carry ``partition_date_col`` (writers
+       other than Spark's ``partitionBy``) read the same way.
     4. Count the appended rows with an ``Observation`` on the write, so
-       the count and the write are one action over the same rows."""
+       the count and the write are one action over the same rows.
+
+    The append costs O(batch), not O(table). Contract: rows with the same
+    key have the same partition value — a sink that breaks it (one key
+    under two dates) can take a replayed key a second time."""
     spark = new.sparkSession
-    as_str = F.col(part_col).cast("string")
+    as_str = F.col(partition_date_col).cast("string")
     values = [r[0] for r in new.select(as_str).distinct().collect()]
     if not values:
         return 0
@@ -153,7 +127,10 @@ def _append_partitioned(new: DataFrame, path: str, key: str, part_col: str) -> i
     base = Path(path)
     fs = base.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    dirs = [Path(base, catalog_utils.getPartitionPathString(part_col, v)) for v in values]
+    dirs = [
+        Path(base, catalog_utils.getPartitionPathString(partition_date_col, v))
+        for v in values
+    ]
     dirs = [d.toString() for d in dirs if fs.exists(d)]
     fresh = new
     if dirs:
@@ -166,12 +143,16 @@ def _append_partitioned(new: DataFrame, path: str, key: str, part_col: str) -> i
     if None in values:
         touched = touched | as_str.isNull()
     moved = F.raise_error(
-        F.lit(f"append_table: batch changed partitions of {part_col} mid-append")
+        F.lit(
+            f"append_table: batch changed partitions of {partition_date_col} mid-append"
+        )
     )
-    fresh = fresh.withColumn(part_col, F.when(touched, F.col(part_col)).otherwise(moved))
+    fresh = fresh.withColumn(
+        partition_date_col, F.when(touched, F.col(partition_date_col)).otherwise(moved)
+    )
     obs = Observation()
     fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-    fresh.write.mode("append").partitionBy(part_col).parquet(path)
+    fresh.write.mode("append").partitionBy(partition_date_col).parquet(path)
     return obs.get["n"]
 
 

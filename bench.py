@@ -1,625 +1,125 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark runner: every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+Queries run in q-number order. Prints the full record as one JSON line:
   {"run_id": "...", "metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {"q01_...": sec, ...}, "sf": 0.1, "runs": 3, "stat": "median"}
-
-Every stdout JSON line (the full per-query line and the compact summary)
-and BENCH_FULL.json carry the SAME "run_id"; a captured tail whose two
-lines disagree on run_id mixes runs and must not be compared line-to-line.
+   "queries": {"q01_...": sec, ...}, "sf": 0.1, "runs": 3, "stat": "median",
+   "floor_sec": <sec>}
+and writes the same record to BENCH_FULL.json. The LAST stdout line is a
+compact summary: the same fields with only the 8 slowest queries, plus
+"n_queries", "queries_shown" and "queries_file". It stays under 600 bytes
+at any query count, so a capture that keeps only the tail of stdout still
+parses (a single ~5 KB line once lost a run's headline number to tail
+truncation). Both stdout lines and BENCH_FULL.json carry the same
+"run_id"; a captured tail whose lines disagree on it mixes runs and must
+not be compared line-to-line.
 
 Each query is fully MATERIALIZED via a noop-format write: every projection
 expression, sort, and window actually executes (a count() action would let
 Catalyst prune projection expressions and final sorts, under-measuring
 expression-heavy queries). Results stay on executors; nothing is collected.
 
-Per-query time is the MEDIAN of $SPARK_GRAFT_BENCH_RUNS (default 3)
-back-to-back runs: single-run warm timings showed single-digit-percent
-run-to-run noise (r2 verdict), which a median makes round-over-round deltas
-trustworthy against.
+Per-query time is the MEDIAN of RUNS back-to-back runs, which damps the
+single-digit-percent run-to-run noise of single warm timings.
+
+This total is not the project's performance claim surface; that is
+perfbench/ and BENCHMARK.json.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def _anchor_medians() -> dict[str, float]:
-    """Per-query anchors from BASELINE.md's standing-reference table
-    (cells like ``| q01_pricing_summary | 1.358 |``); {} if absent."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-    try:
-        text = open(path).read()
-    except OSError:
-        return {}
-    # Lookahead for the trailing pipe: the two-column-pair table rows share
-    # the middle "|", which a consuming match would swallow, hiding the
-    # second (query, sec) pair on every row.
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(r"\|\s*(q\w+)\s*\|\s*([0-9.]+)\s*(?=\|)", text)
-    }
-
-HEADLINE = [
-    "q01_pricing_summary",
-    "q02_top_revenue_orders",
-    "q03_segment_order_value",
-    "q04_region_nation_revenue",
-    "q05_global_stats",
-    "q06_grouped_stats",
-    "q07_daily_activity",
-    "q08_top_users_per_type",
-    "q09_recency_rank",
-    "q10_purchases_without_errors",
-    "q11_user_cohorts",
-    "q12_quality_report",
-    "q13_flatten_defaults",
-    "q14_duration_format",
-    "q15_rollup_counts",
-    "q16_shipdate_range_join",
-    "q17_last_click_before_purchase",
-    "q18_text_stats",
-    "q19_token_counts",
-    "q20_lang_profile",
-    "q21_exact_dedup",
-    "q22_cosine_topk",
-    "q23_fingerprint",
-    "q24_ngram_jaccard_pairs",
-    "q25_minhash_lsh_pairs",
-    "q26_simhash_pairs",
-    "q27_ivf_topk",
-    "q28_embedding_near_dups",
-    "q29_lang_id",
-    "q30_sessionization",
-    "q31_hourly_windows",
-    "q32_dedup_latest_per_user",
-    "q33_flatten_track_payload",
-    "q34_media_meta",
-    "q35_frame_sample",
-    "q36_media_features",
-    "q37_window_suite",
-    "q38_pivot_daily",
-    "q39_above_type_average",
-    "q40_big_customers",
-    "q41_value_percentiles",
-    "q42_dedup_clusters",
-    "q43_vocabulary",
-    "q44_cube_counts",
-    "q45_repetition_metrics",
-    "q46_token_entropy",
-    "q47_stratified_sample",
-    "q48_pack_sequences",
-    "q49_unigram_logprob",
-    "q50_decontamination",
-    "q51_bm25_keyword_search",
-    "q52_pii_redaction",
-    "q53_chunk_dedup",
-    "q54_top_bigrams",
-    "q55_semantic_dedup",
-    "q56_ivf_search_seeded",
-    "q57_item_pagerank",
-    "q58_gopher_quality_flags",
-    "q59_cooccurrence_pmi",
-    "q60_fuzzy_part_names",
-    "q61_conversion_funnel",
-    "q62_retention_cohorts",
-    "q63_rolling_hourly_value",
-    "q64_tfidf_top_terms",
-    "q65_scd2_intervals",
-    "q66_event_path_trigrams",
-    "q67_value_outliers",
-    "q68_price_histogram",
-    "q69_weighted_sample",
-    "q70_incremental_rollup",
-    "q71_per_source_quota",
-    "q72_excess_part_suppliers",
-    "q73_json_props_stats",
-    "q74_sql_forecast_revenue",
-    "q75_grouping_sets",
-    "q76_windowed_distinct_count",
-    "q77_dedup_clusters_pointer",
-    "q78_trend_fit_grouped",
-    "q79_rag_chunks",
-    "q80_scd2_incremental",
-    "q81_minhash_delta",
-    "q82_snapshot_diff",
-    "q83_leakage_safe_split",
-    "q84_split_leakage_audit",
-    "q85_epoch_mixture",
-    "q86_token_budget_selection",
-    "q87_volume_shipping",
-    "q88_market_share",
-    "q89_integrity_audit",
-    "q90_source_overlap",
-    "q91_temporal_dim_lookup",
-    "q92_ensemble_near_dups",
-    "q93_canonical_dedup",
-    "q94_exact_k_sample",
-    "q95_diversity_cap_sample",
-    "q96_bloom_novelty",
-    "q97_pq_adc_topk",
-    "q98_gap_fill_hourly",
-    "q99_weighted_exact_k",
-    "q100_ivf_pq_search",
-    "q101_merge_upsert",
-    "q102_dsir_weights",
-    "q103_span_dup_profile",
-    "q104_quality_classifier",
-    "q105_winnowed_dup_profile",
-    "q106_kmv_vocab_overlap",
-    "q107_perplexity_buckets",
-    "q108_quality_aware_keepers",
-    "q109_span_excision",
-    "q110_binary_dedup",
-    "q111_copurchase_adamic_adar",
-    "q112_int8_quantization",
-    "q113_sq8_search_recall",
-    "q114_skew_report",
-    "q115_sparse_cosine_pairs",
-    "q116_epoch_shuffle",
-    "q117_bpe_merge_candidates",
-    "q118_rate_anomalies",
-    "q119_corpus_datasheet",
-    "q120_contrastive_negatives",
-    "q121_stats_drift",
-    "q122_embedding_drift",
-    "q123_k_anonymity",
-    "q124_sql_shipping_priority",
-    "q125_sql_returned_items",
-    "q126_sql_large_volume_customers",
-    "q127_salted_enrichment",
-    "q128_salted_distinct_users",
-    "q129_range_boundaries",
-    "q130_lsh_recall_audit",
-    "q131_join_cardinality",
-    "q132_binary_block_pairs",
-    "q133_binary_cdc_pairs",
-    "q134_scaling_subsets",
-    "q135_multitouch_attribution",
-    "q136_stratified_split",
-    "q137_dedup_effectiveness",
-    "q138_session_conversion",
-    "q139_exact_heavy_bigrams",
-    "q140_conversion_latency",
-    "q141_cluster_size_histogram",
-    "q142_langid_confusion",
-    "q143_classifier_threshold_sweep",
-    "q144_curriculum_order",
-    "q145_interleaved_batches",
-    "q146_ivf_recall_audit",
-    "q147_pipeline_funnel",
-    "q148_contamination_by_source",
-    "q149_signature_tier_agreement",
-    "q150_reference_top_tracks",
-    "q151_personalized_pagerank",
-    "q152_sql_priority_check",
-    "q153_sql_order_count_histogram",
-    "q154_sql_lone_late_supplier",
-    "q155_sql_dormant_high_balance",
-    "q156_boilerplate_excision",
-    "q157_vocab_growth",
-    "q158_ngram_novelty",
-    "q159_context_fit",
-    "q160_sql_top_revenue_supplier",
-    "q161_sql_small_quantity_revenue",
-    "q162_mad_outliers",
-    "q163_benford_audit",
-    "q164_partition_layout_audit",
-    "q165_sequence_patterns",
-    "q166_weighted_median",
-    "q167_embedding_health",
-    "q168_transition_triangles",
-    "q169_sql_recursive_reachability",
-    "q170_lsh_band_sweep",
-    "q171_zorder_layout_audit",
-    "q172_reliability_bins",
-    "q173_novelty_decay",
-    "q174_sql_pivot_unpivot",
-    "q175_sql_lateral_topk",
-    "q176_cdc_apply",
-    "q177_time_weighted_avg",
-    "q178_ohlc_candles",
-    "q179_label_centroid_affinity",
-    "q180_rfm_segments",
-    "q181_expectations_report",
-    "q182_chi_square",
-    "q183_source_copy_rings",
-    "q184_spearman_corr",
-    "q185_cohens_kappa",
-    "q186_ks_test",
-    "q187_mann_whitney",
-    "q188_autocorrelation",
-    "q189_gini_concentration",
-    "q190_cusum_changepoints",
-    "q191_association_rules",
-    "q192_psi_drift",
-    "q193_sql_local_supplier_volume",
-    "q194_sql_disjunctive_revenue",
-    "q195_sql_important_parts",
-    "q196_sql_promo_share",
-    "q197_sql_nation_profit",
-    "q198_source_entropy",
-    "q199_hhi_concentration",
-    "q200_theil_decomposition",
-    "q201_kendall_tau",
-    "q202_zipf_slope",
-    "q203_fano_burstiness",
-    "q204_mcnemar_test",
-    "q205_runs_test",
-    "q206_vocab_coverage",
-    "q207_containment_pairs",
-    "q208_sql_supplier_diversity",
-    "q209_sql_min_cost_supplier",
-    "q210_peak_concurrency",
-    "q211_js_source_drift",
-    "q212_keyness_loglik",
-    "q213_edit_distance_pairs",
-    "q214_pareto_frontier",
-    "q215_lead_lag_correlation",
-    "q216_bag_of_words_dedup",
-    "q217_seasonal_indices",
-    "q218_kcore_trajectory",
-    "q219_sprt_sequential_test",
-    "q220_phrase_search",
-    "q221_interevent_burstiness",
-    "q222_kaplan_meier",
-    "q223_haar_band_energy",
-    "q224_abc_classification",
-    "q225_degree_assortativity",
-    "q226_markov_conditional_entropy",
-    "q227_trending_decay",
-    "q228_cohort_ltv",
-    "q229_markov_top1_accuracy",
-    "q230_percolation_robustness",
-    "q231_time_avg_concurrency",
-    "q232_token_burstiness",
-    "q233_anova_segments",
-    "q234_kruskal_wallis",
-    "q235_nelson_aalen",
-    "q236_flesch_readability",
-    "q237_kneser_ney_bigrams",
-    "q238_pettitt_changepoint",
-    "q239_item_cosine_recs",
-    "q240_mattr_lexical_diversity",
-    "q241_welch_ttest",
-    "q242_bh_fdr_sources",
-    "q243_mann_kendall_theil_sen",
-    "q244_dyad_census",
-    "q245_rbo_rankings",
-    "q246_frequent_triples",
-    "q247_hurst_rs",
-    "q248_gumbel_return_levels",
-    "q249_kn_perplexity",
-    "q250_wasserstein_drift",
-    "q251_poisson_bootstrap_ci",
-    "q252_jackknife_by_source",
-    "q253_optimal_segmentation",
-    "q254_burrows_delta",
-    "q255_robust_means",
-    "q256_mmr_selection",
-    "q257_rrf_hybrid_search",
-    "q258_ndcg_eval",
-    "q259_count_min_tokens",
-    "q260_isotonic_calibration",
-    "q261_good_turing",
-    "q262_length_bucket_padding",
-    "q263_pca_power_iteration",
-    "q264_simpson_audit",
-    "q265_calibration_scorecard",
-    "q266_textrank_keywords",
-    "q267_chow_break_test",
-    "q268_cochran_armitage_trend",
-    "q269_effect_sizes",
-    "q270_davies_bouldin",
-    "q271_silhouette_simplified",
-    "q272_roc_auc",
-    "q273_mantel_haenszel",
-    "q274_jonckheere_terpstra",
-    "q275_calinski_harabasz",
-    "q276_average_precision",
-    "q277_temperature_mixing",
-    "q278_fim_transform",
-    "q279_span_corruption",
-    "q280_binary_hamming_recall",
-    "q281_dispersion_dp",
-    "q282_lang_source_nmi",
-    "q283_deletion_manifest",
-    "q284_tokenizer_fertility",
-    "q285_srm_audit",
-    "q286_cuped_adjustment",
-    "q287_dedup_distribution_shift",
-    "q288_murphy_decomposition",
-    "q289_mix_shift_decomposition",
-    "q290_embedding_isotropy",
-    "q291_wilson_intervals",
-    "q292_rendezvous_resharding",
-    "q293_quantile_normalization",
-    "q294_neyman_allocation",
-    "q295_aa_test_audit",
-    "q296_loo_target_encoding",
-    "q297_transition_drift",
-    "q298_weekday_hour_seasonality",
-    "q299_kendall_tau",
-    "q300_theil_sen",
-    "q301_mann_kendall",
-    "q302_hyperloglog_vocab",
-    "q303_rank_biased_overlap",
-    "q304_bh_fdr_control",
-    "q305_chao1_vocab_richness",
-    "q306_gini_concentration",
-    "q307_spearman_rho",
-    "q308_cohens_kappa",
-    "q309_ks_two_sample",
-    "q310_lexical_concentration",
-    "q311_robust_means",
-    "q312_categorical_effect_size",
-    "q313_g_test",
-    "q314_mrl_truncation_recall",
-    "q315_hubness_audit",
-    "q316_seasonal_backtest",
-    "q317_ann_tier_scoreboard",
-    "q318_ivf_nprobe_sweep",
-    "q319_source_tvd_matrix",
-    "q320_bloom_fpr_audit",
-    "q321_logrank_test",
-    "q322_friedman_test",
-    "q323_durbin_watson",
-    "q324_page_hinkley",
-    "q325_join_skew_audit",
-    "q326_vocab_budget_curve",
-    "q327_pq_distortion",
-    "q328_minhash_accuracy_audit",
-    "q329_source_length_percentiles",
-    "q330_ivf_cell_balance",
-    "q331_heaps_law_fit",
-    "q332_mood_median_test",
-    "q333_ab_duration_planner",
-    "q334_dau_mau_stickiness",
-    "q335_token_rank_movers",
-    "q336_ann_cost_frontier",
-    "q337_lorenz_curve",
-    "q338_kmv_accuracy_audit",
-    "q339_dedup_tier_scoreboard",
-    "q340_hellinger_matrix",
-    "q341_dunn_posthoc",
-    "q342_brown_forsythe",
-    "q343_cramer_von_mises",
-    "q344_ljung_box",
-    "q345_yule_walker_ar2",
-    "q346_fleiss_kappa",
-    "q347_page_trend_test",
-    "q348_drift_tier_scoreboard",
-    "q349_cochran_q",
-    "q350_sketch_audit_scoreboard",
-    "q351_ordinal_association",
-    "q352_kendalls_w",
-    "q353_turning_point_test",
-    "q354_cox_stuart_trend",
-    "q355_knn_label_agreement",
-    "q356_distinct_n_diversity",
-    "q357_woe_iv",
-    "q358_delta_method_ratio_ci",
-    "q359_compaction_plan",
-    "q360_welch_anova",
-    "q361_ansari_bradley",
-    "q362_watermark_lateness_audit",
-    "q363_lift_gains",
-    "q364_l_diversity",
-    "q365_t_closeness",
-    "q366_growth_accounting",
-    "q367_capture_recapture",
-    "q368_semantic_decontamination",
-    "q369_auc_delong",
-    "q370_shuffle_mixing_audit",
-    "q371_anderson_darling",
-    "q372_bartlett_test",
-    "q373_dp_sensitivity",
-    "q374_kuiper_weekday",
-    "q375_grubbs_daily",
-    "q376_holm_stepdown",
-    "q377_retrieval_agreement",
-    "q378_watermark_cost_curve",
-    "q379_pot_gpd_fit",
-    "q380_record_rate_test",
-    "q381_contamination_ngram_sweep",
-    "q382_hill_tail_index",
-    "q383_expected_shortfall",
-    "q384_token_water_filling",
-    "q385_benjamini_yekutieli",
-    "q386_variogram_profile",
-    "q387_largest_remainder_apportionment",
-    "q388_jarque_bera",
-    "q389_wilcoxon_signed_rank",
-    "q390_bowker_symmetry",
-    "q391_cronbach_alpha",
-    "q392_icc_reliability",
-    "q393_kpss_level",
-    "q394_arch_lm_test",
-    "q395_hodges_lehmann_shift",
-    "q396_minhash_k_sweep",
-    "q397_context_overflow_curve",
-    "q398_granger_lag1",
-    "q399_seasonal_mann_kendall",
-    "q400_dup_rate_by_length",
-    "q401_quade_test",
-    "q402_siegel_slopes",
-    "q403_breusch_pagan",
-    "q404_pacf_lag2",
-    "q405_variant_nested_extract",
-]
+RUNS = 3
+BENCH_FULL = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def query_names() -> list[str]:
+    """Every registered query, in q-number order (q2 before q10)."""
+    from airflow_spotify_etl_spark.plans import all_queries
+
+    return sorted(all_queries(), key=lambda n: int(n[1:n.index("_")]))
+
+
+def _median_noop(make_df) -> tuple[float, list[float]]:
+    """Median wall time of RUNS noop writes of ``make_df()``, and the samples."""
+    samples = []
+    for _ in range(RUNS):
+        t0 = time.perf_counter()
+        make_df().write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - t0)
+    return round(statistics.median(samples), 3), samples
+
+
+def run(spark, sf_dir: str, names: list[str] | None = None) -> dict:
+    """Time ``names`` (default: every query) at ``sf_dir``; print the full
+    and the compact JSON lines, write BENCH_FULL.json, return the full record."""
+    from airflow_spotify_etl_spark.plans import all_queries
+
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
-
-    from airflow_spotify_etl_spark.plans import all_queries
-    from airflow_spotify_etl_spark.session import get_spark
-
-    # Unique run id stamped on EVERY stdout JSON line and on
-    # BENCH_FULL.json (r10 verdict: a capture that tails a multi-run
-    # session can pair the full per-query line of one run with the
-    # summary line of another; the shared run_id makes any such mix
-    # detectable and the artifact self-describing).
+    names = names or query_names()
+    qs = all_queries()
     run_id = f"{int(time.time())}-{os.getpid()}"
 
-    spark = get_spark("bench")
-    qs = all_queries()
-
     # Warm the JVM, file-listing, and codegen caches so the first timed query
-    # doesn't pay session startup: trivial action + one untimed headline run.
+    # doesn't pay session startup: trivial action + one untimed query run.
     spark.range(1).count()
-    qs[HEADLINE[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-    # Empty-plan floor (r9 verdict task 6): a trivial 1-row local query
-    # timed with the same noop-write + median protocol. This measures the
-    # fixed per-query session cost (job scheduling, noop commit, Py4J
-    # round-trips) that every sub-second reading carries, so drift in
-    # small ratios can be read as (t - floor)/(anchor - floor) instead of
-    # argued about. Reported as "floor_sec" beside the headline.
-    floor_samples = []
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        spark.range(1).write.format("noop").mode("overwrite").save()
-        floor_samples.append(time.perf_counter() - t0)
-    floor_sec = round(statistics.median(floor_samples), 3)
+    # Empty-plan floor: the fixed per-query cost (job scheduling, noop
+    # commit, Py4J round-trips) that every sub-second reading carries.
+    floor_sec, _ = _median_noop(lambda: spark.range(1))
     print(f"# empty-plan floor: {floor_sec:.3f}s", file=sys.stderr)
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        samples = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 3)
+    for name in names:
+        timings[name], samples = _median_noop(lambda: qs[name](spark, sf_dir))
         print(
             f"# {name}: median {timings[name]:.3f}s of "
             f"{[round(s, 3) for s in samples]}",
             file=sys.stderr,
         )
 
-    # Regression gate vs the standing BASELINE.md anchors (sf0.1 only —
-    # anchors were recorded at that scale).
-    anchors = _anchor_medians() if abs(sf - 0.1) < 1e-9 else {}
-    # Frozen first-ever anchors (BASELINE_FROZEN.json sidecar): a second,
-    # never-re-anchored ratio that makes cumulative drift since each
-    # query's first anchor visible even when the standing anchor is
-    # legitimately re-derived (methodology fixes, redesigns).
-    frozen: dict[str, float] = {}
-    if anchors:
-        try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BASELINE_FROZEN.json",
-                )
-            ) as f:
-                frozen = {
-                    q: rec["sec"] for q, rec in json.load(f)["queries"].items()
-                }
-        except (OSError, KeyError, ValueError):
-            frozen = {}
-    regressions = [
-        name
-        for name, sec in timings.items()
-        if name in anchors and sec > 2.0 * anchors[name]
-    ]
-    for name in regressions:
-        print(
-            f"# REGRESSION {name}: {timings[name]:.3f}s > 2x anchor "
-            f"{anchors[name]:.3f}s (BASELINE.md)",
-            file=sys.stderr,
-        )
-    if anchors:
-        print(
-            f"# anchor check: {len(regressions)} of "
-            f"{sum(1 for n in timings if n in anchors)} anchored queries "
-            "exceed 2x their BASELINE.md median",
-            file=sys.stderr,
-        )
-
-    frozen_ratios = {
-        n: round(timings[n] / frozen[n], 3) for n in timings if n in frozen
-    }
-    if frozen_ratios:
-        worst = sorted(frozen_ratios.items(), key=lambda kv: -kv[1])[:5]
-        med = statistics.median(frozen_ratios.values())
-        print(
-            f"# frozen-anchor drift: median {med:.2f}x of "
-            f"{len(frozen_ratios)}; worst "
-            + ", ".join(f"{n}={r:.2f}x" for n, r in worst),
-            file=sys.stderr,
-        )
-
-    total = round(sum(timings.values()), 3)
     full = {
         "run_id": run_id,
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "runs": n_runs,
+        "runs": RUNS,
         "stat": "median",
         "floor_sec": floor_sec,
-        "frozen_ratios": frozen_ratios,
     }
-    # Full per-query JSON goes to a FILE (and to stdout first, for anyone
-    # reading the whole stream). The LAST stdout line is a compact summary
-    # under 300 bytes: round 4's single ~5 KB JSON line was tail-truncated
-    # by the driver's capture and recorded as parsed:null, losing the
-    # round's headline number. A tail capture always keeps the final line
-    # intact when it is short.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    with open(full_path, "w") as f:
+    with open(BENCH_FULL, "w") as f:
         json.dump(full, f, separators=(",", ":"))
         f.write("\n")
     print(json.dumps(full, separators=(",", ":")))
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:8]
-    )
-    print(
-        json.dumps(
-            {
-                "run_id": run_id,
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": slowest,
-                "sf": sf,
-                "runs": n_runs,
-                "stat": "median",
-                "n_queries": len(timings),
-                "queries_shown": "8 slowest",
-                "regressions_vs_anchor": len(regressions),
-                "frozen_drift_median": (
-                    round(statistics.median(frozen_ratios.values()), 2)
-                    if frozen_ratios
-                    else None
-                ),
-                "floor_sec": floor_sec,
-                "queries_file": "BENCH_FULL.json",
-            },
-            separators=(",", ":"),
-        )
-    )
+    slowest = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:8])
+    compact = {
+        **full,
+        "queries": slowest,
+        "n_queries": len(timings),
+        "queries_shown": "8 slowest",
+        "queries_file": os.path.basename(BENCH_FULL),
+    }
+    print(json.dumps(compact, separators=(",", ":")))
+    return full
+
+
+def main() -> None:
+    from airflow_spotify_etl_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    run(get_spark("bench"), sf_dir)
 
 
 if __name__ == "__main__":

@@ -5,13 +5,15 @@ composite queries (q149, q170, q339, q350).
 The contract under test: results come back in BUILDER ORDER regardless of
 completion order, the DataFrames are the same ones sequential construction
 would produce (so downstream unions/joins — and therefore results — are
-unchanged), and the single-builder fast path stays on the caller's thread.
+unchanged), the single-builder fast path stays on the caller's thread, and
+the builder threads carry the caller's session tags.
 """
 
 from __future__ import annotations
 
 import threading
 import time
+import warnings
 
 from pyspark.sql import functions as F
 
@@ -74,3 +76,19 @@ def test_dataframe_checkpoints_identical_to_sequential(spark):
         assert sorted(map(tuple, t.collect())) == sorted(
             map(tuple, s.collect())
         )
+
+
+def test_builder_threads_inherit_session_tags(spark):
+    # Session tags are thread-local; without the session bound into the
+    # thread wrapper the builders' jobs lose them, and PySpark warns
+    # "Spark session is not provided. Tags will not be inherited".
+    tag = "concurrent-build-tag"
+    spark.addTag(tag)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            seen = _build_concurrently([spark.getTags, spark.getTags])
+    finally:
+        spark.removeTag(tag)
+    assert all(tag in tags for tags in seen)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]

@@ -1,7 +1,7 @@
-"""Compact physical-plan audit: for each headline query, execute it (noop
-write) and summarize the FINAL adaptive plan — join strategies chosen,
-shuffle count, filters pushed into scans, codegen spans. The human-readable
-companion to tests/test_plan_quality.py.
+"""Compact physical-plan audit: for each registered query, in q-number
+order, execute it and summarize the FINAL adaptive plan — join strategies
+chosen, shuffle count, filters pushed into scans, codegen spans. The
+human-readable companion to tests/test_plan_quality.py.
 
 Usage: python tools/planaudit.py [sf_dir] [query ...]
 """
@@ -66,12 +66,11 @@ def main() -> int:
 
     from airflow_spotify_etl_spark.plans import all_queries
     from airflow_spotify_etl_spark.session import get_spark
-    from bench import HEADLINE
+    from bench import query_names
 
     spark = get_spark("planaudit")
     qs = all_queries()
-    names = [n for n in (only or HEADLINE) if n in qs]
-    for name in sorted(names):
+    for name in [n for n in query_names() if not only or n in only]:
         try:
             print(audit(name, qs[name](spark, sf_dir)))
         except Exception as ex:  # noqa: BLE001
