@@ -159,10 +159,17 @@ def run_recently_played_analysis(
     API caps the scan at 50 rows (F6), so no scale concern."""
     raw = source.recently_played(limit=limit)
     flat = flatten_with_defaults(raw, WIDE_TRACK_FIELDS)
-    ranked = flat.withColumn(
-        "rank",
-        F.row_number().over(W.orderBy(F.col("played_at").desc(), F.col("track_id"))),
-    ).select("rank", *[f.name for f in WIDE_TRACK_FIELDS])
+    # One rank group for the whole page, keyed explicitly so WindowExec's
+    # "No Partition Defined" warning stays for windows unbounded by
+    # accident. A literal key would not do: the optimizer drops foldable
+    # window keys and the warning returns. substring(played_at, 1, 0) is ""
+    # on every row (played_at defaults to "") but not foldable, and the
+    # source's one-partition frame satisfies it with no exchange.
+    page = F.substring("played_at", 1, 0)
+    recency = W.partitionBy(page).orderBy(F.col("played_at").desc(), F.col("track_id"))
+    ranked = flat.withColumn("rank", F.row_number().over(recency)).select(
+        "rank", *[f.name for f in WIDE_TRACK_FIELDS]
+    )
 
     stats = summary_record(
         ranked,

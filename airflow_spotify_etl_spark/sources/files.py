@@ -211,8 +211,10 @@ def _maybe_parallelize(
     table (many files/row groups, or a directory where the footer probe
     returns None) never triggers — and the width follows
     ``sparkContext.defaultParallelism`` so the driver's lower-core bench
-    runs fan out to matching widths. Tables below 4 rows/core (tiny
-    dims) are left alone. Results are partition-independent by
+    runs fan out to matching widths. Tiny dims (below 4 rows/core, and
+    below 128 rows whatever the core count) are left alone: the exchange
+    costs more than one task scanning a few rows, and that holds for an
+    absolute row count. Results are partition-independent by
     construction (every query is DuckDB-oracle-paired, hash-checked
     order-insensitively) and re-verified by the strict selfcheck.
     Kill-switch: SPARK_GRAFT_SCAN_PARALLELIZE=0.
@@ -224,7 +226,7 @@ def _maybe_parallelize(
         return df
     row_groups, rows = facts
     cores = spark.sparkContext.defaultParallelism
-    if row_groups >= cores or rows < 4 * cores:
+    if row_groups >= cores or rows < max(4 * cores, 128):
         return df
     return df.repartition(cores, F.col(_FANOUT_KEYS[name]))
 

@@ -12,8 +12,14 @@ parameters ARE the pushed-down predicates:
 - ``market`` → partition-pruning-like parameter (S4).
 
 Fetch happens driver-side (payloads are ≤50 docs by API contract — tiny),
-then becomes a distributed DataFrame with the explicit nested payload
-schema; flattening runs as Catalyst expressions. For a hypothetical
+then becomes a one-partition DataFrame built on the JVM from a single
+Arrow batch, parsed with the explicit nested payload schema; flattening
+runs as Catalyst expressions. A list handed to ``createDataFrame`` would
+instead be parallelized through a ``PythonRDD`` into one slice per core,
+so every action on the frame (take, quality check, append, CSV, summary)
+would start a Python worker per mostly-empty slice. The Arrow batch stays
+on the JVM, and one partition makes each action one task and lets global
+aggregates and the rank window run without a shuffle. For a hypothetical
 many-partition REST source (thousands of artists), ``fetch_partitioned``
 shows the scale shape: keys distributed via ``mapInPandas`` so each executor
 fetches its own slice — the driver never becomes the bottleneck.
@@ -259,9 +265,9 @@ class SpotifyRestSource:
         (spotify_etl.py:95-130; URL-encoding parity with :108)."""
         payload = self._get("/search", q=name, type="artist", limit=1)
         items = payload.get("artists", {}).get("items", [])[:1]
-        return self.spark.createDataFrame(
-            [(a.get("id", ""), a.get("name", "Unknown")) for a in items],
-            "artist_id string, artist_name string",
+        return self._frame(
+            artist_id=[a.get("id", "") for a in items],
+            artist_name=[a.get("name", "Unknown") for a in items],
         )
 
     def top_tracks(self, artist_id: str, market: str = "US") -> DataFrame:
@@ -294,17 +300,23 @@ class SpotifyRestSource:
             after_ms=None if after_us is None else after_us // 1000, limit=limit
         )
 
+    def _frame(self, **columns: list[str | None]) -> DataFrame:
+        """Driver-held string columns → a one-partition DataFrame built on
+        the JVM from one Arrow batch (see the module docstring); no Python
+        worker runs for it, whatever actions follow."""
+        import pyarrow as pa
+
+        table = pa.table({k: pa.array(v, pa.string()) for k, v in columns.items()})
+        return self.spark.createDataFrame(table).coalesce(1)
+
     def _payload_df(self, rows: list[dict]) -> DataFrame:
         """Nested payload → DataFrame via the explicit schema. Round-trips
         through JSON strings + from_json so malformed docs become nulls
         (PERMISSIVE — F8 per-row error tolerance, spotify_etl.py:239-255)
-        instead of failing the scan."""
+        instead of failing the scan. An empty payload takes the same path
+        and yields zero rows of the same schema."""
         schema = track_payload_schema()
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        raw = self.spark.createDataFrame(
-            [(json.dumps(r),) for r in rows], "raw string"
-        )
+        raw = self._frame(raw=[json.dumps(r) for r in rows])
         return raw.select(
             F.from_json("raw", schema, {"mode": "PERMISSIVE"}).alias("doc")
         ).select("doc.*")

@@ -16,6 +16,10 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from airflow_spotify_etl_spark.operators.flatten import (
+    RECENTLY_PLAYED_FIELDS,
+    flatten_with_defaults,
+)
 from airflow_spotify_etl_spark.pipelines import (
     run_recently_played_analysis,
     run_recently_played_etl,
@@ -250,6 +254,51 @@ def test_recently_played_analysis_end_to_end(spark, source, tmp_path, capsys):
     # W1: rank 1 is the most recent played_at.
     top = back.filter(F.col("rank") == 1).collect()[0]
     assert top["played_at"] == "2024-01-01T10:04:00.000Z"
+
+
+def test_rest_pipelines_run_one_task_per_stage(spark, source, tmp_path):
+    """The REST frames are one partition built on the JVM, so no Python
+    worker runs per mostly-empty slice: every stage of the three pipelines
+    (the recently-played sink written twice, then an empty page) runs one
+    task. The optimizer folds an empty page's frame into an empty local
+    relation, whose map stage has no task at all. An empty page still
+    returns no_data and flattens to the same schema as a full one."""
+
+    class EmptyPage(CannedTransport):
+        def __call__(self, url, headers, data=None):
+            if "recently-played" in url:
+                return {"items": []}
+            return super().__call__(url, headers, data)
+
+    quiet = SpotifyRestSource(spark, transport=EmptyPage(), token="t")
+    db = str(tmp_path / "db")
+    sc = spark.sparkContext
+    group = "rest-one-task-gate"
+    sc.setJobGroup(group, "REST pipelines")
+    try:
+        run_top_tracks_etl(spark, source, "Artist 0", str(tmp_path / "songs"))
+        run_recently_played_etl(spark, source, db)
+        assert run_recently_played_etl(spark, source, db)["rows_appended"] == 0
+        run_recently_played_analysis(
+            spark, source, str(tmp_path / "analysis"), display_results=False
+        )
+        assert run_recently_played_etl(spark, quiet, db) == {
+            "tracks_processed": 0,
+            "status": "no_data",
+        }
+        empty = flatten_with_defaults(quiet.recently_played(), RECENTLY_PLAYED_FIELDS)
+        full = flatten_with_defaults(source.recently_played(), RECENTLY_PLAYED_FIELDS)
+        assert empty.schema == full.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = {
+        stage: tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    }
+    assert tasks and max(tasks.values()) == 1, tasks
 
 
 def test_oauth_initial_grant_seeds_cache(spark, tmp_path):
