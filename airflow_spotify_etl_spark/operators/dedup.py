@@ -26,9 +26,11 @@ self-join bounded at 100 TB.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from .graph import _directed_double
 
 __all__ = [
     "exact_dedup",
@@ -473,21 +475,18 @@ def span_excise_fixpoint(
     corpus — and in practice 2-3 rounds suffice (seam windows are rare).
 
     Driver loop discipline (the connected_components pattern): one
-    bounded-size scalar check per round (`n_removed` sum — an aggregate,
-    not a collect of data), eager localCheckpoint between rounds so plan
-    depth stays O(1) instead of O(rounds), and a hard round cap. Raises
-    if the cap is hit while removals continue — a silent partial dedup
-    would poison downstream exact-match assumptions.
+    bounded-size scalar per round (the `n_removed` sum, observed on the
+    round's eager localCheckpoint, so it costs no job of its own), the
+    checkpoint keeping plan depth O(1) instead of O(rounds), and a hard
+    round cap. Raises if the cap is hit while removals continue — a silent
+    partial dedup would poison downstream exact-match assumptions.
 
     Returns (doc_id, n_tokens, n_removed, text_clean) where n_tokens is
     the ORIGINAL token count and n_removed the total across rounds."""
-    cur = span_excise(df, window_words, text_col, id_col)
-    cur = cur.localCheckpoint(eager=True)
-    total = cur.select(
-        "doc_id", "n_tokens", "n_removed", "text_clean"
+    total, removed = _checkpoint_observing(
+        span_excise(df, window_words, text_col, id_col), F.sum("n_removed")
     )
     for _ in range(int(max_rounds) - 1):
-        removed = total.agg(F.sum("n_removed")).collect()[0][0] or 0
         nxt = span_excise(
             total.select("doc_id", F.col("text_clean").alias("text")),
             window_words,
@@ -504,11 +503,10 @@ def span_excise_fixpoint(
                 "text_clean",
             )
         )
-        merged = merged.localCheckpoint(eager=True)
-        new_removed = merged.agg(F.sum("n_removed")).collect()[0][0] or 0
-        total = merged
+        total, new_removed = _checkpoint_observing(merged, F.sum("n_removed"))
         if new_removed == removed:
             return total
+        removed = new_removed
     final_check = span_excise(
         total.select("doc_id", F.col("text_clean").alias("text")),
         window_words,
@@ -520,6 +518,16 @@ def span_excise_fixpoint(
             f"span_excise_fixpoint: no convergence in {max_rounds} rounds"
         )
     return total
+
+
+def _checkpoint_observing(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
+    """Eagerly localCheckpoint ``df`` and return it with ``metric``, an
+    aggregate over its rows (null → 0). The metric rides the checkpoint's
+    own job as an Observation: a driver loop's per-round convergence
+    scalar costs no second action."""
+    obs = Observation()
+    out = df.observe(obs, metric.alias("m")).localCheckpoint(eager=True)
+    return out, obs.get["m"] or 0
 
 
 def winnowed_fingerprints(
@@ -889,7 +897,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    method: str = "label",
 ) -> DataFrame:
     """(doc_id, component) for every doc in the pair list, where component
     is the minimum doc id reachable through near-dup edges.
@@ -897,81 +904,52 @@ def connected_components(
     Pairwise dedup output is not yet a dedup DECISION: near-dup relations
     chain (A~B, B~C), so keeping "one of each pair" can still keep two docs
     of one cluster. This resolves pairs into clusters by min-label
-    propagation: each round, every node adopts the smallest label among
-    itself and its neighbors; converges in O(cluster diameter) rounds —
-    near-dup clusters are shallow (diameter ≤ a few hops), so a handful of
-    joins suffices. Each round is one shuffle join; the frontier is
-    localCheckpointed so the lineage doesn't grow exponentially.
+    propagation: every doc starts labeled with its own id, and each round
+    it adopts the smallest label among itself and its neighbors. A
+    component's minimum travels one hop per round, so convergence takes
+    O(cluster diameter) rounds; near-dup clusters are shallow (a few hops),
+    so a handful of rounds suffices, and a diameter beyond ``max_iter``
+    raises rather than return wrong labels.
 
-    ``method="pointer"`` adds a pointer-jumping shortcut each round
-    (l(v) ← l(l(v)) after the neighbor-min step): the distance a minimum
-    label travels per round doubles, so convergence is O(log diameter)
-    rounds — the scale path for long chains (templated page series, crawl
-    rings) where plain propagation would need diameter rounds. Labels are
-    always ids of nodes inside the same component (neighbor labels and
-    label-of-label both stay in-component), so correctness is unchanged;
-    each round costs one extra self-join on the label table, keyed by the
-    same component id the next round shuffles on anyway."""
-    # Directed double in ONE explode pass (r12, the operators/graph
-    # _directed_double discipline): the two-leg union re-derived the
-    # expensive pair subtree once per leg inside this eager checkpoint
-    # (ReusedExchange shares the exchange, not the post-exchange work).
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
-                    F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=True)
+    There is no shortcut step. Pointer jumping (l(v) ← l(l(v))) gives
+    O(log diameter) rounds only when ids increase along a chain: a 40-node
+    chain with shuffled ids still took 18 rounds, and the corpus tier's
+    shallow clusters converged in the same 2 rounds at an extra join per
+    round, so it was slower where it runs.
+
+    Shape: the directed edge double is built and materialized once
+    (graph._directed_double, partitioned by ``dst`` for execution width).
+    Each round joins the labels onto the double, unions each doc's own
+    label, and takes one per-doc min, materialized by ONE eager
+    localCheckpoint that keeps the lineage O(1); the count of changed
+    labels rides that checkpoint's job as an Observation, so a round is
+    one Spark action. The initial labels are checkpointed lazily and
+    materialize inside the first round's job."""
+    edges = _directed_double(
+        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")), "dst"
     )
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     n_changed = 0
     for _ in range(max_iter):
-        neighbor_min = (
+        # Each doc's candidates: its neighbors' labels plus its own label
+        # (flagged in ``own``); the min of them is the next label.
+        candidates = (
             edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_comp"))
+            .select(F.col("src").alias("doc_id"), "component", F.lit(None).alias("own"))
+            .unionByName(labels.withColumn("own", F.col("component")))
         )
-        updated = labels.join(
-            neighbor_min, labels.doc_id == neighbor_min.src, "left"
-        ).select(
-            "doc_id",
-            F.least(
-                F.col("component"), F.coalesce("nbr_comp", F.col("component"))
-            ).alias("component"),
-            (F.coalesce("nbr_comp", F.col("component")) < F.col("component")).alias(
-                "_changed"
+        labels, n_changed = _checkpoint_observing(
+            candidates.groupBy("doc_id").agg(
+                F.min("component").alias("component"), F.min("own").alias("own")
             ),
+            F.count_if(F.col("component") < F.col("own")),
         )
-        if method == "pointer":
-            # Shortcut: follow the label pointer one hop (l(l(v))). The
-            # target row always exists (labels cover every node and a
-            # label IS a node id); left+coalesce guards the no-op case.
-            tgt = updated.select(
-                F.col("doc_id").alias("t_id"), F.col("component").alias("t_comp")
-            )
-            updated = updated.join(
-                tgt, updated.component == tgt.t_id, "left"
-            ).select(
-                "doc_id",
-                F.coalesce("t_comp", "component").alias("component"),
-                (
-                    F.col("_changed")
-                    | (F.coalesce("t_comp", "component") < F.col("component"))
-                ).alias("_changed"),
-            )
-        updated = updated.localCheckpoint(eager=True)
-        n_changed = updated.filter("_changed").count()
-        labels = updated.drop("_changed")
+        labels = labels.drop("own")
         if n_changed == 0:
             break
     if n_changed:
@@ -980,8 +958,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({n_changed} labels still changing): cluster diameter exceeds "
-            f"max_iter — raise max_iter or use method='pointer' "
-            "(log-diameter rounds)"
+            "max_iter — raise max_iter"
         )
     return labels
 

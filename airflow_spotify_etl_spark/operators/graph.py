@@ -606,9 +606,10 @@ def label_propagation_trajectory(
     convergence checkable (two equal consecutive rows) without
     requiring it, so a fixed round budget keeps the semantics exact
     and oracle-comparable rather than hoped-for. (The production
-    CC operator in dedup.py uses pointer doubling — log rounds; this
-    plain LP exists for bounded-round parity with an unrolled SQL
-    twin, same trade as kcore_peel.)
+    CC operator, dedup.connected_components, runs the same propagation
+    until no label changes and refuses if it does not converge; this
+    fixed-round twin exists for bounded-round parity with an unrolled
+    SQL oracle, same trade as kcore_peel.)
 
     Scale shape per round (r11 rewrite, guide §2.4 "remove shuffles
     outright"): ONE edge-keyed label join + one vertex-keyed min — the

@@ -334,8 +334,9 @@ def q169_sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFra
     the depth cap, and the dedup. The UNION ALL frontier enumerates
     WALKS (Spark doesn't support UNION-distinct recursion yet), so the
     depth cap is the scale control: the walk count is Σ seeds·deg^h for
-    h ≤ 2, kept under Spark's 1M recursion row limit at every SF — the iterative-operator tier (q42/q57 pointer-doubling and
-    broadcast loops) is the engine's unbounded-depth path."""
+    h ≤ 2, kept under Spark's 1M recursion row limit at every SF — the
+    iterative-operator tier (q42 label propagation, q57 broadcast loops)
+    is the engine's unbounded-depth path."""
     from ..sources.files import register_views
 
     register_views(spark, sf_dir, ["events"], parallelize=True)

@@ -380,27 +380,6 @@ FROM comp GROUP BY component ORDER BY component
 """
 
 
-def q77_dedup_clusters_pointer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q42's clustering through the POINTER-DOUBLING path
-    (connected_components(method='pointer'), log-diameter rounds): the
-    same recursive-CTE transitive-closure oracle must hash-match, proving
-    the scale algorithm — not just the O(diameter) default — produces the
-    exact component labels."""
-    from ...operators.dedup import connected_components, ngram_jaccard_pairs
-
-    docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.5, max_bucket=1000)
-    comp = connected_components(pairs, method="pointer")
-    return (
-        comp.groupBy("component")
-        .agg(
-            F.count("*").alias("cluster_size"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
-        .orderBy("component")
-    )
-
-
 def q50_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination scan: flag corpus docs sharing any word
     n-gram with the eval set (here: the 5 lowest doc_ids stand in for an

@@ -80,6 +80,25 @@ def default_transport(url: str, headers: dict, data: bytes | None = None) -> dic
         return json.loads(resp.read().decode())
 
 
+def _token_grant(
+    spark: SparkSession, transport: Callable[..., dict], **fields: str
+) -> dict:
+    """POST one grant to the token endpoint with Basic client auth (the
+    public Spotify OAuth contract) and return the JSON payload. ``fields``
+    are the form body: ``grant_type`` plus the grant's own fields."""
+    cid = resolve_credential(spark, "client_id")
+    secret = resolve_credential(spark, "client_secret")
+    auth = base64.b64encode(f"{cid}:{secret}".encode()).decode()
+    return transport(
+        _TOKEN_URL,
+        {
+            "Authorization": f"Basic {auth}",
+            "Content-Type": "application/x-www-form-urlencoded",
+        },
+        data=urllib.parse.urlencode(fields).encode(),
+    )
+
+
 class OAuthUserAuth:
     """S6 — user-context OAuth provider (new.py:51-81): refresh-token flow
     with a durable token cache, the engine twin of spotipy's
@@ -153,23 +172,12 @@ class OAuthUserAuth:
         ``authorize_url`` (OAuth spec requirement, enforced by Spotify)."""
         import time
 
-        cid = resolve_credential(self.spark, "client_id")
-        secret = resolve_credential(self.spark, "client_secret")
-        auth = base64.b64encode(f"{cid}:{secret}".encode()).decode()
-        body = urllib.parse.urlencode(
-            {
-                "grant_type": "authorization_code",
-                "code": code,
-                "redirect_uri": redirect_uri,
-            }
-        ).encode()
-        payload = self.transport(
-            _TOKEN_URL,
-            {
-                "Authorization": f"Basic {auth}",
-                "Content-Type": "application/x-www-form-urlencoded",
-            },
-            data=body,
+        payload = _token_grant(
+            self.spark,
+            self.transport,
+            grant_type="authorization_code",
+            code=code,
+            redirect_uri=redirect_uri,
         )
         cache = {
             "access_token": payload["access_token"],
@@ -189,22 +197,11 @@ class OAuthUserAuth:
             cache.get("expires_at", 0) - self.expiry_slack_s
         ):
             return cache["access_token"]
-        cid = resolve_credential(self.spark, "client_id")
-        secret = resolve_credential(self.spark, "client_secret")
-        auth = base64.b64encode(f"{cid}:{secret}".encode()).decode()
-        body = urllib.parse.urlencode(
-            {
-                "grant_type": "refresh_token",
-                "refresh_token": cache["refresh_token"],
-            }
-        ).encode()
-        payload = self.transport(
-            _TOKEN_URL,
-            {
-                "Authorization": f"Basic {auth}",
-                "Content-Type": "application/x-www-form-urlencoded",
-            },
-            data=body,
+        payload = _token_grant(
+            self.spark,
+            self.transport,
+            grant_type="refresh_token",
+            refresh_token=cache["refresh_token"],
         )
         cache["access_token"] = payload["access_token"]
         cache["expires_at"] = time.time() + payload.get("expires_in", 3600)
@@ -238,16 +235,8 @@ class SpotifyRestSource:
         if self._auth is not None:
             return self._auth.token()
         if self._token is None:
-            cid = resolve_credential(self.spark, "client_id")
-            secret = resolve_credential(self.spark, "client_secret")
-            auth = base64.b64encode(f"{cid}:{secret}".encode()).decode()
-            payload = self.transport(
-                _TOKEN_URL,
-                {
-                    "Authorization": f"Basic {auth}",
-                    "Content-Type": "application/x-www-form-urlencoded",
-                },
-                data=b"grant_type=client_credentials",
+            payload = _token_grant(
+                self.spark, self.transport, grant_type="client_credentials"
             )
             self._token = payload["access_token"]
         return self._token

@@ -47,7 +47,6 @@ _SLOW_TESTS = {
     "test_dedup.py::test_boilerplate_excision_removes_all_copies",
     "test_dedup.py::test_delta_probe_respects_band_bucket_cap",
     "test_dedup.py::test_minhash_lsh_recall_vs_exact",
-    "test_dedup.py::test_pointer_doubling_converges_in_log_rounds",
     "test_dedup.py::test_span_excise_fixpoint_resolves_seam_duplicates",
     "test_empty_inputs.py::test_dedup_tiers_on_empty_corpus",
     "test_empty_inputs.py::test_delta_dedup_with_empty_delta_and_empty_corpus",

@@ -84,16 +84,42 @@ def test_simhash_finds_exact_duplicates(spark):
 
 def test_connected_components_known_graph(spark):
     """Chain 1-2-3 and pair 10-11: labels converge to each cluster's min id
-    (the transitive case pairwise dedup alone gets wrong)."""
+    (the transitive case pairwise dedup alone gets wrong). In the second
+    graph the min (5) hangs off the far end of 10-11-12, so its label must
+    travel back along the chain."""
     from airflow_spotify_etl_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(2, 3), (1, 2), (10, 11)], "doc_a long, doc_b long"
-    )
-    got = {
-        (r.doc_id, r.component) for r in connected_components(pairs).collect()
+    def labels(edges):
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        return {(r.doc_id, r.component) for r in connected_components(pairs).collect()}
+
+    assert labels([(2, 3), (1, 2), (10, 11)]) == {
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
     }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert labels([(2, 3), (1, 2), (10, 11), (11, 12), (5, 12)]) == {
+        (1, 1), (2, 1), (3, 1), (5, 5), (10, 5), (11, 5), (12, 5)
+    }
+
+
+def test_connected_components_one_action_per_round(spark):
+    """Chain 1-2-3 and pair 10-11 take 3 rounds (two that change a label,
+    one that confirms none changed). A round is one eager checkpoint whose
+    job also counts the changed labels, so under AQE (one job per query
+    stage) the whole call stays within 6 jobs per round plus 3 for the edge
+    double. A checkpoint plus a separate count per round runs 30."""
+    from airflow_spotify_etl_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(2, 3), (1, 2), (10, 11)], "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    group = "cc-jobs-per-round"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 6 * 3 + 3, n_jobs
 
 
 def test_band_bucket_cap_drops_boilerplate_buckets(spark):
@@ -120,37 +146,6 @@ def test_connected_components_refuses_unconverged(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=2)
-
-
-def test_pointer_doubling_converges_in_log_rounds(spark):
-    """method='pointer': a 40-node chain (diameter 40) resolves within 8
-    rounds — label distance doubles per round — where plain propagation
-    needs 40 rounds and refuses at max_iter=8. Same labels as the
-    O(diameter) method on a mixed graph."""
-    from airflow_spotify_etl_spark.operators.dedup import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=8)
-    got = {
-        (r.doc_id, r.component)
-        for r in connected_components(chain, max_iter=8, method="pointer").collect()
-    }
-    assert got == {(i, 0) for i in range(41)}
-
-    mixed = spark.createDataFrame(
-        [(2, 3), (1, 2), (10, 11), (11, 12), (5, 12)], "doc_a long, doc_b long"
-    )
-    lab = {
-        (r.doc_id, r.component) for r in connected_components(mixed).collect()
-    }
-    ptr = {
-        (r.doc_id, r.component)
-        for r in connected_components(mixed, method="pointer").collect()
-    }
-    assert lab == ptr
 
 
 def test_ngram_contamination_planted_overlap(spark):

@@ -72,7 +72,6 @@ def test_connected_components_on_empty_edges(spark):
 
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
     assert connected_components(pairs).count() == 0
-    assert connected_components(pairs, method="pointer").count() == 0
 
 
 def test_incremental_ops_with_empty_delta(spark, sf_dir):
