@@ -536,7 +536,6 @@ def winnowed_fingerprints(
     winnow_k: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "window",
 ) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03 —
@@ -559,22 +558,13 @@ def winnowed_fingerprints(
     token units) and their md5 fingerprints, one row per distinct
     selected position.
 
-    ``impl`` picks the physical strategy — both produce identical rows
-    (pytest-gated, exceptAll-empty both ways at sf0.1):
-    - ``'window'`` (default): codegen explode of dense positions + a
-      doc_id-keyed min-over-frame window + distinct. Pays one narrow
-      corpus-sized exchange, but every expression stays in whole-stage
-      codegen. Measured 5.3× FASTER than 'local' at sf0.1 (1.47 s vs
-      7.79 s median-of-3) — the interpreted-eval tax on array HOFs
-      dwarfs the exchange it saves, the same lesson as the shingle
-      operator's explode-vs-transform bench.
-    - ``'local'``: selection entirely inside array HOFs per row — hash
-      array, per-k-run array_min, array_distinct — then one explode of
-      the already-sparse selection; ZERO shuffle before the cross-doc
-      match. Semantically the minimal plan, and the shape to revisit
-      if/when Spark compiles higher-order functions into codegen (or on
-      clusters where the exchange, not CPU, is the proven bottleneck);
-      today the measured CPU tax says default to 'window'.
+    Plan: codegen explode of the dense positions, a doc_id-keyed
+    min-over-frame window, then distinct. It pays one narrow corpus-sized
+    exchange, but every expression stays in whole-stage codegen: selecting
+    inside array HOFs per row instead avoids the exchange and measured
+    5.3× slower at sf0.1 (7.79 s vs 1.47 s median-of-3), the interpreted
+    tax on higher-order functions, as in the shingle operator's
+    explode-vs-transform bench.
     """
     wv = int(window_words)
     kv = int(winnow_k)
@@ -585,46 +575,22 @@ def winnowed_fingerprints(
     n_pos = F.when(
         F.size("_w") >= wv, F.size("_w") - F.lit(wv) + 1
     ).otherwise(F.lit(0))
-    if impl == "local":
-        # keys[j] = md5(window at j) ‖ ':' ‖ lpad(j); sels[j] = min of
-        # keys[j..j+k-1]; distinct(sels) is the winnowed set. All three
-        # steps are row-local array expressions — nothing shuffles.
-        # sequence(0, -1) yields a DESCENDING [0, -1] in Spark, so the
-        # short-doc case must gate to an empty array, not rely on size.
-        n_expr = f"(size(_w) - {wv} + 1)"
-        keys = F.expr(
-            f"case when size(_w) >= {wv} then "
-            f"transform(sequence(0, {n_expr} - 1), _wi -> "
-            f"concat(md5(array_join(slice(_w, _wi + 1, {wv}), ' ')), ':', "
-            f"lpad(cast(_wi as string), 12, '0'))) "
-            f"else array() end"
-        )
-        sels = F.expr(
-            f"array_distinct(transform(sequence(0, size(_keys) - 1), j -> "
-            f"array_min(slice(_keys, j + 1, {kv}))))"
-        )
-        picked = (
-            base.withColumn("_keys", keys)
-            .filter(F.size("_keys") > 0)
-            .select("doc_id", F.explode(sels).alias("_sel"))
-        )
-    else:
-        idx = F.when(n_pos >= 1, F.sequence(F.lit(0), n_pos - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        span_of = f"array_join(slice(_w, _wi + 1, {wv}), ' ')"
-        wins = base.select("doc_id", "_w", F.explode(idx).alias("_wi")).select(
-            "doc_id",
-            F.col("_wi").alias("wi"),
-            F.md5(F.expr(span_of)).alias("wh"),
-        )
-        key = F.concat(
-            F.col("wh"), F.lit(":"), F.lpad(F.col("wi").cast("string"), 12, "0")
-        )
-        sel = F.min(key).over(
-            W.partitionBy("doc_id").orderBy("wi").rowsBetween(0, kv - 1)
-        )
-        picked = wins.select("doc_id", sel.alias("_sel")).distinct()
+    idx = F.when(n_pos >= 1, F.sequence(F.lit(0), n_pos - 1)).otherwise(
+        F.array().cast("array<int>")
+    )
+    span_of = f"array_join(slice(_w, _wi + 1, {wv}), ' ')"
+    wins = base.select("doc_id", "_w", F.explode(idx).alias("_wi")).select(
+        "doc_id",
+        F.col("_wi").alias("wi"),
+        F.md5(F.expr(span_of)).alias("wh"),
+    )
+    key = F.concat(
+        F.col("wh"), F.lit(":"), F.lpad(F.col("wi").cast("string"), 12, "0")
+    )
+    sel = F.min(key).over(
+        W.partitionBy("doc_id").orderBy("wi").rowsBetween(0, kv - 1)
+    )
+    picked = wins.select("doc_id", sel.alias("_sel")).distinct()
     return picked.select(
         "doc_id",
         F.substring("_sel", 34, 12).cast("int").alias("wi"),
@@ -1038,14 +1004,14 @@ def minhash_lsh_pairs(
     )
 
 
-def _band_candidates(
+def _banded(
     sig: DataFrame, bands: int, r: int, max_band_bucket: int | None
 ) -> DataFrame:
-    """Band a (doc_id, sig) signature relation and expand band buckets
-    into candidate pairs — the join-free capped expansion documented in
-    ``minhash_lsh_pairs``, factored out so sweep queries (q170) can
-    band ONE cached signature pass several ways instead of recomputing
-    the k minhashes per arm."""
+    """(doc_id, band, bh, _bucket_n): each doc's ``bands`` band hashes
+    (xxhash64 of r consecutive signature values), with each bucket's
+    population from a window. Buckets above ``max_band_bucket`` and
+    singletons (no pair to form) are dropped. The one banding shared by
+    the full self-pairs expansion and the delta probe."""
     band_arr = F.array(
         *[
             F.xxhash64(F.concat_ws(",", *[F.col("sig")[b * r + j].cast("string") for j in range(r)]))
@@ -1057,8 +1023,19 @@ def _band_candidates(
     ).withColumn("_bucket_n", F.count("*").over(W.partitionBy("band", "bh")))
     if max_band_bucket:
         banded = banded.filter(F.col("_bucket_n") <= max_band_bucket)
+    return banded.filter(F.col("_bucket_n") >= 2)
+
+
+def _band_candidates(
+    sig: DataFrame, bands: int, r: int, max_band_bucket: int | None
+) -> DataFrame:
+    """Band a (doc_id, sig) signature relation and expand band buckets
+    into candidate pairs — the join-free capped expansion documented in
+    ``minhash_lsh_pairs``, factored out so sweep queries (q170) can
+    band ONE cached signature pass several ways instead of recomputing
+    the k minhashes per arm."""
     buckets = (
-        banded.filter(F.col("_bucket_n") >= 2)
+        _banded(sig, bands, r, max_band_bucket)
         .groupBy("band", "bh")
         .agg(F.collect_list("doc_id").alias("ids"))
     )
@@ -1148,18 +1125,7 @@ def minhash_lsh_pairs_delta(
     full = corpus.unionByName(delta)
     r = k // bands
     sig = minhash_signatures(full, text_col, id_col, k, n)
-    band_arr = F.array(
-        *[
-            F.xxhash64(F.concat_ws(",", *[F.col("sig")[b * r + j].cast("string") for j in range(r)]))
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band", "bh")
-    ).withColumn("_bucket_n", F.count("*").over(W.partitionBy("band", "bh")))
-    if max_band_bucket:
-        banded = banded.filter(F.col("_bucket_n") <= max_band_bucket)
-    banded = banded.filter(F.col("_bucket_n") >= 2)
+    banded = _banded(sig, bands, r, max_band_bucket)
     delta_ids = delta.select(F.col(id_col).alias("doc_id")).distinct()
     banded_delta = banded.join(delta_ids, "doc_id", "left_semi")
     probe = banded_delta.select(

@@ -21,7 +21,6 @@ scoring loop.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -32,15 +31,12 @@ __all__ = [
     "ivf_search",
     "hash_seed_centroids",
     "cosine_pairs_lsh",
-    "assign_cells_pandas",
-    "sketch_bits_pandas",
     "diversity_cap",
     "pq_codebooks",
     "pq_codebooks_trained",
     "pq_encode",
     "pq_adc_topk",
     "ivf_pq_topk",
-    "ivf_pq_index_pandas",
     "write_ann_index",
     "search_ann_index",
     "quantize_int8",
@@ -121,7 +117,8 @@ def _unit_rows(centroids: list[tuple[int, list[float]]]) -> list[list[float]]:
     normalization, identical floats everywhere)."""
     mat = []
     for cell, cv in sorted(centroids):
-        assert cell == len(mat), "centroid cell ids must be dense 0..nlist-1"
+        if cell != len(mat):
+            raise ValueError("centroid cell ids must be dense 0..nlist-1")
         n = sum(x * x for x in cv) ** 0.5 or 1.0
         mat.append([float(x) / n for x in cv])
     return mat
@@ -162,12 +159,9 @@ def _pq_index(
     books: list[list[list[float]]],
     vec_col: str,
     id_col: str,
-    impl: str,
 ) -> DataFrame:
-    """(id, cell, codes) index build — HOF projections (oracle path) or
-    the bit-identical BLAS twin."""
-    if impl == "pandas":
-        return ivf_pq_index_pandas(corpus, centroids, books, vec_col, id_col)
+    """(id, cell, codes) index build: the PQ encode and the cell argmax,
+    both narrow projections (the oracle-checked path)."""
     enc = pq_encode(corpus, books, vec_col, id_col)
     return _assign_cells(enc, centroids, vec_col, id_col).select(
         id_col, "cell", *[f"code_{j}" for j in range(len(books))]
@@ -235,7 +229,7 @@ def _assign_cells(
     constant across cells and |ĉ|=1, so the argmax equals the cosine argmax
     with one fused multiply-add fold per cell. The argmax itself is
     array_position(sims, array_max(sims)) — first occurrence, so ties break
-    to the lowest cell id (matching np.argmax in the pandas twin). The
+    to the lowest cell id (matching np.argmax in _centroids' Lloyd). The
     double-cast of the vector binds ONCE via a scratch column — folds are
     interpreted, so repeating the cast per cell would multiply the scan
     cost nlist×."""
@@ -250,38 +244,6 @@ def _assign_cells(
     )
 
 
-def assign_cells_pandas(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Arrow-batched twin of ``_assign_cells``: one numpy matmul
-    (batch × dim) @ (dim × nlist) per Arrow batch, argmax along cells.
-
-    This is the CLUSTER path. Catalyst evaluates array folds interpreted
-    (they never enter whole-stage codegen), so the HOF argmax costs
-    nlist × dim interpreted ops per row; the BLAS matmul does the same
-    arithmetic ~2× faster warm on local[32] and scales with batch size.
-    It pays a one-time Python-worker spin-up (~2 s), which a long-running
-    executor amortizes to nothing — hence default HOF for one-shot local
-    runs, this for cluster jobs. Same tie-break (lowest cell id wins:
-    np.argmax takes the first maximum; the HOF max takes the highest
-    -cell). Equivalence is pinned by tests/test_similarity.py."""
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.array([cv for _, cv in sorted(centroids)], dtype="float64")
-    mat = (mat / np.linalg.norm(mat, axis=1, keepdims=True)).T  # dim × nlist
-    cells = np.array([cell for cell, _ in sorted(centroids)])
-
-    @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        batch = np.vstack(v.to_numpy()).astype("float64")
-        return pd.Series(cells[np.argmax(batch @ mat, axis=1)])
-
-    return df.withColumn("cell", _assign(F.col(vec_col)))
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -292,18 +254,13 @@ def ivf_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     dim: int = 64,
-    assign_impl: str = "hof",
 ) -> DataFrame:
     """IVF ANN: search only the nprobe nearest cells per query.
 
     At scale the assignment is precomputed and the corpus is stored
     partitioned by cell; here assignment runs inline as a narrow argmax
     projection (no join, no row explosion — see _assign_cells). Recall vs
-    the exact scan is tested in tests/test_similarity.py.
-
-    ``assign_impl``: 'hof' (default — built-in array folds, no Python
-    worker) or 'pandas' (Arrow-batched numpy matmul; faster warm, pays a
-    one-time worker spin-up — the cluster choice; see assign_cells_pandas)."""
+    the exact scan is tested in tests/test_similarity.py."""
     cents = _centroids(corpus, vec_col, id_col, nlist, dim)
     return ivf_search(
         corpus,
@@ -314,7 +271,6 @@ def ivf_topk(
         vec_col=vec_col,
         id_col=id_col,
         query_id_col=query_id_col,
-        assign_impl=assign_impl,
     )
 
 
@@ -355,15 +311,12 @@ def ivf_search(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    assign_impl: str = "hof",
 ) -> DataFrame:
     """IVF search against a FIXED centroid list: assignment + probe
     selection + in-cell scoring + per-query top-k. Split out of ivf_topk
     so the search machinery runs under both trained (q27) and
     hash-seeded oracle-checkable (q56) centroids."""
-    assign = assign_cells_pandas if assign_impl == "pandas" else _assign_cells
-    cents = centroids
-    assigned = assign(corpus, cents, vec_col, id_col).withColumn(
+    assigned = _assign_cells(corpus, centroids, vec_col, id_col).withColumn(
         "_vd", _as_double(vec_col)
     ).withColumn("_vn", _norm(F.col("_vd")))
 
@@ -373,7 +326,7 @@ def ivf_search(
     # cosine.)
     qv = _as_double(vec_col)
     qscored = F.transform(
-        _unit_mat(cents),
+        _unit_mat(centroids),
         lambda cv, i: F.struct(
             _dot(F.col("_qv"), cv).alias("sim"),
             i.alias("cell"),
@@ -399,43 +352,6 @@ def ivf_search(
     )
 
 
-def sketch_bits_pandas(
-    corpus: DataFrame,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Vectorized hyperplane sign-sketch: (id, _v, _bits, _n) via one
-    numpy matmul per Arrow batch — V(batch×dim) @ P.T(dim×planes) — instead
-    of n_planes interpreted aggregate-folds per row. Same output contract
-    as the HOF sketch inside cosine_pairs_lsh, so the banding/verify
-    machinery downstream is shared. Sign decisions can differ from the
-    sequential fold only when a dot product sits within float rounding of
-    zero (measure-zero for random normals; bit-equivalence on the fixtures
-    is pinned in tests/test_similarity.py)."""
-    P = np.asarray(planes, dtype=np.float64)
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(
-                pdf[vec_col].map(lambda x: np.asarray(x, dtype=np.float64)).values
-            )
-            B = (V @ P.T > 0).astype("int32")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "_v": list(map(list, V)),
-                    "_bits": list(map(list, B)),
-                    "_n": np.sqrt((V * V).sum(axis=1)),
-                }
-            )
-
-    schema = f"{id_col} long, _v array<double>, _bits array<int>, _n double"
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
 def cosine_pairs_lsh(
     corpus: DataFrame,
     threshold: float = 0.9,
@@ -446,7 +362,6 @@ def cosine_pairs_lsh(
     dim: int = 64,
     max_band_bucket: int | None = 1000,
     verify: bool = True,
-    sketch_impl: str = "hof",
 ) -> DataFrame:
     """Near-duplicate vector pairs via random-hyperplane LSH.
 
@@ -475,29 +390,22 @@ def cosine_pairs_lsh(
     rng = np.random.RandomState(_SEED)
     planes = rng.randn(n_planes, dim).tolist()
     r = n_planes // bands
-    if sketch_impl == "pandas":
-        # Arrow/numpy twin (same pattern as assign_cells_pandas): one
-        # BLAS matmul per batch replaces n_planes interpreted folds per
-        # row — the throughput path for cluster sketch jobs; bit-
-        # equivalence to the HOF path is pinned in tests.
-        sketched = sketch_bits_pandas(corpus, planes, vec_col, id_col)
-    else:
-        # ONE literal plane matrix + one transform — the _unit_mat lesson:
-        # n_planes x dim nested F.lit calls hand Catalyst a thousand-node
-        # expression tree whose analysis alone costs seconds per query; a
-        # single Literal node costs nothing.
-        planes_lit = F.lit(planes)
-        bits = F.transform(
-            planes_lit,
-            lambda p: F.when(_dot(F.col("_v"), p) > 0, F.lit(1)).otherwise(F.lit(0)),
-        )
-        # Norm computed once per vector at sketch time — a vector re-appears
-        # in every candidate pair it joins, and the norm fold is interpreted.
-        sketched = (
-            corpus.select(F.col(id_col), _as_double(vec_col).alias("_v"))
-            .withColumn("_bits", bits)
-            .withColumn("_n", _norm(F.col("_v")))
-        )
+    # ONE literal plane matrix + one transform — the _unit_mat lesson:
+    # n_planes x dim nested F.lit calls hand Catalyst a thousand-node
+    # expression tree whose analysis alone costs seconds per query; a
+    # single Literal node costs nothing.
+    planes_lit = F.lit(planes)
+    bits = F.transform(
+        planes_lit,
+        lambda p: F.when(_dot(F.col("_v"), p) > 0, F.lit(1)).otherwise(F.lit(0)),
+    )
+    # Norm computed once per vector at sketch time — a vector re-appears
+    # in every candidate pair it joins, and the norm fold is interpreted.
+    sketched = (
+        corpus.select(F.col(id_col), _as_double(vec_col).alias("_v"))
+        .withColumn("_bits", bits)
+        .withColumn("_n", _norm(F.col("_v")))
+    )
     band_arr = F.array(
         *[
             F.concat_ws("", *[F.col("_bits")[b * r + j].cast("string") for j in range(r)])
@@ -725,7 +633,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    index_impl: str = "hof",
 ) -> DataFrame:
     """IVF-PQ: the production ANN composition (FAISS IVFx,PQy) — IVF cell
     pruning bounds WHICH rows are scored (nprobe/nlist of the corpus via
@@ -735,15 +642,10 @@ def ivf_pq_topk(
     per-query top-k prunes map-side. Under hash-seeded centroids and
     codebooks the ENTIRE composition replays in SQL (plans/llm/ann.py q100).
 
-    ``index_impl='pandas'`` builds the index via the bit-identical BLAS
-    twin (`ivf_pq_index_pandas`, ~2× warm at sf0.1) — the CLUSTER path
-    when the index is built in-query; the HOF default keeps the whole
-    plan in Catalyst expressions for the oracle.
-
     At 100 TB the encoded+assigned table is the STORED index: (id, cell,
     codes) written partitioned by cell — a query touches nprobe
     partitions of a table ~64× narrower than the corpus."""
-    assigned = _pq_index(corpus, centroids, books, vec_col, id_col, index_impl)
+    assigned = _pq_index(corpus, centroids, books, vec_col, id_col)
 
     # nprobe closest cells per query — identical selection (and tie-break:
     # sim DESC, cell DESC) to ivf_search, so q56's oracle argument carries.
@@ -765,59 +667,6 @@ def ivf_pq_topk(
     return _adc_ranked(joined, books, k, id_col, query_id_col)
 
 
-def ivf_pq_index_pandas(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    books: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow/numpy twin of the (assign + encode) index build: per Arrow
-    batch, ONE matmul against unit centroids (cell argmax) and one
-    distance matrix per subspace (code argmin) — the BLAS path for
-    building the stored (id, cell, codes) index at cluster scale, where
-    the interpreted HOF folds (nlist + n_sub·n_codes dots per row)
-    dominate the scan. Bit-identical to the HOF pair by the same
-    argument as assign_cells_pandas (ties: first argmax/argmin = lowest
-    cell/code); equivalence is pytest-pinned."""
-    n_sub = len(books)
-    d = len(books[0][0])
-    U = []
-    for cell, cv in sorted(centroids):
-        n = sum(x * x for x in cv) ** 0.5 or 1.0
-        U.append([float(x) / n for x in cv])
-    U = np.asarray(U, dtype="float64")
-    B = [np.asarray(b, dtype="float64") for b in books]
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(
-                pdf[vec_col].map(lambda x: np.asarray(x, dtype=np.float64)).values
-            )
-            out = {id_col: pdf[id_col].values,
-                   "cell": (V @ U.T).argmax(axis=1).astype("int32")}
-            for j in range(n_sub):
-                S = V[:, j * d : (j + 1) * d]
-                # argmin ||s-c||^2 == argmax (s.c - |c|^2/2): same matmul
-                # trick, same tie-break (first max) as the HOF fold.
-                scores = S @ B[j].T - 0.5 * (B[j] * B[j]).sum(axis=1)
-                out[f"code_{j}"] = scores.argmax(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    # Derive the id field from the input schema — hardcoding `long` would
-    # silently miscast any other id type (the quota_sample ADVICE lesson).
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    schema = StructType(
-        [id_field, StructField("cell", IntegerType())]
-        + [StructField(f"code_{j}", IntegerType()) for j in range(n_sub)]
-    )
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
 def write_ann_index(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -825,14 +674,13 @@ def write_ann_index(
     path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    index_impl: str = "hof",
 ) -> None:
     """Materialize the IVF-PQ index as a parquet table PARTITIONED BY
     cell — the one-time build every docstring's "at scale the index is
     stored" claim refers to. Each row is (id, codes) inside its cell
     directory: ~64× narrower than raw vectors, and physically laid out so
     a query's nprobe cells are whole partitions."""
-    idx = _pq_index(corpus, centroids, books, vec_col, id_col, index_impl)
+    idx = _pq_index(corpus, centroids, books, vec_col, id_col)
     idx.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 

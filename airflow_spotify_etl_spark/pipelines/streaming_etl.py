@@ -69,16 +69,16 @@ def run_recently_played_stream(
     )
     q.awaitTermination()
 
-    try:
-        sunk = spark.read.parquet(sink_path)
-    except Exception:  # empty first drain: sink dir not created yet (F1)
-        return {"rows_in_sink": 0, "sink_path": sink_path, "status": "no_data"}
-    row = sunk.agg(
+    # The drain commits a batch (and a part file) even when the source is
+    # empty, so the sink always exists here; an unreadable sink raises.
+    row = spark.read.parquet(sink_path).agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("artist_name").alias("unique_artists"),
         F.min("timestamp").alias("min_date"),
         F.max("timestamp").alias("max_date"),
     ).collect()[0]
+    if row["n_rows"] == 0:
+        return {"rows_in_sink": 0, "sink_path": sink_path, "status": "no_data"}
     return {
         "rows_in_sink": row["n_rows"],
         "unique_artists": row["unique_artists"],

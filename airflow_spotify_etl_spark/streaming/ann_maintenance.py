@@ -49,7 +49,6 @@ def _apply_index_batch(
     batch_id: int,
     vec_col: str,
     id_col: str,
-    index_impl: str,
 ) -> None:
     """One micro-batch: collapse within-batch duplicate ids
     (deterministically — lowest content hash wins, not partition
@@ -68,7 +67,7 @@ def _apply_index_batch(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    enc = _pq_index(firsts, centroids, books, vec_col, id_col, index_impl)
+    enc = _pq_index(firsts, centroids, books, vec_col, id_col)
     enc.write.mode("overwrite").partitionBy("cell").parquet(
         f"{index_path}/batch={batch_id}"
     )
@@ -83,14 +82,12 @@ def run_ann_index_maintenance(
     checkpoint: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    index_impl: str = "hof",
 ) -> None:
     """Drain ``stream`` (availableNow) through `_apply_index_batch`."""
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         _apply_index_batch(
-            bdf, index_path, centroids, books, batch_id,
-            vec_col, id_col, index_impl,
+            bdf, index_path, centroids, books, batch_id, vec_col, id_col
         )
 
     q = (

@@ -25,7 +25,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["running_user_totals", "running_user_totals_tws", "tws_available"]
+__all__ = ["running_user_totals"]
 
 _OUT_SCHEMA = (
     "user_id long, n_events long, total_value double, last_seen_us long"
@@ -65,76 +65,4 @@ def running_user_totals(stream: DataFrame, key_col: str = "user_id") -> DataFram
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """transformWithState's Python state protocol needs the protobuf
-    package; absent it, the TWS driver worker crashes at init. Probe once
-    so callers (and the test suite) can fall back to
-    ``running_user_totals`` cleanly."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Same lifetime-totals semantics on the Spark 4 ``transformWithState``
-    API (the applyInPandasWithState successor): typed state variables via a
-    StatefulProcessor handle instead of one opaque tuple. What the new API
-    buys at scale: multiple independent state variables per key (value /
-    list / map state), native state TTL (swap the ttl argument below —
-    no hand-rolled timeout plumbing), timers, and state-schema evolution —
-    the machinery a long-running 100 TB keyed aggregation actually needs
-    when key cardinality grows unboundedly. Kept alongside the legacy
-    operator so both APIs stay covered by the same cross-batch test.
-
-    Requires the RocksDB state store provider AND the protobuf package
-    (``tws_available``); raises ImportError up front otherwise rather than
-    crashing the streaming query's driver worker mid-run."""
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas needs the google.protobuf package; "
-            "use running_user_totals (applyInPandasWithState) instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator:
-            n, total, last_us = (
-                self._totals.get() if self._totals.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-                batch_max = pdf["ts"].max()
-                if pd.notna(batch_max):
-                    last_us = max(last_us, int(batch_max.value // 1000))
-            self._totals.update((n, total, last_us))
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": key[0],
-                        "n_events": n,
-                        "total_value": round(total, 2),
-                        "last_seen_us": last_us,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_TotalsProcessor(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -127,7 +127,6 @@ _SLOW_TESTS = {
     "test_r9_suite.py::test_q377_reversed_rankings",
     "test_similarity.py::test_embedding_drift_identical_and_shifted_snapshots",
     "test_similarity.py::test_ivf_pq_probe_all_equals_plain_adc",
-    "test_similarity.py::test_pandas_sketch_twin_matches_hof_bits",
     "test_similarity.py::test_pq_adc_is_reconstruction_dot_and_beats_chance",
     "test_similarity.py::test_semantic_dedup_drops_planted_duplicate",
     "test_similarity.py::test_stored_ann_index_prunes_partitions_and_matches_inmemory",

@@ -86,6 +86,31 @@ def test_native_streaming_pipeline_end_to_end(spark, tmp_path):
     assert s2["date_range"] == "2024-01-01 to 2024-01-01"
 
 
+def test_native_stream_reports_no_data_and_raises_on_corrupt_sink(spark, tmp_path):
+    """An empty drain commits an empty part file, so the sink exists but
+    holds 0 rows: the summary says ``no_data``, not ``success``. A sink
+    whose part files are unreadable raises instead of reporting empty."""
+    from pathlib import Path
+
+    from airflow_spotify_etl_spark.pipelines import run_recently_played_stream
+
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    empty = json.dumps({"items": []})
+    s0 = run_recently_played_stream(
+        spark, sink, ckpt, source_options={"payload_json": empty}
+    )
+    assert s0["status"] == "no_data" and s0["rows_in_sink"] == 0
+
+    parts = list(Path(sink).glob("part-*"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_recently_played_stream(
+            spark, sink, ckpt, source_options={"payload_json": empty}
+        )
+
+
 def test_stream_offsets_resume_without_reemit(spark, tmp_path):
     """The native streaming cursor: batch 1 emits 3 rows; a restart with 2
     NEW rows in the payload emits only those 2 (checkpointed offset, ST2)."""

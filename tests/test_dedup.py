@@ -476,25 +476,6 @@ def test_winnowing_short_docs_zero(spark):
     )
 
 
-def test_winnowing_impls_equivalent(spark):
-    """'local' (array-HOF, zero-shuffle) and 'window' (codegen + exchange)
-    winnowing must select identical (doc_id, wi, wh) rows."""
-    from airflow_spotify_etl_spark.operators.dedup import winnowed_fingerprints
-
-    rows = [
-        (1, " ".join(f"w{i % 7}x{i % 11}" for i in range(60))),
-        (2, " ".join(f"w{i % 7}x{i % 11}" for i in range(25, 80))),
-        (3, "alpha beta " * 20),
-        (4, "short doc"),
-        (5, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = winnowed_fingerprints(docs, 8, 4, impl="local")
-    b = winnowed_fingerprints(docs, 8, 4, impl="window")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.count() > 0
-
-
 def test_span_excise_removes_second_occurrence_any_alignment(spark):
     """Doc 2 repeats doc 1's 10-token span at a different alignment: the
     span is excised from doc 2 (the later occurrence) and doc 1 keeps its

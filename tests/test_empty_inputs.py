@@ -186,7 +186,6 @@ def test_round5_text_ops_on_empty_corpus(spark):
     docs = _empty_docs(spark)
     assert span_dup_profile(docs).count() == 0
     assert winnowed_fingerprints(docs).count() == 0
-    assert winnowed_fingerprints(docs, impl="local").count() == 0
     assert winnowed_dup_profile(docs).count() == 0
     assert hashed_linear_score(docs).count() == 0
 

@@ -97,24 +97,6 @@ def test_lsh_pairs_finds_planted_duplicates(spark):
     assert (0, 100) in got
 
 
-def test_pandas_assignment_matches_hof(spark, emb):
-    # The Arrow/numpy assignment twin must agree with the built-in argmax
-    # projection cell-for-cell (same unit centroids, same tie-break).
-    from airflow_spotify_etl_spark.operators.similarity import (
-        _assign_cells,
-        _centroids,
-        assign_cells_pandas,
-    )
-
-    cents = _centroids(emb, "embedding", "vec_id", nlist=8, dim=64)
-    hof = _assign_cells(emb, cents, "embedding", "vec_id").select("vec_id", "cell")
-    pnd = assign_cells_pandas(emb, cents, "embedding", "vec_id").select(
-        "vec_id", F.col("cell").alias("pcell")
-    )
-    diff = hof.join(pnd, "vec_id").filter(F.col("cell") != F.col("pcell")).count()
-    assert diff == 0
-
-
 def test_ivf_clamps_nlist_to_corpus_size(spark):
     """nlist > corpus size degrades gracefully (ADVICE r2): fewer cells,
     correct top-k — and an empty corpus raises a clear error."""
@@ -149,53 +131,6 @@ def test_semantic_dedup_drops_planted_duplicate(spark):
         for r in comp.filter("doc_id != component").collect()
     }
     assert dropped == {1: 0}
-
-
-def test_pandas_sketch_twin_matches_hof_bits(spark, sf_dir):
-    """sketch_bits_pandas must produce the SAME sign bits (and therefore
-    the same candidate pairs) as the higher-order-function sketch — the
-    assign_cells_pandas equivalence argument applied to the LSH tier."""
-    import numpy as np
-
-    from airflow_spotify_etl_spark.operators.similarity import (
-        _SEED,
-        cosine_pairs_lsh,
-        sketch_bits_pandas,
-    )
-    from airflow_spotify_etl_spark.sources.files import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = np.random.RandomState(_SEED).randn(16, 64).tolist()
-    got = {
-        r.vec_id: list(r._bits)
-        for r in sketch_bits_pandas(emb, planes).collect()
-    }
-
-    from pyspark.sql import functions as F
-
-    from airflow_spotify_etl_spark.operators.similarity import (
-        _as_double,
-        _dot,
-    )
-
-    bits = F.transform(
-        F.lit(planes),
-        lambda p: F.when(_dot(F.col("_v"), p) > 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-    want = {
-        r.vec_id: list(r._bits)
-        for r in emb.select("vec_id", _as_double("embedding").alias("_v"))
-        .withColumn("_bits", bits)
-        .collect()
-    }
-    assert got == want
-
-    hof = {(r.vec_a, r.vec_b) for r in cosine_pairs_lsh(emb, threshold=0.45).collect()}
-    pnd = {
-        (r.vec_a, r.vec_b)
-        for r in cosine_pairs_lsh(emb, threshold=0.45, sketch_impl="pandas").collect()
-    }
-    assert hof == pnd
 
 
 def test_diversity_cap_caps_and_orders_each_cell(spark, emb):
@@ -344,30 +279,6 @@ def test_ivf_pq_probe_all_equals_plain_adc(spark, emb):
         assert r.vec_id in cells  # every hit is a real corpus row
 
 
-def test_ivf_pq_pandas_index_matches_hof(spark, emb):
-    """The BLAS index build must agree with the HOF assignment+encoding
-    row-for-row (cells AND all subspace codes) — the
-    assign_cells_pandas equivalence argument extended to PQ."""
-    from airflow_spotify_etl_spark.operators.similarity import (
-        _assign_cells,
-        ivf_pq_index_pandas,
-        pq_codebooks,
-        pq_encode,
-    )
-
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    cents = hash_seed_centroids(corpus, nlist=8)
-    books = pq_codebooks(corpus, n_sub=4, n_codes=16)
-
-    hof = _assign_cells(
-        pq_encode(corpus, books), cents, "embedding", "vec_id"
-    ).select("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-    pnd = ivf_pq_index_pandas(corpus, cents, books)
-    a = {tuple(r) for r in hof.collect()}
-    b = {tuple(r) for r in pnd.collect()}
-    assert a == b
-
-
 def test_stored_ann_index_prunes_partitions_and_matches_inmemory(spark, emb, tmp_path):
     """The stored index must be cell-partitioned, the search must read
     ONLY the probed cells (PartitionFilters on the parquet scan — the
@@ -402,13 +313,13 @@ def test_stored_ann_index_prunes_partitions_and_matches_inmemory(spark, emb, tmp
     assert m and len(m.group(1).split(",")) < 8, plan[:1500]
 
 
-def test_ann_index_and_pandas_encode_respect_string_ids(spark):
-    """String ids flow through the BLAS index build and the stored-index
-    search unchanged — the derived-schema contract (no hardcoded long)."""
+def test_ann_index_build_and_search_respect_string_ids(spark, tmp_path):
+    """String ids flow through the stored index build and its search
+    unchanged: the id field keeps the input's type (no hardcoded long)."""
     from airflow_spotify_etl_spark.operators.similarity import (
-        hash_seed_centroids,
-        ivf_pq_index_pandas,
         pq_codebooks,
+        search_ann_index,
+        write_ann_index,
     )
 
     corpus = spark.createDataFrame(
@@ -417,10 +328,33 @@ def test_ann_index_and_pandas_encode_respect_string_ids(spark):
     )
     cents = hash_seed_centroids(corpus, nlist=4)
     books = pq_codebooks(corpus, n_sub=2, n_codes=4)
-    idx = ivf_pq_index_pandas(corpus, cents, books)
+    path = str(tmp_path / "ann_index")
+    write_ann_index(corpus, cents, books, path)
+    idx = spark.read.parquet(path)
     assert dict(idx.dtypes)["vec_id"] == "string"
-    rows = idx.collect()
-    assert {r.vec_id for r in rows} == {f"doc-{i}" for i in range(12)}
+    assert {r.vec_id for r in idx.collect()} == {f"doc-{i}" for i in range(12)}
+
+    q = corpus.filter(F.col("vec_id") == "doc-3").select(
+        F.lit(0).alias("query_id"), "embedding"
+    )
+    got = search_ann_index(spark, path, q, cents, books, k=3, nprobe=4)
+    assert dict(got.dtypes)["vec_id"] == "string"
+    hits = got.collect()
+    assert len(hits) == 3 and {r.vec_id for r in hits} <= {f"doc-{i}" for i in range(12)}
+
+
+def test_ivf_search_rejects_sparse_centroid_ids(spark):
+    """Centroid cell ids must be dense 0..nlist-1 (the cell id is the
+    position in the literal centroid matrix); a gap raises ValueError,
+    which survives ``python -O``."""
+    corpus = spark.createDataFrame(
+        [(i, [float(i + 1), 0.0]) for i in range(3)],
+        "vec_id long, embedding array<double>",
+    )
+    q = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+    cents = [(0, [1.0, 0.0]), (2, [0.0, 1.0])]
+    with pytest.raises(ValueError, match="dense"):
+        ivf_search(corpus, q, cents, k=1, nprobe=1)
 
 
 def test_quantize_int8_error_bounds(spark, sf_dir):

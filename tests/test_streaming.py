@@ -270,68 +270,6 @@ def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
     assert r2.last_seen_us == int(_ts(2).timestamp() * 1_000_000)
 
 
-def test_tws_running_totals_accumulate_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): same lifetime
-    totals, typed ValueState, state carried across availableNow drains.
-    Skipped where the protobuf package (TWS's state protocol dependency)
-    isn't installed — the operator itself then raises a clear ImportError,
-    which is asserted instead."""
-    from airflow_spotify_etl_spark.streaming.stateful import (
-        running_user_totals_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        stream = spark.readStream.schema(SCHEMA).parquet(str(tmp_path))
-        with pytest.raises(ImportError, match="protobuf"):
-            running_user_totals_tws(stream)
-        pytest.skip("google.protobuf not installed: TWS runtime unavailable")
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "totals")
-    _write_batch(spark, src, _rows((1, 0, 1, "a", 10.0), (2, 1, 1, "a", 5.0)))
-
-    # transformWithState requires the RocksDB state store provider.
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def drain():
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.foreachBatch(
-                lambda bdf, bid: bdf.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    try:
-        out1 = drain()
-        r1 = out1.filter(F.col("user_id") == 1).orderBy("n_events").collect()[-1]
-        assert (r1.n_events, r1.total_value) == (2, 15.0)
-
-        _write_batch(spark, src, _rows((3, 2, 1, "a", 2.5)))
-        out2 = drain()
-        r2 = out2.filter(F.col("user_id") == 1).orderBy("n_events").collect()[-1]
-        assert (r2.n_events, r2.total_value) == (3, 17.5)
-        assert r2.last_seen_us == int(_ts(2).timestamp() * 1_000_000)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def test_empty_fetch_is_clean_noop(spark, tmp_path):
     def fetch(after_us):
         return spark.createDataFrame([], SCHEMA)
@@ -774,10 +712,10 @@ def test_ann_index_maintenance_retry_is_idempotent(spark, tmp_path):
     idx = str(tmp_path / "ann_store")
 
     dup = corpus.limit(10).unionByName(corpus.limit(3))  # in-batch dup ids
-    _apply_index_batch(dup, idx, cents, books, 0, "embedding", "vec_id", "hof")
+    _apply_index_batch(dup, idx, cents, books, 0, "embedding", "vec_id")
     first = sorted(tuple(r) for r in spark.read.parquet(idx).collect())
     assert len(first) == 10  # dups collapsed
-    _apply_index_batch(dup, idx, cents, books, 0, "embedding", "vec_id", "hof")
+    _apply_index_batch(dup, idx, cents, books, 0, "embedding", "vec_id")
     again = sorted(tuple(r) for r in spark.read.parquet(idx).collect())
     assert again == first
 
