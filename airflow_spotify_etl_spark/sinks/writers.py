@@ -176,6 +176,48 @@ def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
             spark.conf.set(key, prev)
 
 
+def _recover_swap(path: str) -> None:
+    """Finish or clear a ``_swap_replace`` that a crash interrupted: a
+    leftover ``._swap_bak`` beside ``path`` is the committed copy when
+    ``path`` is missing (the swap died between its renames) and stale
+    when ``path`` exists (it died before deleting the backup)."""
+    import shutil
+    from pathlib import Path
+
+    p, bak = Path(path), Path(path.rstrip("/") + "._swap_bak")
+    if bak.exists():
+        if p.exists():
+            shutil.rmtree(bak)
+        else:
+            bak.rename(p)
+
+
+def _swap_replace(path: str, stage):
+    """Replace the directory at ``path`` with what ``stage(tmp)`` writes
+    to a sibling temp dir, and return what ``stage`` returns. The swap is
+    rename-first: original → ``._swap_bak``, staged → path, then delete
+    the backup. At every crash point a complete copy exists on disk
+    (before the first rename: the original in place; between renames:
+    the backup; after: the new table), unlike a delete-then-rename swap
+    whose kill window strands the only copy at the temp name, or an
+    in-place overwrite that leaves partial part files. A leftover backup
+    from an earlier crash is recovered first; if ``stage`` raises, the
+    original is untouched."""
+    import shutil
+    from pathlib import Path
+
+    _recover_swap(path)
+    tmp = path.rstrip("/") + "._swap_tmp"
+    out = stage(tmp)
+    p, bak = Path(path), Path(path.rstrip("/") + "._swap_bak")
+    if p.exists():
+        p.rename(bak)
+    Path(tmp).rename(p)
+    if bak.exists():
+        shutil.rmtree(bak)
+    return out
+
+
 def compact_table(
     spark,
     path: str,
@@ -188,47 +230,32 @@ def compact_table(
     shuffle into few outputs). Streaming appends and per-batch writes
     accrete small files whose open/footer overhead eventually dominates
     scans; periodic compaction is standard table maintenance. Returns the
-    row count (sanity: unchanged by compaction). The rewrite stages to a
-    sibling temp dir and swaps rename-first: original → .bak, staged →
-    path, then delete .bak — at EVERY crash point a complete copy of the
-    data exists on disk (before the first rename: original in place;
-    between renames: .bak; after: the compacted table), unlike a
-    delete-then-rename swap whose kill window strands the only copy at
-    the temp name. A leftover .bak from a previous crash is recovered or
-    cleared before staging."""
-    import shutil
-    from pathlib import Path
+    row count (sanity: unchanged by compaction). The rewrite goes through
+    ``_swap_replace``, and a staged copy whose row count differs from
+    the original's aborts the swap."""
 
-    bak = Path(path.rstrip("/") + "._compact_bak")
-    p = Path(path)
-    if bak.exists():
-        if p.exists():
-            shutil.rmtree(bak)  # prior swap completed; stale backup
+    def stage(tmp: str) -> int:
+        df = spark.read.parquet(path)
+        n = df.count()
+        n_files = max(1, -(-n // target_rows_per_file))
+        if partition_col:
+            (
+                df.repartition(n_files, partition_col)
+                .write.mode("overwrite")
+                .partitionBy(partition_col)
+                .parquet(tmp)
+            )
         else:
-            bak.rename(p)  # prior swap died between renames; recover
-    df = spark.read.parquet(path)
-    n = df.count()
-    n_files = max(1, -(-n // target_rows_per_file))
-    tmp = path.rstrip("/") + "._compact_tmp"
-    if partition_col:
-        (
-            df.repartition(n_files, partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
-        )
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    after = spark.read.parquet(tmp).count()
-    if after != n:
-        raise RuntimeError(
-            f"compact_table: row count changed {n} -> {after}; "
-            f"aborting swap, original table untouched at {path}"
-        )
-    p.rename(bak)
-    Path(tmp).rename(p)
-    shutil.rmtree(bak)
-    return n
+            df.repartition(n_files).write.mode("overwrite").parquet(tmp)
+        after = spark.read.parquet(tmp).count()
+        if after != n:
+            raise RuntimeError(
+                f"compact_table: row count changed {n} -> {after}; "
+                f"aborting swap, original table untouched at {path}"
+            )
+        return n
+
+    return _swap_replace(path, stage)
 
 
 # "Table/relation does not exist" message fragments for the common JDBC

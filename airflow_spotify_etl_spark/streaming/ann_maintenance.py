@@ -10,9 +10,9 @@ ingests:
 - each batch encodes ONLY its own vectors (centroids and codebooks are
   frozen broadcast literals — re-training is a scheduled offline job,
   exactly like FAISS index maintenance) and writes them under its own
-  ``batch=<id>/cell=<c>/`` partitions. foreachBatch is at-least-once,
-  so a retry re-encodes the identical batch and overwrites the same
-  directories — never appends duplicates (the novelty-store contract);
+  ``batch=<id>/cell=<c>/`` partitions (``streaming/drain.write_partial``:
+  a foreachBatch retry re-encodes the identical batch and overwrites
+  the same directories — never appends duplicates);
 - both ``batch`` and ``cell`` are partition columns, so a search's
   nprobe cells remain PARTITION FILTERS on the read — the store grows
   by batch but a query still touches nprobe/nlist of each batch dir;
@@ -20,8 +20,8 @@ ingests:
   in the store (append-shaped writes can't touch other batches'
   partitions), and ``latest_index_view`` / ``compact_ann_index``
   collapse to the highest batch per id — read-time for freshness,
-  rewrite-time (rename-first atomic swap, the compact_table crash
-  contract) to keep search scans one-row-per-id.
+  rewrite-time (the crash-safe rename-first swap,
+  ``sinks.writers._swap_replace``) to keep search scans one-row-per-id.
 
 At 100 TB: batches are minutes of ingest, compaction is a daily job,
 and the search path reads the compacted table plus the small tail of
@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from .drain import drain, write_partial
 
 __all__ = [
     "run_ann_index_maintenance",
@@ -55,9 +57,6 @@ def _apply_index_batch(
     order), encode to (id, cell, codes), overwrite this batch's own
     partition tree."""
     from ..operators.similarity import _pq_index
-
-    if bdf.isEmpty():
-        return
     content = F.md5(
         F.concat_ws(",", F.transform(vec_col, lambda x: x.cast("string")))
     )
@@ -68,9 +67,7 @@ def _apply_index_batch(
         .drop("_rn")
     )
     enc = _pq_index(firsts, centroids, books, vec_col, id_col)
-    enc.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{index_path}/batch={batch_id}"
-    )
+    write_partial(enc, index_path, batch_id, "cell")
 
 
 def run_ann_index_maintenance(
@@ -84,20 +81,13 @@ def run_ann_index_maintenance(
     id_col: str = "vec_id",
 ) -> None:
     """Drain ``stream`` (availableNow) through `_apply_index_batch`."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_index_batch(
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_index_batch(
             bdf, index_path, centroids, books, batch_id, vec_col, id_col
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
 
 
 def latest_index_view(
@@ -122,29 +112,17 @@ def compact_ann_index(
 ) -> int:
     """Collapse the maintained store to one (latest) row per id and
     rewrite it as a single ``batch=0`` generation, cell-partitioned —
-    restoring the one-row-per-id scan the search path wants. Stages to
-    a sibling dir and swaps rename-first (original → .bak, staged →
-    path, delete .bak): a complete copy exists at every crash point,
-    and a leftover .bak from a prior crash is recovered or cleared
-    first (the compact_table contract). Returns the compacted row
-    count."""
-    import shutil
-    from pathlib import Path
+    restoring the one-row-per-id scan the search path wants. The rewrite
+    goes through the crash-safe rename-first swap
+    (``sinks.writers._swap_replace``). Returns the compacted row count."""
+    from ..sinks.writers import _swap_replace
 
-    bak = Path(index_path.rstrip("/") + "._compact_bak")
-    p = Path(index_path)
-    if bak.exists():
-        if p.exists():
-            shutil.rmtree(bak)  # prior swap completed; stale backup
-        else:
-            bak.rename(p)  # prior swap died between renames; recover
-    latest = latest_index_view(spark, index_path, id_col)
-    n = latest.count()
-    tmp = index_path.rstrip("/") + "._compact_tmp"
-    latest.withColumn("batch", F.lit(0)).write.mode("overwrite").partitionBy(
-        "batch", "cell"
-    ).parquet(tmp)
-    p.rename(bak)
-    Path(tmp).rename(p)
-    shutil.rmtree(bak)
-    return n
+    def stage(tmp: str) -> int:
+        latest = latest_index_view(spark, index_path, id_col)
+        n = latest.count()
+        latest.withColumn("batch", F.lit(0)).write.mode(
+            "overwrite"
+        ).partitionBy("batch", "cell").parquet(tmp)
+        return n
+
+    return _swap_replace(index_path, stage)

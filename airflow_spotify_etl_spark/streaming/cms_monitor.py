@@ -4,12 +4,12 @@ streaming twin of the oracle-checked q259 batch operator
 (operators/sketches.count_min_sketch).
 
 CMS cells are additive (merge two sketches by summing matching
-(row, bucket) counters), so the store follows the rate-monitor /
-sketch-maintenance layout: each micro-batch writes its OWN depth×width
-partial cells under ``batch=<id>``; a reader sums cells across batches
-into the merged sketch and answers point estimates against it.
-foreachBatch retries overwrite their own partition with identical data
-— never double-count (the novelty-store contract).
+(row, bucket) counters), so the store uses the batch-partial layout of
+``streaming/drain.write_partial``: each micro-batch writes its OWN
+depth×width partial cells under ``batch=<id>``; a reader sums cells
+across batches into the merged sketch and answers point estimates
+against it. foreachBatch retries overwrite their own partition with
+identical data — never double-count.
 
 At 100 TB: per-batch state is <= depth·width cells regardless of batch
 volume (the groupBy combines map-side), the store grows by one bounded
@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_cms_monitor", "read_cms_estimates"]
 
 
@@ -35,11 +37,8 @@ def _apply_cms_batch(
     width: int,
 ) -> None:
     from ..operators.sketches import count_min_sketch
-
-    if bdf.isEmpty():
-        return
     cells = count_min_sketch(bdf, key_col, depth=depth, width=width)
-    cells.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(cells, store_path, batch_id)
 
 
 def run_cms_monitor(
@@ -53,18 +52,13 @@ def run_cms_monitor(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch CMS
     partial cells into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_cms_batch(bdf, store_path, batch_id, key_col, depth, width)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_cms_batch(
+            bdf, store_path, batch_id, key_col, depth, width
+        ),
     )
-    q.awaitTermination()
 
 
 def read_cms_estimates(

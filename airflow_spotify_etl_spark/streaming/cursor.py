@@ -113,8 +113,9 @@ class CursorIncrementalIngest:
         # partitions would re-invoke fetch() (non-deterministic REST source)
         # and the persisted cursor could advance past rows never appended.
         fresh = fresh.localCheckpoint(eager=True)
-        n = fresh.count()
-        new_max = fresh.agg(F.unix_micros(F.max(self.ts_col))).collect()[0][0]
+        n, new_max = fresh.agg(
+            F.count("*"), F.unix_micros(F.max(self.ts_col))
+        ).collect()[0]
         if n:
             fresh.write.mode("append").parquet(self.sink_path)
         advanced = [v for v in (cursor, new_max) if v is not None]

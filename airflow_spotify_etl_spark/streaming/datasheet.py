@@ -4,11 +4,11 @@ card" current as documents arrive, without rescanning the corpus.
 q119's datasheet rolls everything up from the (source, lang, text-hash)
 relation — and THAT relation is mergeable: per-batch partials
 (cnt/chars/toks per key) merge by addition, and the hash keys make the
-distinct-text count exact after the merge. So the store follows the
-novelty/sketch layout — ~40 bytes per distinct document per batch,
-batch-partitioned, retry-safe overwrite of a batch's own partition —
-and the datasheet recompute runs on the merged store, never the raw
-corpus. Cost per refresh: one sum over the store (distinct-doc
+distinct-text count exact after the merge. So the store uses the
+batch-partial layout of ``streaming/drain.write_partial`` — ~40 bytes
+per distinct document per batch, retry-safe overwrite of a batch's own
+partition — and the datasheet recompute runs on the merged store, never
+the raw corpus. Cost per refresh: one sum over the store (distinct-doc
 cardinality) plus the source/lang-sized rollups.
 
 The reader is pinned (pytest) to equal the batch q119 datasheet on the
@@ -21,14 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_datasheet_maintenance", "read_datasheet"]
 
 
 def _apply_datasheet_batch(
     bdf: DataFrame, store_path: str, batch_id: int
 ) -> None:
-    if bdf.isEmpty():
-        return
     partial = bdf.groupBy(
         "source", "lang", F.md5("text").alias("ch")
     ).agg(
@@ -36,7 +36,7 @@ def _apply_datasheet_batch(
         F.sum("n_chars").alias("chars"),
         F.sum(F.size(F.split("text", " "))).alias("toks"),
     )
-    partial.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(partial, store_path, batch_id)
 
 
 def run_datasheet_maintenance(
@@ -47,18 +47,13 @@ def run_datasheet_maintenance(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch
     (source, lang, hash) partials into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_datasheet_batch(bdf, store_path, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_datasheet_batch(
+            bdf, store_path, batch_id
+        ),
     )
-    q.awaitTermination()
 
 
 def read_datasheet(spark: SparkSession, store_path: str) -> DataFrame:

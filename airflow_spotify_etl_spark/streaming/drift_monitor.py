@@ -1,16 +1,15 @@
 """Streaming distribution-drift maintenance: keep per-group value
 histograms current over a stream and answer EXACT pairwise total
 variation distances against them — the streaming twin of the
-oracle-checked q319 batch matrix (operators/incremental.tvd_matrix),
-following the CMS store layout (streaming/cms_monitor.py).
+oracle-checked q319 batch matrix (operators/incremental.tvd_matrix).
 
 Histogram cells are additive (merge two histograms by summing matching
-(group, value) counts), so the store follows the sketch-maintenance
-discipline: each micro-batch writes its OWN bounded partial under
-``batch=<id>``; a reader sums cells across batches into the merged
-histogram and computes the TVD matrix on it. foreachBatch retries
-overwrite their own partition with identical data — never double-count
-(the novelty-store contract).
+(group, value) counts), so the store uses the batch-partial layout of
+``streaming/drain.write_partial``: each micro-batch writes its OWN
+bounded partial under ``batch=<id>``; a reader sums cells across
+batches into the merged histogram and computes the TVD matrix on it.
+foreachBatch retries overwrite their own partition with identical data
+— never double-count.
 
 At 100 TB: per-batch state is ≤ |groups|·|values| cells regardless of
 batch volume (the groupBy combines map-side), the store grows by one
@@ -24,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_histogram_monitor", "read_tvd_matrix"]
 
 
@@ -34,12 +35,10 @@ def _apply_histogram_batch(
     group_col: str,
     value_expr: str,
 ) -> None:
-    if bdf.isEmpty():
-        return
     cells = bdf.groupBy(
         F.col(group_col).alias("grp"), F.expr(value_expr).alias("v")
     ).agg(F.count("*").alias("c"))
-    cells.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(cells, store_path, batch_id)
 
 
 def run_histogram_monitor(
@@ -52,18 +51,13 @@ def run_histogram_monitor(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch histogram
     partials into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_histogram_batch(bdf, store_path, batch_id, group_col, value_expr)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_histogram_batch(
+            bdf, store_path, batch_id, group_col, value_expr
+        ),
     )
-    q.awaitTermination()
 
 
 def read_tvd_matrix(spark: SparkSession, store_path: str) -> DataFrame:

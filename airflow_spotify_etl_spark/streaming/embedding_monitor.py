@@ -6,8 +6,8 @@ source mix changes under it.
 q122's batch operator already designed the state to be MERGEABLE: the
 per-(label, dim) sums are integer-quantized, so partials from any batch
 split merge by plain addition with no float-order hazard, and per-label
-counts add. The store therefore follows the additive-partials layout
-(rate_monitor/datasheet discipline): each micro-batch writes its own
+counts add. The store therefore uses the batch-partial layout of
+``streaming/drain.write_partial``: each micro-batch writes its own
 (label, dim, qsum) + (label, n) partials under ``batch=<id>``,
 retry-overwrites only itself, and a reader folds the store into exactly
 the (label, svec, n) relation the shared ``drift_between`` comparison
@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_centroid_maintenance", "read_centroids", "read_drift"]
 
 
@@ -34,8 +36,6 @@ def _apply_centroid_batch(
     label_col: str,
     scale: int,
 ) -> None:
-    if bdf.isEmpty():
-        return
     from ..operators.similarity import _as_double
 
     q = bdf.select(
@@ -50,8 +50,8 @@ def _apply_centroid_batch(
     n = bdf.groupBy(F.col(label_col).alias("label")).agg(
         F.count("*").alias("n")
     )
-    sums.write.mode("overwrite").parquet(f"{store_path}/sums/batch={batch_id}")
-    n.write.mode("overwrite").parquet(f"{store_path}/counts/batch={batch_id}")
+    write_partial(sums, f"{store_path}/sums", batch_id)
+    write_partial(n, f"{store_path}/counts", batch_id)
 
 
 def run_centroid_maintenance(
@@ -65,20 +65,13 @@ def run_centroid_maintenance(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating quantized centroid
     partials into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_centroid_batch(
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_centroid_batch(
             bdf, store_path, batch_id, vec_col, label_col, scale
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
 
 
 def read_centroids(spark: SparkSession, store_path: str) -> DataFrame:

@@ -1,8 +1,8 @@
 """Streaming HyperLogLog maintenance: keep per-key distinct-cardinality
 registers current over a stream without rescanning history — the
 streaming twin of the oracle-checked q302 batch operator
-(operators/sketches.hll_registers / hll_estimate), following the CMS
-store layout (streaming/cms_monitor.py).
+(operators/sketches.hll_registers / hll_estimate), in the batch-partial
+store layout of ``streaming/drain.write_partial``.
 
 HLL registers merge by register-wise MAX — associative, commutative and
 IDEMPOTENT, which is strictly stronger than the CMS additive contract:
@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_hll_monitor", "read_hll_estimates"]
 
 
@@ -32,11 +34,8 @@ def _apply_hll_batch(
     value_col: str,
 ) -> None:
     from ..operators.sketches import hll_registers
-
-    if bdf.isEmpty():
-        return
     cells = hll_registers(bdf, value_col, key_cols=[key_col])
-    cells.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(cells, store_path, batch_id)
 
 
 def run_hll_monitor(
@@ -49,18 +48,13 @@ def run_hll_monitor(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch HLL
     register partials into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_hll_batch(bdf, store_path, batch_id, key_col, value_col)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_hll_batch(
+            bdf, store_path, batch_id, key_col, value_col
+        ),
     )
-    q.awaitTermination()
 
 
 def read_hll_estimates(

@@ -1,15 +1,14 @@
 """Streaming lateness maintenance: keep the out-of-orderness profile
 of an event stream current across micro-batches — the streaming twin
 of the oracle-checked q362 batch watermark-delay planner, sharing its
-exact core (operators/incremental.lateness_tier_counts) and following
-the sketch-maintenance store layout (streaming/drift_monitor.py).
+exact core (operators/incremental.lateness_tier_counts) and the
+batch-partial store layout of ``streaming/drain.write_partial``.
 
 Cross-batch exactness: lateness depends on everything that arrived
 BEFORE an event, so each batch seeds the shared core with the max
 event time of every EARLIER batch (read from the store, ``batch <
 current id`` only — a foreachBatch RETRY recomputes from the same
-priors and overwrites its own partition with identical rows, the
-novelty-store contract). With micro-batches split along the arrival
+priors and overwrites its own partition with identical rows). With micro-batches split along the arrival
 order (batch order, event_id within a batch — the same arrival proxy
 q362 uses), the merged profile is IDENTICAL to running q362 over the
 union of every drained row (pytest-pinned).
@@ -24,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+from .drain import drain, write_partial
 
 __all__ = [
     "run_lateness_monitor",
@@ -48,29 +49,28 @@ def _prior_max_us(
     return None if row.m is None else int(row.m)
 
 
-def _apply_lateness_batch(
-    spark: SparkSession, bdf: DataFrame, store_path: str, batch_id: int
-) -> None:
-    if bdf.isEmpty():
-        return
-    from ..operators.incremental import lateness_tier_counts
-
-    prev = _prior_max_us(spark, store_path, batch_id)
+def _batch_max_col(bdf: DataFrame):
+    """The batch's max event time as a literal ``batch_max_us`` column —
+    what later batches' ``_prior_max_us`` reads back."""
     bmax = bdf.agg(
         F.expr("max(unix_micros(ts))").alias("m")
     ).collect()[0].m
     # A non-empty batch whose ts values are all NULL has no batch max:
     # store a NULL batch_max_us (prior-max readers already skip NULLs)
     # rather than raising inside foreachBatch and failing the stream.
-    bmax_col = (
-        F.lit(None).cast("long")
-        if bmax is None
-        else F.lit(int(bmax)).cast("long")
-    )
+    return F.lit(None if bmax is None else int(bmax)).cast("long")
+
+
+def _apply_lateness_batch(
+    spark: SparkSession, bdf: DataFrame, store_path: str, batch_id: int
+) -> None:
+    from ..operators.incremental import lateness_tier_counts
+
+    prev = _prior_max_us(spark, store_path, batch_id)
     tiers = lateness_tier_counts(bdf, prev_max_us=prev).withColumn(
-        "batch_max_us", bmax_col
+        "batch_max_us", _batch_max_col(bdf)
     )
-    tiers.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(tiers, store_path, batch_id)
 
 
 def run_lateness_monitor(
@@ -81,18 +81,13 @@ def run_lateness_monitor(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch lateness
     partials into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_lateness_batch(spark, bdf, store_path, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_lateness_batch(
+            spark, bdf, store_path, batch_id
+        ),
     )
-    q.awaitTermination()
 
 
 def read_lateness_profile(spark: SparkSession, store_path: str) -> DataFrame:
@@ -121,19 +116,9 @@ _DELAYS_US = [0, 1000000, 10000000, 60000000, 600000000, 3600000000]
 def _apply_delay_curve_batch(
     spark: SparkSession, bdf: DataFrame, store_path: str, batch_id: int
 ) -> None:
-    if bdf.isEmpty():
-        return
     from ..operators.incremental import lateness_us
 
     prev = _prior_max_us(spark, store_path, batch_id)
-    bmax = bdf.agg(
-        F.expr("max(unix_micros(ts))").alias("m")
-    ).collect()[0].m
-    bmax_col = (
-        F.lit(None).cast("long")
-        if bmax is None
-        else F.lit(int(bmax)).cast("long")
-    )
     late = lateness_us(bdf, prev_max_us=prev)
     curve = (
         late.select(
@@ -149,9 +134,9 @@ def _apply_delay_curve_batch(
                 F.when(F.col("late_us") > F.col("delay_us"), 1).otherwise(0)
             ).cast("long").alias("n_dropped"),
         )
-        .withColumn("batch_max_us", bmax_col)
+        .withColumn("batch_max_us", _batch_max_col(bdf))
     )
-    curve.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(curve, store_path, batch_id)
 
 
 def run_delay_curve_monitor(
@@ -167,18 +152,13 @@ def run_delay_curve_monitor(
     the prior batches' max event time, exactly like the tier
     monitor). A foreachBatch RETRY recomputes from the same priors and
     overwrites its own partition with identical rows."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_delay_curve_batch(spark, bdf, store_path, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_delay_curve_batch(
+            spark, bdf, store_path, batch_id
+        ),
     )
-    q.awaitTermination()
 
 
 def read_delay_curve(spark: SparkSession, store_path: str) -> DataFrame:

@@ -10,12 +10,12 @@ micro-batch the way a 100 TB ingest actually does:
   the corpus — the store the bloom builds from and the exact join probes
   is ~32 bytes/doc regardless of document size;
 - both sinks are laid out as ``batch=<id>`` partitions and each batch
-  OVERWRITES ONLY ITS OWN partition: foreachBatch is at-least-once, so
-  a retry after a partial failure re-runs the batch — against a store
-  view that EXCLUDES the batch's own partition — recomputes the
-  identical novel set, and overwrites the same directories. Plain
-  appends would duplicate admitted docs on every such retry
-  (pytest-pinned idempotence);
+  OVERWRITES ONLY ITS OWN partition (``streaming/drain.write_partial``):
+  foreachBatch is at-least-once, so a retry after a partial failure
+  re-runs the batch — against a store view that EXCLUDES the batch's
+  own partition — recomputes the identical novel set, and overwrites
+  the same directories. Plain appends would duplicate admitted docs on
+  every such retry (pytest-pinned idempotence);
 - within-batch duplicates collapse first (first occurrence by id — one
   window on the uniform hash key; NULL-text rows get per-row keys, so
   they all survive, matching the batch operator's NULL-is-novel
@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_novelty_ingest"]
 
 
@@ -41,7 +43,7 @@ def _store_has_batches(store_path: str, exclude_batch: int) -> bool:
     """True iff any COMMITTED ``batch=N`` partition other than
     ``exclude_batch`` exists (a retry must not read its own partial
     output; a transient read failure on an existing store must surface,
-    never be mistaken for first-batch — the scd2 lesson)."""
+    never be mistaken for first-batch — as in ``drain._store_exists``)."""
     p = Path(store_path)
     if not p.exists():
         return False
@@ -67,9 +69,6 @@ def _apply_novelty_batch(
     Re-invoking with the same (batch contents, batch_id) is a no-op
     rewrite of identical data — the retry contract."""
     from ..operators.dedup import bloom_novelty_filter
-
-    if bdf.isEmpty():
-        return
     # NULL-text rows get a per-row key: NULL equals nothing, so each is
     # novel on its own — md5(NULL) would collapse them all into one.
     key = F.coalesce(
@@ -96,10 +95,10 @@ def _apply_novelty_batch(
     # batch, and the store write must not re-trigger the probe plan
     # while the store is being written.
     novel = novel.localCheckpoint(eager=True)
-    novel.write.mode("overwrite").parquet(f"{novel_path}/batch={batch_id}")
-    novel.select(F.md5(F.col(text_col)).alias("ch")).write.mode(
-        "overwrite"
-    ).parquet(f"{store_path}/batch={batch_id}")
+    write_partial(novel, novel_path, batch_id)
+    write_partial(
+        novel.select(F.md5(F.col(text_col)).alias("ch")), store_path, batch_id
+    )
 
 
 def run_novelty_ingest(
@@ -112,17 +111,10 @@ def run_novelty_ingest(
     id_col: str = "doc_id",
 ) -> None:
     """Drain ``stream`` (availableNow) through `_apply_novelty_batch`."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_novelty_batch(
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_novelty_batch(
             spark, bdf, store_path, novel_path, batch_id, text_col, id_col
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()

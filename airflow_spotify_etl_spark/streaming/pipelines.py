@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality import quality_report
+from .drain import drain
 
 __all__ = [
     "windowed_stream",
@@ -120,8 +121,9 @@ def run_keep_late(
     rows are COUNTED and WARNED but never dropped. A watermark can't express
     this (it drops), so the data path has none — ``foreachBatch`` appends
     every row to the sink and runs the fused ``quality_report`` per
-    micro-batch for the late count. Drains available input synchronously and
-    returns one report dict per micro-batch (n_late_rows is the warn signal).
+    micro-batch for the late count. Drains available input synchronously
+    (``streaming/drain.drain``) and returns one report dict per non-empty
+    micro-batch (n_late_rows is the warn signal).
 
     Scale: the per-batch report is the same two metadata-cheap scans as the
     batch path (operators/quality.py); the append is a narrow write."""
@@ -138,13 +140,7 @@ def run_keep_late(
         reports.append(rep)
         batch_df.write.mode("append").parquet(sink_path)
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint_path, _process)
     return reports
 
 

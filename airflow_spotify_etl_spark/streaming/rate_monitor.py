@@ -3,11 +3,11 @@ a mergeable store and recompute anomaly flags from their sum — the
 streaming twin of the oracle-checked q118 batch operator.
 
 Counts are the simplest mergeable state there is (addition), so the
-store follows the sketch-maintenance layout: each micro-batch writes
-its OWN hourly partial counts under ``batch=<id>`` and a reader sums
-partials per (type, hour). foreachBatch retries overwrite their own
-partition with identical data — never double-count (the novelty-store
-contract). An hour split across micro-batches (late data, restarts)
+store uses the batch-partial layout of ``streaming/drain.write_partial``:
+each micro-batch writes its OWN hourly partial counts under
+``batch=<id>`` and a reader sums partials per (type, hour). foreachBatch
+retries overwrite their own partition with identical data — never
+double-count. An hour split across micro-batches (late data, restarts)
 merges correctly by construction; no watermark is needed because the
 state is per-hour counts, not per-event.
 
@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain, write_partial
+
 __all__ = ["run_rate_monitor", "read_rate_flags"]
 
 
@@ -32,12 +34,10 @@ def _apply_rate_batch(
     ts_col: str,
     type_col: str,
 ) -> None:
-    if bdf.isEmpty():
-        return
     hourly = bdf.groupBy(
         type_col, F.date_trunc("hour", ts_col).alias("hour_ts")
     ).agg(F.count("*").alias("cnt"))
-    hourly.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+    write_partial(hourly, store_path, batch_id)
 
 
 def run_rate_monitor(
@@ -50,18 +50,13 @@ def run_rate_monitor(
 ) -> None:
     """Drain ``stream`` (availableNow), accumulating per-batch hourly
     partial counts into the store."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        _apply_rate_batch(bdf, store_path, batch_id, ts_col, type_col)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        checkpoint,
+        lambda bdf, batch_id: _apply_rate_batch(
+            bdf, store_path, batch_id, ts_col, type_col
+        ),
     )
-    q.awaitTermination()
 
 
 def read_rate_flags(

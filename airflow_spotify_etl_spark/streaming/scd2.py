@@ -14,73 +14,22 @@ would need a reconciliation pass (re-run `scd2_runs` over the affected
 keys' history); detection of such keys is the `withWatermark` late-data
 path (ST4).
 
-The store is replaced atomically per batch (materialize → stage →
-rename-first swap, crash-recoverable — see _commit_store). At
-scale, partition the run table by key range and rewrite only partitions
-with batch activity (dynamic partition overwrite), the same
-touch-only-the-delta argument as operators/incremental.py.
+The store is replaced whole per batch through
+``streaming/drain.replace_store`` (materialize, then a crash-safe
+rename-first swap; an existing store that cannot be read fails the
+batch rather than restarting history). At scale, partition the run
+table by key range and rewrite only partitions with batch activity
+(dynamic partition overwrite), the same touch-only-the-delta argument
+as operators/incremental.py.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
+from .drain import drain, replace_store
+
 __all__ = ["run_scd2_maintenance"]
-
-
-def _store_exists(store_path: str) -> bool:
-    """True iff a previously-committed run table exists at ``store_path``.
-
-    Existence is decided by looking at the path itself (local/posix: the
-    directory with parquet parts; an object store would check the prefix),
-    NOT by whether ``spark.read`` succeeds: a transient read failure
-    (corrupt footer, permission/network blip, concurrent writer) must
-    abort the batch and surface, never be mistaken for "first batch" —
-    that mistake would overwrite the store with only the current batch and
-    silently destroy all accumulated history (ADVICE r3).
-
-    Recovers a crashed swap first: a leftover ``.bak`` with no main path
-    means ``_commit_store`` died between its two renames — the backup IS
-    the committed store and is renamed back before answering."""
-    p = Path(store_path)
-    bak = Path(store_path.rstrip("/") + "._swap_bak")
-    if bak.exists():
-        if p.exists():
-            import shutil
-
-            shutil.rmtree(bak)  # prior swap completed; stale backup
-        else:
-            bak.rename(p)  # swap died between renames; backup is current
-    if not p.exists():
-        return False
-    # An empty/aborted directory (no parquet parts) is "absent": a prior
-    # overwrite that died before committing any part file left no data.
-    return any(p.glob("*.parquet")) or (p / "_SUCCESS").exists()
-
-
-def _commit_store(df: "DataFrame", store_path: str) -> None:
-    """Atomically replace the store with ``df``: stage to a sibling temp
-    dir, then swap RENAME-FIRST (store → .bak, staged → store, delete
-    .bak) — the compact_table discipline (sinks/writers.py): at every
-    crash point a complete committed copy exists on disk, unlike
-    mode('overwrite') in place, whose kill window mid-write leaves only
-    partial part files where history used to be (the loss window the r3
-    ADVICE flagged). ``_store_exists`` recovers the .bak on next start."""
-    import shutil
-
-    tmp = store_path.rstrip("/") + "._swap_tmp"
-    bak = Path(store_path.rstrip("/") + "._swap_bak")
-    df.write.mode("overwrite").parquet(tmp)
-    p = Path(store_path)
-    if bak.exists():
-        shutil.rmtree(bak)
-    if p.exists():
-        p.rename(bak)
-    Path(tmp).rename(p)
-    if bak.exists():
-        shutil.rmtree(bak)
 
 
 def run_scd2_maintenance(
@@ -94,27 +43,12 @@ def run_scd2_maintenance(
     from ..operators.incremental import scd2_apply_delta, scd2_runs
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        have_store = _store_exists(store_path)
-        if have_store:
-            # Any failure here is a real error (store exists but cannot be
-            # read) and propagates — foreachBatch fails the query rather
-            # than clobbering history with a batch-only rebuild.
-            current = spark.read.parquet(store_path)
-        updated = (
-            scd2_apply_delta(current, bdf) if have_store else scd2_runs(bdf)
+        replace_store(
+            spark,
+            store_path,
+            lambda current: scd2_runs(bdf)
+            if current is None
+            else scd2_apply_delta(current, bdf),
         )
-        # Materialize BEFORE replacing: the plan reads store_path and the
-        # write replaces it — overwrite-while-reading corrupts the table.
-        updated = updated.localCheckpoint(eager=True)
-        _commit_store(updated, store_path)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, apply_batch)

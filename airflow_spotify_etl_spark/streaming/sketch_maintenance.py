@@ -22,10 +22,10 @@ estimates) is always current. Equality with the from-scratch batch
 computation is pytest-verified (two drains ≡ one batch run), the same
 incremental-equals-rebuild discipline as streaming SCD-2 (q80).
 
-Store handling follows streaming/scd2.py: path-existence decides "first
-batch" (a read failure on an existing store must fail the batch, not
-silently restart state — ADVICE r3), and the state is materialized
-before the overwrite that replaces it.
+Each drain replaces its store through ``streaming/drain.replace_store``:
+path-existence decides "first batch" (a read failure on an existing
+store must fail the batch, not silently restart state — ADVICE r3), and
+the state is materialized before the swap that replaces it.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .scd2 import _commit_store, _store_exists
+from .drain import drain, replace_store
 
 __all__ = [
     "run_weighted_sample_maintenance",
@@ -60,13 +60,12 @@ def run_weighted_sample_maintenance(
     from ..operators.sampling import weighted_exact_k_sample
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
         batch_top = weighted_exact_k_sample(bdf, k, weight_col, id_col, salt)
-        have = _store_exists(store_path)
-        if have:
-            stored = spark.read.parquet(store_path)
-            merged = (
+
+        def merge(stored: DataFrame | None) -> DataFrame:
+            if stored is None:
+                return batch_top
+            return (
                 stored.unionByName(batch_top)
                 # an id re-sent across batches keeps ONE copy (same key
                 # both times — content-addressed), not two sample slots
@@ -74,19 +73,10 @@ def run_weighted_sample_maintenance(
                 .orderBy(F.col("es_key").desc(), id_col)
                 .limit(k)
             )
-        else:
-            merged = batch_top
-        merged = merged.localCheckpoint(eager=True)
-        _commit_store(merged, store_path)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        replace_store(spark, store_path, merge)
+
+    drain(stream, checkpoint, apply_batch)
 
 
 def run_kmv_maintenance(
@@ -109,30 +99,24 @@ def run_kmv_maintenance(
     from ..operators.sketches import kmv_group_sketch
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
         batch_mins = kmv_group_sketch(bdf, group_col, value_col, k).select(
             group_col, "h"
         )
-        have = _store_exists(store_path)
-        if have:
-            stored = spark.read.parquet(store_path).select(group_col, "h")
-            pool = stored.unionByName(batch_mins).distinct()
-        else:
-            pool = batch_mins
-        rn = F.row_number().over(W.partitionBy(group_col).orderBy("h"))
-        merged = pool.withColumn("rn", rn).filter(F.col("rn") <= int(k))
-        merged = merged.localCheckpoint(eager=True)
-        _commit_store(merged, store_path)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def merge(stored: DataFrame | None) -> DataFrame:
+            pool = (
+                batch_mins
+                if stored is None
+                else stored.select(group_col, "h")
+                .unionByName(batch_mins)
+                .distinct()
+            )
+            rn = F.row_number().over(W.partitionBy(group_col).orderBy("h"))
+            return pool.withColumn("rn", rn).filter(F.col("rn") <= int(k))
+
+        replace_store(spark, store_path, merge)
+
+    drain(stream, checkpoint, apply_batch)
 
 
 def run_heavy_hitters_maintenance(
@@ -156,49 +140,40 @@ def run_heavy_hitters_maintenance(
     from pyspark.sql import Window as W
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
         batch_counts = (
             bdf.groupBy(F.col(item_col).alias("item"))
             .agg(F.count("*").alias("cnt"))
         )
         batch_n = bdf.count()
-        have = _store_exists(store_path)
-        if have:
-            stored = spark.read.parquet(store_path)
-            prev_n = stored.agg(F.max("n_total")).collect()[0][0] or 0
-            pool = (
-                stored.select("item", "cnt")
-                .unionByName(batch_counts)
-                .groupBy("item")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            prev_n = 0
-            pool = batch_counts
-        rn = F.row_number().over(
-            W.orderBy(F.col("cnt").desc(), F.col("item"))
-        )
-        ranked = pool.withColumn("rn", rn)
-        # (m+1)-th largest count = the decrement; 0 when ≤ m counters.
-        # The rank window is a single-partition sort of ≤ m + |batch
-        # distinct| rows — summary-sized, not stream-sized.
-        d_row = ranked.filter(F.col("rn") == m + 1).select("cnt").collect()
-        d = d_row[0][0] if d_row else 0
-        merged = (
-            ranked.filter(F.col("rn") <= m)
-            .select("item", (F.col("cnt") - F.lit(d)).alias("cnt"))
-            .filter(F.col("cnt") > 0)
-            .withColumn("n_total", F.lit(prev_n + batch_n).cast("long"))
-        )
-        merged = merged.localCheckpoint(eager=True)
-        _commit_store(merged, store_path)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def merge(stored: DataFrame | None) -> DataFrame:
+            if stored is None:
+                prev_n = 0
+                pool = batch_counts
+            else:
+                prev_n = stored.agg(F.max("n_total")).collect()[0][0] or 0
+                pool = (
+                    stored.select("item", "cnt")
+                    .unionByName(batch_counts)
+                    .groupBy("item")
+                    .agg(F.sum("cnt").alias("cnt"))
+                )
+            rn = F.row_number().over(
+                W.orderBy(F.col("cnt").desc(), F.col("item"))
+            )
+            ranked = pool.withColumn("rn", rn)
+            # (m+1)-th largest count = the decrement; 0 when ≤ m counters.
+            # The rank window is a single-partition sort of ≤ m + |batch
+            # distinct| rows — summary-sized, not stream-sized.
+            d_row = ranked.filter(F.col("rn") == m + 1).select("cnt").collect()
+            d = d_row[0][0] if d_row else 0
+            return (
+                ranked.filter(F.col("rn") <= m)
+                .select("item", (F.col("cnt") - F.lit(d)).alias("cnt"))
+                .filter(F.col("cnt") > 0)
+                .withColumn("n_total", F.lit(prev_n + batch_n).cast("long"))
+            )
+
+        replace_store(spark, store_path, merge)
+
+    drain(stream, checkpoint, apply_batch)

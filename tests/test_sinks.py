@@ -6,6 +6,8 @@ reference-parity console display."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -403,12 +405,71 @@ def test_compact_swap_recovers_from_crash_between_renames(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(100).write.parquet(path)
     # Crash simulation: original renamed to .bak, nothing at path.
-    Path(path).rename(path + "._compact_bak")
+    Path(path).rename(path + "._swap_bak")
     assert not Path(path).exists()
     n = compact_table(spark, path)
     assert n == 100
     assert spark.read.parquet(path).count() == 100
-    assert not Path(path + "._compact_bak").exists()
+    assert not Path(path + "._swap_bak").exists()
+
+
+def _table(path, content):
+    """A stand-in table directory holding one file (no Spark needed);
+    writing it again overwrites, as a Spark overwrite would."""
+    path.mkdir(exist_ok=True)
+    (path / "part-0.parquet").write_text(content)
+
+
+def test_swap_recovery_restores_backup_left_alone(tmp_path):
+    """Crash between the two renames: only the backup exists, and it is
+    the committed table — recovery renames it back."""
+    from airflow_spotify_etl_spark.sinks.writers import _recover_swap
+
+    path = tmp_path / "t"
+    _table(tmp_path / "t._swap_bak", "committed")
+    _recover_swap(str(path))
+    assert (path / "part-0.parquet").read_text() == "committed"
+    assert not (tmp_path / "t._swap_bak").exists()
+
+
+def test_swap_recovery_clears_stale_backup(tmp_path):
+    """Crash after the second rename: table and backup both exist, the
+    table is the new copy and the backup is stale — it is deleted."""
+    from airflow_spotify_etl_spark.sinks.writers import _recover_swap
+
+    path = tmp_path / "t"
+    _table(path, "new")
+    _table(tmp_path / "t._swap_bak", "old")
+    _recover_swap(str(path))
+    assert (path / "part-0.parquet").read_text() == "new"
+    assert not (tmp_path / "t._swap_bak").exists()
+
+
+def test_swap_replace_failed_stage_leaves_table_untouched(tmp_path):
+    """A stage that raises mid-write aborts before any rename: the
+    committed table keeps its data and no backup is left. A stage that
+    succeeds replaces the table and leaves neither temp dir nor backup."""
+    from airflow_spotify_etl_spark.sinks.writers import _swap_replace
+
+    path = tmp_path / "t"
+    _table(path, "committed")
+
+    def failing(tmp):
+        _table(Path(tmp), "partial")
+        raise RuntimeError("write died")
+
+    with pytest.raises(RuntimeError, match="write died"):
+        _swap_replace(str(path), failing)
+    assert (path / "part-0.parquet").read_text() == "committed"
+    assert not (tmp_path / "t._swap_bak").exists()
+
+    def staging(tmp):
+        _table(Path(tmp), "replaced")
+        return 7
+
+    assert _swap_replace(str(path), staging) == 7
+    assert (path / "part-0.parquet").read_text() == "replaced"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["t"]
 
 
 def _find_sqlite_jdbc_jar():

@@ -346,7 +346,7 @@ def test_scd2_store_existence_probe():
     import tempfile
     from pathlib import Path
 
-    from airflow_spotify_etl_spark.streaming.scd2 import _store_exists
+    from airflow_spotify_etl_spark.streaming.drain import _store_exists
 
     with tempfile.TemporaryDirectory() as d:
         root = Path(d)
