@@ -16,7 +16,7 @@ Layout
                    SimHash / n-gram Jaccard), similarity search, text analysis,
                    multimodal column plumbing.
 - ``plans``      : named query definitions over the test star schema.
-- ``streaming``  : cursor-based incremental ingest + Structured Streaming jobs.
+- ``streaming``  : Structured Streaming jobs and per-micro-batch store maintenance.
 - ``sinks``      : CSV/Parquet/console/summary writers.
 """
 

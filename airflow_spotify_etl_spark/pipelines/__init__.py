@@ -7,8 +7,9 @@ its imperative steps, and returns the same XCom summary dict shape:
   (spotify_etl.py:197-285): search → top-tracks scan → flatten →
   stats → CSV → summary.
 - ``run_recently_played_etl``       ← ``run_spotify_recently_played_etl``
-  (spotify_etl2.py:231-282): incremental scan → flatten → validate →
-  idempotent append → summary.
+  (spotify_etl2.py:231-282): cursor scan → flatten → validate →
+  idempotent append → summary → durable cursor. The one pipeline-2 path:
+  the cursor beside the sink replaces the reference's ``now - 24h``.
 - ``run_recently_played_analysis``  ← ``run_spotify_recently_played_analysis``
   (new.py:211-267): scan → wide flatten → rank → display → CSV → summary.
 
@@ -26,11 +27,9 @@ from .etl import (
     run_recently_played_etl,
     run_top_tracks_etl,
 )
-from .streaming_etl import run_recently_played_stream
 
 __all__ = [
     "run_top_tracks_etl",
     "run_recently_played_etl",
     "run_recently_played_analysis",
-    "run_recently_played_stream",
 ]

@@ -2,7 +2,8 @@
 
 Stage-to-operator mapping (SURVEY.md §3 lifecycle → engine modules):
 
-    scan        sources/rest.py      S1-S6 (auth, search, top-tracks, cursor)
+    scan        sources/rest.py      S1-S6 (auth, search, top-tracks, after/limit)
+    cursor      pipelines/etl.py     S5 durable ``after`` cursor beside the sink
     flatten     operators/flatten.py P1-P4/P9 (schema-with-defaults select)
     validate    operators/quality.py F1-F4 (one fused aggregation pass)
     sink        sinks/writers.py     K1 CSV / K2 idempotent append / K3 show
@@ -15,6 +16,7 @@ same injection seam the production path uses for credentials-free dry runs.
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -28,7 +30,13 @@ from ..operators.flatten import (
     flatten_with_defaults,
 )
 from ..operators.quality import assert_quality
-from ..sinks.writers import append_table, console_display, summary_record, write_csv
+from ..sinks.writers import (
+    append_table,
+    console_display,
+    hadoop_path,
+    summary_record,
+    write_csv,
+)
 from ..sources.rest import SpotifyRestSource
 
 __all__ = [
@@ -84,12 +92,38 @@ def run_top_tracks_etl(
     }
 
 
+def _cursor_path(spark: SparkSession, db_path: str):
+    return hadoop_path(f"{db_path.rstrip('/')}/_cursor.json", spark)
+
+
+def _read_cursor(spark: SparkSession, db_path: str) -> int | None:
+    """The committed ``after`` cursor of the sink at ``db_path``, in the
+    API's unit (epoch milliseconds), or ``None`` before the first commit."""
+    fs, path = _cursor_path(spark, db_path)
+    if not fs.exists(path):
+        return None
+    stream = fs.open(path)
+    try:
+        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(raw)["after_ms"]
+
+
+def _write_cursor(spark: SparkSession, db_path: str, after_ms: int) -> None:
+    fs, path = _cursor_path(spark, db_path)
+    out = fs.create(path, True)
+    try:
+        out.write(json.dumps({"after_ms": after_ms}).encode("utf-8"))
+    finally:
+        out.close()
+
+
 def run_recently_played_etl(
     spark: SparkSession,
     source: SpotifyRestSource,
     db_path: str,
     limit: int = 50,
-    after_us: int | None = None,
     freshness_days: int = 7,
     execution_date: str | None = None,
 ) -> dict:
@@ -100,8 +134,18 @@ def run_recently_played_etl(
     incl. the ``timestamp`` date slice (P2/P5) → validation suite (F1-F4,
     one fused pass; duplicate played_at raises like spotify_etl2.py:61-62)
     → idempotent append (K2 — fixes the reference's double-insert on
-    re-run) → summary (K4: count / unique artists / date range)."""
-    raw = source.recently_played_since_us(after_us=after_us, limit=limit)
+    re-run) → summary (K4: count / unique artists / date range) → cursor.
+
+    The reference recomputes ``after`` from the wall clock
+    (``now - 24h``, spotify_etl2.py:102-104), so a late run fetches plays
+    twice and a skipped day loses plays. Here ``after`` is the newest
+    committed ``played_at`` in epoch milliseconds, kept in
+    ``{db_path}/_cursor.json`` (Spark's readers skip ``_`` files). It is
+    written only after the append commits; a crash in between re-fetches
+    the page and the append guard drops it. An empty page or a failed
+    quality check leaves it as it was."""
+    after_ms = _read_cursor(spark, db_path)
+    raw = source.recently_played(after_ms=after_ms, limit=limit)
     flat = flatten_with_defaults(raw, RECENTLY_PLAYED_FIELDS).withColumn(
         "played_ts", F.to_timestamp("played_at")
     )
@@ -126,7 +170,11 @@ def run_recently_played_etl(
         unique_artists=F.countDistinct("artist_name"),
         min_date=F.min("timestamp"),
         max_date=F.max("timestamp"),
+        max_played_ms=F.unix_millis(F.max("played_ts")),
     )
+    newest = [v for v in (after_ms, stats["max_played_ms"]) if v is not None]
+    if newest:
+        _write_cursor(spark, db_path, max(newest))
     return {
         "tracks_processed": stats["tracks_processed"],
         "rows_appended": appended,

@@ -15,9 +15,10 @@
   rows with the same key have the same partition value (the date is
   ``played_at[:10]``), so a replayed key can only sit in a partition the
   batch touches.
-  Partition directories are probed through the path's Hadoop
-  ``FileSystem``, so the same code works on local disk, HDFS, or s3a://
-  — no driver-local filesystem assumptions.
+- ``hadoop_path``     — the Hadoop ``FileSystem`` and ``Path`` of a path
+  string. Every probe, rename and small-file read or write of a sink or
+  store goes through it, so the same code works on local disk, HDFS,
+  s3a:// or a ``file://`` URI — no driver-local filesystem assumptions.
 - ``append_jdbc``     — K2 RDBMS parity: the reference's ``to_sql(...
   SQLite...)`` (spotify_etl2.py:220) as ``df.write.jdbc(mode="append")``
   with the same anti-join idempotency guard reading the remote keys back.
@@ -40,13 +41,14 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.joins import incremental_anti_append
 
 __all__ = [
+    "hadoop_path",
     "normalize_object_store_path",
     "write_csv",
     "append_table",
@@ -59,6 +61,17 @@ __all__ = [
     "summary_record",
     "summary_record_observed",
 ]
+
+
+def hadoop_path(path: str, spark: SparkSession | None = None):
+    """``(FileSystem, Path)`` for ``path``, resolved from its scheme with
+    the session's Hadoop conf (the active session when ``spark`` is not
+    given). ``pathlib`` would read ``file:///d`` as the relative name
+    ``file:/d``."""
+    spark = spark or SparkSession.active()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf), jpath
 
 
 def normalize_object_store_path(path: str) -> str:
@@ -123,12 +136,12 @@ def append_table(new: DataFrame, path: str, key: str, partition_date_col: str) -
     if not values:
         return 0
     jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    base = Path(path)
-    fs = base.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    fs, base = hadoop_path(path, spark)
     catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     dirs = [
-        Path(base, catalog_utils.getPartitionPathString(partition_date_col, v))
+        jvm.org.apache.hadoop.fs.Path(
+            base, catalog_utils.getPartitionPathString(partition_date_col, v)
+        )
         for v in values
     ]
     dirs = [d.toString() for d in dirs if fs.exists(d)]
@@ -176,20 +189,24 @@ def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
             spark.conf.set(key, prev)
 
 
+def _rename(fs, src, dst) -> None:
+    # Hadoop reports a failed rename by returning False, not by raising.
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src.toString()} to {dst.toString()}")
+
+
 def _recover_swap(path: str) -> None:
     """Finish or clear a ``_swap_replace`` that a crash interrupted: a
     leftover ``._swap_bak`` beside ``path`` is the committed copy when
     ``path`` is missing (the swap died between its renames) and stale
     when ``path`` exists (it died before deleting the backup)."""
-    import shutil
-    from pathlib import Path
-
-    p, bak = Path(path), Path(path.rstrip("/") + "._swap_bak")
-    if bak.exists():
-        if p.exists():
-            shutil.rmtree(bak)
+    fs, p = hadoop_path(path)
+    bak = p.suffix("._swap_bak")
+    if fs.exists(bak):
+        if fs.exists(p):
+            fs.delete(bak, True)
         else:
-            bak.rename(p)
+            _rename(fs, bak, p)
 
 
 def _swap_replace(path: str, stage):
@@ -203,18 +220,14 @@ def _swap_replace(path: str, stage):
     in-place overwrite that leaves partial part files. A leftover backup
     from an earlier crash is recovered first; if ``stage`` raises, the
     original is untouched."""
-    import shutil
-    from pathlib import Path
-
     _recover_swap(path)
-    tmp = path.rstrip("/") + "._swap_tmp"
-    out = stage(tmp)
-    p, bak = Path(path), Path(path.rstrip("/") + "._swap_bak")
-    if p.exists():
-        p.rename(bak)
-    Path(tmp).rename(p)
-    if bak.exists():
-        shutil.rmtree(bak)
+    fs, p = hadoop_path(path)
+    tmp, bak = p.suffix("._swap_tmp"), p.suffix("._swap_bak")
+    out = stage(tmp.toString())
+    if fs.exists(p):
+        _rename(fs, p, bak)
+    _rename(fs, tmp, p)
+    fs.delete(bak, True)
     return out
 
 

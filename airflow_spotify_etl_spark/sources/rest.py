@@ -267,9 +267,10 @@ class SpotifyRestSource:
         return self._payload_df(rows)
 
     def recently_played(self, after_ms: int | None = None, limit: int = 50) -> DataFrame:
-        """S5 — incremental cursor scan: ``after`` (time predicate) and
-        ``limit`` (clamped ≤50) pushed down exactly as the reference ships
-        them (spotify_etl2.py:102-117)."""
+        """S5 — incremental cursor scan: ``after`` (time predicate, epoch
+        milliseconds — the unit of the cursor ``run_recently_played_etl``
+        keeps) and ``limit`` (clamped ≤50) pushed down exactly as the
+        reference ships them (spotify_etl2.py:102-117)."""
         limit = min(max(limit, 1), 50)  # F6 clamp (new.py:97)
         payload = self._get("/me/player/recently-played", after=after_ms, limit=limit)
         rows = [
@@ -277,17 +278,6 @@ class SpotifyRestSource:
             for it in payload.get("items", [])
         ]
         return self._payload_df(rows)
-
-    def recently_played_since_us(
-        self, after_us: int | None = None, limit: int = 50
-    ) -> DataFrame:
-        """Adapter for ``CursorIncrementalIngest``, whose cursor unit is
-        MICROSECONDS (``unix_micros``); the API's ``after`` param is
-        MILLISECONDS. The unit conversion lives here, at the boundary, so
-        the two layers cannot be wired 1000x apart."""
-        return self.recently_played(
-            after_ms=None if after_us is None else after_us // 1000, limit=limit
-        )
 
     def _frame(self, **columns: list[str | None]) -> DataFrame:
         """Driver-held string columns → a one-partition DataFrame built on

@@ -23,11 +23,10 @@ A module keeps its state in one of two store layouts:
 from __future__ import annotations
 
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sinks.writers import _recover_swap, _swap_replace
+from ..sinks.writers import _recover_swap, _swap_replace, hadoop_path
 
 __all__ = ["drain", "write_partial", "replace_store"]
 
@@ -63,26 +62,31 @@ def write_partial(
     )
 
 
+def _has_parts(fs, path) -> bool:
+    """True iff the directory holds a parquet part or a ``_SUCCESS``
+    marker. An empty/aborted directory counts as absent: a prior
+    overwrite that died before committing any part file left no data."""
+    if not fs.exists(path):
+        return False
+    names = [st.getPath().getName() for st in fs.listStatus(path)]
+    return any(n.endswith(".parquet") or n == "_SUCCESS" for n in names)
+
+
 def _store_exists(store_path: str) -> bool:
     """True iff a previously-committed store exists at ``store_path``.
 
-    Existence is decided by looking at the path itself (local/posix: the
-    directory with parquet parts; an object store would check the prefix),
-    NOT by whether ``spark.read`` succeeds: a transient read failure
-    (corrupt footer, permission/network blip, concurrent writer) must
-    abort the batch and surface, never be mistaken for "first batch" —
-    that mistake would overwrite the store with only the current batch and
+    Existence is decided by looking at the path itself through its
+    Hadoop ``FileSystem`` (a directory with parquet parts), NOT by
+    whether ``spark.read`` succeeds: a transient read failure (corrupt
+    footer, permission/network blip, concurrent writer) must abort the
+    batch and surface, never be mistaken for "first batch" — that
+    mistake would overwrite the store with only the current batch and
     silently destroy all accumulated history (ADVICE r3).
 
     A swap that a crash interrupted is recovered first, so a store that
     sits in its backup counts as present."""
     _recover_swap(store_path)
-    p = Path(store_path)
-    if not p.exists():
-        return False
-    # An empty/aborted directory (no parquet parts) is "absent": a prior
-    # overwrite that died before committing any part file left no data.
-    return any(p.glob("*.parquet")) or (p / "_SUCCESS").exists()
+    return _has_parts(*hadoop_path(store_path))
 
 
 def replace_store(

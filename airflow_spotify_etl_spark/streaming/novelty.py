@@ -28,13 +28,12 @@ rebuild the bloom from the store on a cadence rather than per batch.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .drain import drain, write_partial
+from ..sinks.writers import hadoop_path
+from .drain import _has_parts, drain, write_partial
 
 __all__ = ["run_novelty_ingest"]
 
@@ -44,15 +43,17 @@ def _store_has_batches(store_path: str, exclude_batch: int) -> bool:
     ``exclude_batch`` exists (a retry must not read its own partial
     output; a transient read failure on an existing store must surface,
     never be mistaken for first-batch — as in ``drain._store_exists``)."""
-    p = Path(store_path)
-    if not p.exists():
+    fs, p = hadoop_path(store_path)
+    if not fs.exists(p):
         return False
-    for d in p.glob("batch=*"):
-        if d.name == f"batch={exclude_batch}":
-            continue
-        if any(d.glob("*.parquet")) or (d / "_SUCCESS").exists():
-            return True
-    return False
+    own = f"batch={exclude_batch}"
+    return any(
+        _has_parts(fs, st.getPath())
+        for st in fs.listStatus(p)
+        if st.isDirectory()
+        and st.getPath().getName().startswith("batch=")
+        and st.getPath().getName() != own
+    )
 
 
 def _apply_novelty_batch(

@@ -9,10 +9,10 @@ batch folds in WITHOUT re-reading event history.
 
 Ordering contract: within a key, batches must arrive in event-time order
 (each batch's events later than the stored history — what a checkpointed
-max-ts cursor source guarantees, see streaming/cursor.py). Late events
-would need a reconciliation pass (re-run `scd2_runs` over the affected
-keys' history); detection of such keys is the `withWatermark` late-data
-path (ST4).
+max-ts cursor source guarantees, like pipeline 2's in pipelines/etl.py).
+Late events would need a reconciliation pass (re-run `scd2_runs` over the
+affected keys' history); detection of such keys is the `withWatermark`
+late-data path (ST4).
 
 The store is replaced whole per batch through
 ``streaming/drain.replace_store`` (materialize, then a crash-safe

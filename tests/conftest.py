@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from airflow_spotify_etl_spark.session import get_spark
 
@@ -16,6 +19,44 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF0001
+
+
+@pytest.fixture()
+def stage_tasks(spark):
+    """``count(group) -> (jobs, {stage id: tasks})`` over the stages that
+    ran in a job group's jobs, read from the status store. A skipped
+    stage (its shuffle output already written by an earlier stage) runs
+    no task and is left out; once a long session passes
+    ``spark.ui.retainedStages``, Spark evicts skipped stages' info first.
+    A stage whose info is gone must be one of the job's skipped stages,
+    or the count fails."""
+    sc = spark.sparkContext
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+
+    def count(group: str) -> tuple[int, dict[int, int]]:
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = {}
+        for job in jobs:
+            skipped, gone = store.job(job).numSkippedStages(), []
+            for stage in tracker.getJobInfo(job).stageIds:
+                try:
+                    info = store.lastStageAttempt(stage)
+                except Py4JJavaError:
+                    gone.append(stage)
+                    continue
+                if info.status().toString() == "SKIPPED":
+                    skipped -= 1
+                else:
+                    tasks[stage] = info.numTasks()
+            if len(gone) != skipped:
+                pytest.fail(
+                    f"job {job}: the info of stages {gone} is gone and only "
+                    f"{skipped} of its stages were skipped; their tasks "
+                    "cannot be counted"
+                )
+        return len(jobs), tasks
+
+    return count
 
 
 # ---------------------------------------------------------------------------
@@ -39,9 +80,6 @@ _SLOW_TESTS = {
     "test_corpus_pipeline.py::test_pipeline_with_classifier_pii_and_excision",
     "test_corpus_pipeline.py::test_quality_aware_keeper_beats_min_id",
     "test_corpus_pipeline.py::test_quality_filter_drops_junk",
-    "test_datasource.py::test_batch_read_returns_payload_rows",
-    "test_datasource.py::test_native_streaming_pipeline_end_to_end",
-    "test_datasource.py::test_stream_offsets_resume_without_reemit",
     "test_dedup.py::test_band_bucket_cap_drops_boilerplate_buckets",
     "test_dedup.py::test_bloom_novelty_exact_even_when_bloom_saturated",
     "test_dedup.py::test_boilerplate_excision_removes_all_copies",
@@ -140,7 +178,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_centroid_maintenance_equals_batch_drift",
     "test_streaming.py::test_cms_monitor_equals_batch_sketch",
     "test_streaming.py::test_composed_monitor_fleet_over_shared_stream",
-    "test_streaming.py::test_cursor_ingest_is_incremental_and_idempotent",
     "test_streaming.py::test_datasheet_maintenance_equals_batch_q119",
     "test_streaming.py::test_dedup_across_micro_batches",
     "test_streaming.py::test_drift_monitor_equals_batch_tvd",
@@ -190,12 +227,15 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
             matched.add(key)
     # A stale entry (test renamed or deleted) would silently stop marking
-    # anything; fail instead. Only files collected whole are checked, so
-    # a run of one file or one node id still works.
+    # anything; fail instead. Entries of collected files are checked only
+    # when the file was collected whole, so a run of one file or one node
+    # id still works; an entry whose file is gone from tests/ always fails.
     narrowed = {a.split("::", 1)[0].rpartition("/")[2] for a in config.args if "::" in a}
+    here = Path(__file__).parent
     stale = sorted(
         e for e in _SLOW_TESTS - matched
         if e.split("::", 1)[0] in files - narrowed
+        or not (here / e.split("::", 1)[0]).is_file()
     )
     if stale:
         raise pytest.UsageError(

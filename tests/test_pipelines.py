@@ -3,7 +3,7 @@
 A canned transport stands in for the Spotify API — the same injection seam
 the production path exposes (sources/rest.py: ``transport`` param). Every
 previously-untested stage runs here as one composed flow: token flow (S1),
-search LIMIT-1 (S3), top-tracks (S4), cursor scan + clamp (S5/F6),
+search LIMIT-1 (S3), top-tracks (S4), durable cursor scan + clamp (S5/F6),
 PERMISSIVE malformed docs (F8), flatten (P1-P4/P9), quality gate (F1-F4),
 CSV / append sinks (K1/K2), summary record (K4).
 """
@@ -11,7 +11,10 @@ CSV / append sinks (K1/K2), summary record (K4).
 from __future__ import annotations
 
 import base64
+import datetime as dt
 import json
+import os
+import urllib.parse
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,12 +112,6 @@ def test_recently_played_clamps_limit(source, transport):
     source.recently_played(limit=0)
     url2 = [u for u, _, _ in transport.calls if "recently-played" in u][-1]
     assert "limit=1" in url2
-
-
-def test_cursor_unit_adapter_converts_us_to_ms(source, transport):
-    source.recently_played_since_us(after_us=1_700_000_000_000_000)
-    url = next(u for u, _, _ in transport.calls if "recently-played" in u)
-    assert "after=1700000000000" in url  # microseconds // 1000
 
 
 def test_permissive_malformed_doc_becomes_defaults(spark, source):
@@ -237,6 +234,144 @@ def test_recently_played_duplicate_pk_raises(spark, tmp_path):
         run_recently_played_etl(spark, src, str(tmp_path / "db"))
 
 
+# -- pipeline 2's durable cursor (S5) ----------------------------------------
+
+def _ms(played_at: str) -> int:
+    return int(dt.datetime.fromisoformat(played_at.replace("Z", "+00:00")).timestamp() * 1000)
+
+
+class Timeline(CannedTransport):
+    """The recently-played endpoint over a growing play history. It honours
+    ``after`` the way the API does: only plays strictly after the cursor
+    (epoch ms), the newest ``limit`` of them."""
+
+    def __init__(self):
+        super().__init__()
+        self.plays: list[str] = []
+
+    def play(self, day: int, *hours: int) -> None:
+        self.plays += [f"2024-01-{day:02d}T{h:02d}:00:00.000Z" for h in hours]
+
+    def afters(self) -> list[str | None]:
+        """The ``after`` of every recently-played request, in order."""
+        return [
+            urllib.parse.parse_qs(urllib.parse.urlparse(u).query).get("after", [None])[0]
+            for u, _, _ in self.calls
+            if "recently-played" in u
+        ]
+
+    def __call__(self, url, headers, data=None):
+        if "recently-played" not in url:
+            return super().__call__(url, headers, data)
+        self.calls.append((url, headers, data))
+        query = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+        after = int(query["after"][0]) if "after" in query else None
+        fresh = sorted(p for p in self.plays if after is None or _ms(p) > after)
+        page = fresh[-int(query["limit"][0]):]
+        return {"items": [{"played_at": p, "track": _track(i)} for i, p in enumerate(page)]}
+
+
+def _cursor(db: str) -> int:
+    with open(os.path.join(db, "_cursor.json")) as f:
+        return json.load(f)["after_ms"]
+
+
+def _sink_keys(spark, db: str) -> list[str]:
+    return sorted(r.played_at for r in spark.read.parquet(db).select("played_at").collect())
+
+
+@pytest.fixture()
+def timeline(spark):
+    api = Timeline()
+    return api, SpotifyRestSource(spark, transport=api, token="t")
+
+
+def test_recently_played_second_run_sends_cursor_in_ms(spark, timeline, tmp_path):
+    """The first run sends no ``after``; the second sends the newest
+    committed played_at in epoch milliseconds (the API's unit) and gets
+    only the play after it."""
+    api, src = timeline
+    db = str(tmp_path / "db")
+    api.play(1, 8, 9, 10)
+    assert run_recently_played_etl(spark, src, db)["rows_appended"] == 3
+    assert _cursor(db) == 1704103200000  # 2024-01-01T10:00:00Z
+    api.play(1, 11)
+    out = run_recently_played_etl(spark, src, db)
+    assert api.afters() == [None, "1704103200000"]
+    assert (out["tracks_processed"], out["rows_appended"]) == (1, 1)
+    assert _cursor(db) == _ms("2024-01-01T11:00:00.000Z")
+
+
+def test_recently_played_skipped_day_lands_both_days_once(spark, timeline, tmp_path):
+    """A skipped run loses nothing: the next run fetches every play since
+    the cursor, where the reference's ``now - 24h`` misses a day."""
+    api, src = timeline
+    db = str(tmp_path / "db")
+    api.play(1, 8, 9)
+    run_recently_played_etl(spark, src, db)
+    api.play(2, 8, 9)  # day 2's run is skipped
+    api.play(3, 8)
+    out = run_recently_played_etl(spark, src, db)
+    assert (out["tracks_processed"], out["rows_appended"]) == (3, 3)
+    assert out["date_range"] == "2024-01-02 to 2024-01-03"
+    assert _sink_keys(spark, db) == sorted(api.plays)
+
+
+def test_recently_played_late_run_appends_no_duplicate(spark, timeline, tmp_path):
+    """A run that starts hours late fetches only the plays after the last
+    commit, where a ``now - 24h`` window would fetch the previous run's
+    plays again; the next on-time run picks up from the late one."""
+    api, src = timeline
+    db = str(tmp_path / "db")
+    api.play(1, 8, 20)
+    run_recently_played_etl(spark, src, db)
+    api.play(2, 9, 23)
+    api.play(3, 5)  # day 2's run starts on day 3 at 06:00
+    late = run_recently_played_etl(spark, src, db)
+    assert (late["tracks_processed"], late["rows_appended"]) == (3, 3)
+    api.play(3, 7)
+    on_time = run_recently_played_etl(spark, src, db)
+    assert (on_time["tracks_processed"], on_time["rows_appended"]) == (1, 1)
+    assert _sink_keys(spark, db) == sorted(api.plays)
+
+
+def test_recently_played_lost_cursor_refetches_without_duplicates(spark, timeline, tmp_path):
+    """A crash between the append and the cursor write leaves the sink
+    ahead of the cursor: the next run re-fetches, the append guard drops
+    the page, and the cursor is written again."""
+    api, src = timeline
+    db = str(tmp_path / "db")
+    api.play(1, 8, 9)
+    run_recently_played_etl(spark, src, db)
+    committed = _cursor(db)
+    os.remove(os.path.join(db, "_cursor.json"))
+    out = run_recently_played_etl(spark, src, db)
+    assert api.afters()[-1] is None
+    assert (out["tracks_processed"], out["rows_appended"]) == (2, 0)
+    assert _cursor(db) == committed
+    assert _sink_keys(spark, db) == sorted(api.plays)
+
+
+def test_recently_played_cursor_unchanged_by_no_data_or_failed_check(spark, timeline, tmp_path):
+    """An empty page returns no_data and a page that fails the primary-key
+    check raises; neither moves the cursor, so the next run asks again."""
+    api, src = timeline
+    db = str(tmp_path / "db")
+    api.play(1, 8)
+    run_recently_played_etl(spark, src, db)
+    committed = _cursor(db)
+    assert run_recently_played_etl(spark, src, db) == {
+        "tracks_processed": 0,
+        "status": "no_data",
+    }
+    assert _cursor(db) == committed
+    api.play(1, 9, 9)
+    with pytest.raises(ValueError, match="Primary key"):
+        run_recently_played_etl(spark, src, db)
+    assert _cursor(db) == committed
+    assert api.afters()[1:] == [str(committed)] * 2
+
+
 def test_recently_played_analysis_end_to_end(spark, source, tmp_path, capsys):
     out = str(tmp_path / "analysis_csv")
     summary = run_recently_played_analysis(
@@ -256,7 +391,7 @@ def test_recently_played_analysis_end_to_end(spark, source, tmp_path, capsys):
     assert top["played_at"] == "2024-01-01T10:04:00.000Z"
 
 
-def test_rest_pipelines_run_one_task_per_stage(spark, source, tmp_path):
+def test_rest_pipelines_run_one_task_per_stage(spark, source, stage_tasks, tmp_path):
     """The REST frames are one partition built on the JVM, so no Python
     worker runs per mostly-empty slice: every stage of the three pipelines
     (the recently-played sink written twice, then an empty page) runs one
@@ -292,12 +427,7 @@ def test_rest_pipelines_run_one_task_per_stage(spark, source, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    tasks = {
-        stage: tracker.getStageInfo(stage).numTasks
-        for job in tracker.getJobIdsForGroup(group)
-        for stage in tracker.getJobInfo(job).stageIds
-    }
+    _, tasks = stage_tasks(group)
     assert tasks and max(tasks.values()) == 1, tasks
 
 

@@ -129,9 +129,9 @@ def test_append_table_fails_if_batch_changes_partitions(spark, tmp_path):
     assert _data_files(sink) == []
 
 
-def _append_cost(spark, new, path):
+def _append_cost(spark, stage_tasks, new, path):
     """(rows appended, Spark jobs, tasks) of one append_table call, counted
-    through the status tracker under a job group of its own."""
+    through the status store under a job group of its own."""
     import uuid
 
     sc = spark.sparkContext
@@ -142,17 +142,11 @@ def _append_cost(spark, new, path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    tasks = sum(
-        tracker.getStageInfo(s).numTasks
-        for j in jobs
-        for s in tracker.getJobInfo(j).stageIds
-    )
-    return n, len(jobs), tasks
+    jobs, tasks = stage_tasks(group)
+    return n, jobs, sum(tasks.values())
 
 
-def test_append_table_cost_does_not_grow_with_sink_depth(spark, tmp_path):
+def test_append_table_cost_does_not_grow_with_sink_depth(spark, stage_tasks, tmp_path):
     """The guard reads only the batch's partitions: a 400-day sink costs
     the same Spark jobs and tasks as a 40-day one."""
     import datetime
@@ -166,7 +160,7 @@ def test_append_table_cost_does_not_grow_with_sink_depth(spark, tmp_path):
         _plays(spark, [f"{d}T08:00:00Z" for d in days]).write.partitionBy(
             "timestamp"
         ).parquet(sink)
-        costs.append(_append_cost(spark, _plays(spark, batch), sink))
+        costs.append(_append_cost(spark, stage_tasks, _plays(spark, batch), sink))
     assert costs[0] == costs[1]
     assert costs[0][0] == 1
 
@@ -420,7 +414,7 @@ def _table(path, content):
     (path / "part-0.parquet").write_text(content)
 
 
-def test_swap_recovery_restores_backup_left_alone(tmp_path):
+def test_swap_recovery_restores_backup_left_alone(spark, tmp_path):
     """Crash between the two renames: only the backup exists, and it is
     the committed table — recovery renames it back."""
     from airflow_spotify_etl_spark.sinks.writers import _recover_swap
@@ -432,7 +426,7 @@ def test_swap_recovery_restores_backup_left_alone(tmp_path):
     assert not (tmp_path / "t._swap_bak").exists()
 
 
-def test_swap_recovery_clears_stale_backup(tmp_path):
+def test_swap_recovery_clears_stale_backup(spark, tmp_path):
     """Crash after the second rename: table and backup both exist, the
     table is the new copy and the backup is stale — it is deleted."""
     from airflow_spotify_etl_spark.sinks.writers import _recover_swap
@@ -445,7 +439,7 @@ def test_swap_recovery_clears_stale_backup(tmp_path):
     assert not (tmp_path / "t._swap_bak").exists()
 
 
-def test_swap_replace_failed_stage_leaves_table_untouched(tmp_path):
+def test_swap_replace_failed_stage_leaves_table_untouched(spark, tmp_path):
     """A stage that raises mid-write aborts before any rename: the
     committed table keeps its data and no backup is left. A stage that
     succeeds replaces the table and leaves neither temp dir nor backup."""
@@ -470,6 +464,34 @@ def test_swap_replace_failed_stage_leaves_table_untouched(tmp_path):
     assert _swap_replace(str(path), staging) == 7
     assert (path / "part-0.parquet").read_text() == "replaced"
     assert sorted(p.name for p in tmp_path.iterdir()) == ["t"]
+
+
+def test_store_replace_over_file_uri_keeps_committed_rows(spark, tmp_path):
+    """A store given as a ``file://`` URI is probed and swapped through its
+    Hadoop FileSystem: the second replace merges into the committed rows
+    instead of reading the store as absent, and the swap leaves no temp
+    dir or backup beside it."""
+    from airflow_spotify_etl_spark.sinks.writers import _swap_replace
+    from airflow_spotify_etl_spark.streaming.drain import replace_store
+
+    uri = (tmp_path / "store").as_uri()
+    assert uri.startswith("file:///")
+
+    def add(ids):
+        new = spark.range(*ids)
+        return lambda stored: new if stored is None else stored.unionByName(new)
+
+    replace_store(spark, uri, add((0, 3)))
+    replace_store(spark, uri, add((3, 5)))
+    assert sorted(r.id for r in spark.read.parquet(uri).collect()) == [0, 1, 2, 3, 4]
+
+    def stage(tmp):
+        spark.read.parquet(uri).filter("id % 2 = 0").write.parquet(tmp)
+        return 3
+
+    assert _swap_replace(uri, stage) == 3
+    assert sorted(r.id for r in spark.read.parquet(uri).collect()) == [0, 2, 4]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["store"]
 
 
 def _find_sqlite_jdbc_jar():

@@ -1,5 +1,6 @@
 """Structured Streaming tests (SURVEY.md §5.4): watermark windows,
-cross-batch dedup, cursor resume."""
+cross-batch dedup, per-micro-batch store maintenance. Pipeline 2's cursor
+resume is tested with the pipeline (tests/test_pipelines.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from airflow_spotify_etl_spark.streaming.cursor import CursorIncrementalIngest
 from airflow_spotify_etl_spark.streaming.pipelines import (
     dedup_stream,
     run_keep_late,
@@ -112,41 +112,6 @@ def test_dedup_across_micro_batches(spark, tmp_path):
     drain()
     ids = sorted(r.event_id for r in spark.read.parquet(out).collect())
     assert ids == [1, 2, 3]  # replayed id=2 suppressed by cross-batch state
-
-
-def test_cursor_ingest_is_incremental_and_idempotent(spark, tmp_path):
-    sink = str(tmp_path / "sink")
-    data = _rows((1, 0, 1, "a", 1.0), (2, 30, 1, "a", 2.0))
-
-    def fetch(after_us):
-        df = spark.createDataFrame(data, SCHEMA)
-        if after_us is not None:
-            df = df.filter(F.unix_micros("ts") > after_us)
-        return df
-
-    ing = CursorIncrementalIngest(spark, fetch, sink, key_col="event_id", ts_col="ts")
-    r1 = ing.run_once()
-    assert r1["appended"] == 2 and r1["status"] == "ok"
-
-    # Re-run with no new data: cursor filters everything out.
-    r2 = ing.run_once()
-    assert r2["appended"] == 0
-    assert r2["cursor_us"] in (None, r1["cursor_us"])
-
-    # New event arrives; only it is appended, cursor advances.
-    data.append((3, _ts(60), 2, "b", 3.0))
-    r3 = ing.run_once()
-    assert r3["appended"] == 1 and r3["cursor_us"] > r1["cursor_us"]
-    assert spark.read.parquet(sink).count() == 3
-
-    # Crash-recovery scenario: cursor file lost → full re-fetch, but the
-    # anti-join guard keeps the append idempotent (unlike spotify_etl2.py:220).
-    import os
-
-    os.remove(ing.cursor_path)
-    r4 = ing.run_once()
-    assert r4["appended"] == 0
-    assert spark.read.parquet(sink).count() == 3
 
 
 def test_keep_late_counts_and_keeps_late_rows(spark, tmp_path):
@@ -270,16 +235,6 @@ def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
     assert r2.last_seen_us == int(_ts(2).timestamp() * 1_000_000)
 
 
-def test_empty_fetch_is_clean_noop(spark, tmp_path):
-    def fetch(after_us):
-        return spark.createDataFrame([], SCHEMA)
-
-    ing = CursorIncrementalIngest(
-        spark, fetch, str(tmp_path / "sink2"), key_col="event_id", ts_col="ts"
-    )
-    assert ing.run_once()["status"] == "empty"
-
-
 def test_scd2_maintenance_stream_matches_full_rebuild(spark, tmp_path):
     """Two availableNow drains, each folding its micro-batch into the
     stored SCD-2 run table incrementally; the final store must equal a
@@ -340,7 +295,7 @@ def test_scd2_maintenance_corrupt_store_fails_instead_of_overwriting(
     assert corrupt.read_bytes() == b"this is not a parquet file"
 
 
-def test_scd2_store_existence_probe():
+def test_scd2_store_existence_probe(spark):
     """Empty or part-less directories are 'absent' (a died overwrite);
     directories with parquet parts or a _SUCCESS marker are 'present'."""
     import tempfile
