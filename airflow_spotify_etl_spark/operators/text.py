@@ -12,8 +12,8 @@ aren't expressible as one SQL query:
   as Σ log P(token|lang) with a floor penalty for out-of-profile tokens and
   take the argmax. Both phases are pure DataFrame ops; the model is a small
   DataFrame (langs × top_m tokens) broadcast at predict time — at 100 TB the
-  predict scan is explode → broadcast-join → one grouped sum, no big-table
-  shuffle beyond the per-doc aggregation.
+  predict scan is explode → broadcast-join → a per-(doc, lang) sum and a
+  per-doc argmax, no join back onto the documents.
 """
 
 from __future__ import annotations
@@ -48,6 +48,18 @@ _PII_TOKENS = {"email": "<EMAIL>", "phone": "<PHONE>", "ipv4": "<IP>"}
 # (Laplace-ish floor; must be below any real profile weight).
 _FLOOR = -18.0
 
+# Tiny deterministic stopword list (the corpus quality gate and plans/llm).
+_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
+
+
+def _tokens(col):
+    """The module's one token rule: lowercased whitespace-split words, no
+    empty strings; NULL text has none (an empty array, ``size`` 0)."""
+    return F.coalesce(
+        F.filter(F.split(F.lower(col), "\\s+"), lambda x: x != F.lit("")),
+        F.array().cast("array<string>"),
+    )
+
 
 def normalize_text(col):
     """Canonical text form: lowercase, every non-[a-z0-9 ] byte → space,
@@ -75,9 +87,8 @@ def char_ngrams(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n
 def word_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, token) pairs: lowercased whitespace tokens, every occurrence."""
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), "\\s+")).alias("gram"),
-    ).filter(F.col("gram") != "")
+        F.col(id_col).alias("doc_id"), F.explode(_tokens(F.col(text_col))).alias("gram")
+    )
 
 
 def redact_pii(
@@ -119,10 +130,7 @@ def top_ngrams(
     see operators/dedup.shingle) into one grouped aggregate whose
     count/count-distinct partials combine map-side; the output is top-k
     bounded."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
+    base = df.select(F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("_w"))
     last = F.size("_w") - n + 1
     idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
         F.array().cast("array<int>")
@@ -149,17 +157,18 @@ def fit_lang_profiles(
     top_m: int = 500,
 ) -> DataFrame:
     """Per-language profile: top_m most frequent tokens with
-    log P(token|lang) weights. Returns a small DF (lang, gram, weight)."""
-    grams = word_tokens(labeled, text_col, id_col=lang_col).withColumnRenamed(
-        "doc_id", "lang"
-    )
-    counts = grams.groupBy("lang", "gram").count()
-    totals = counts.groupBy("lang").agg(F.sum("count").alias("total"))
-    w = W.partitionBy("lang").orderBy(F.col("count").desc(), F.col("gram"))
+    log P(token|lang) weights. Returns a small DF (lang, gram, weight).
+    A language's total is a window sum over the partition that ranks its
+    tokens (no join); docs with a NULL label fit no profile."""
+    labeled = labeled.filter(F.col(lang_col).isNotNull())
+    counts = word_tokens(labeled, text_col, lang_col).groupBy(
+        F.col("doc_id").alias("lang"), "gram"
+    ).count()
+    by_lang = W.partitionBy("lang")
+    rank = F.row_number().over(by_lang.orderBy(F.col("count").desc(), F.col("gram")))
     return (
-        counts.withColumn("rn", F.row_number().over(w))
+        counts.withColumns({"total": F.sum("count").over(by_lang), "rn": rank})
         .filter(F.col("rn") <= top_m)
-        .join(F.broadcast(totals), "lang")
         .select(
             "lang", "gram", F.log(F.col("count") / F.col("total")).alias("weight")
         )
@@ -173,70 +182,39 @@ def predict_lang(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Multinomial NB scoring: score(doc, lang) = Σ_matched log P(tok|lang)
-    + floor · n_unmatched; argmax lang per doc. The floor term is what makes
-    coverage count — without it, a language matching FEWER tokens would sum
-    fewer negative terms and spuriously win.
+    + floor · n_unmatched; argmax lang per doc, a tie going to the lower
+    lang. The floor term is what makes coverage count — without it, a
+    language matching FEWER tokens would sum fewer negative terms and
+    spuriously win.
 
-    Every input doc appears in the output: a doc whose tokens match NO
-    profile (or that has no tokens at all) gets ``pred_lang = null`` with a
-    floor-only score, instead of silently vanishing through the inner join."""
-    grams = word_tokens(docs, text_col, id_col)
-    all_docs = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    doc_sizes = all_docs.join(
-        grams.groupBy("doc_id").agg(F.count("*").alias("n_tokens")),
-        "doc_id",
-        "left",
-    ).fillna({"n_tokens": 0})
+    ``doc_id`` is the key: one output row per input doc. A doc whose
+    tokens match NO profile (or that has no tokens) gets ``pred_lang =
+    null``, ``n_matched = 0`` and the floor-only score n_tokens · floor:
+    tokens left-join the broadcast profiles, and the argmax is one per-doc
+    min over (−score, lang, n_matched), with no join back."""
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("_t")
+    ).select("doc_id", F.size("_t").alias("n_tokens"), F.explode_outer("_t").alias("gram"))
     scored = (
-        grams.join(F.broadcast(profiles), "gram")
-        .groupBy("doc_id", "lang")
-        .agg(F.sum("weight").alias("matched_weight"), F.count("*").alias("n_matched"))
-        .join(doc_sizes, "doc_id")
-        .withColumn(
-            "score",
-            F.col("matched_weight")
-            + (F.col("n_tokens") - F.col("n_matched")) * F.lit(_FLOOR),
-        )
+        toks.join(F.broadcast(profiles), "gram", "left")
+        .groupBy("doc_id", "n_tokens", "lang")
+        .agg(F.sum("weight").alias("matched"), F.count("weight").alias("n_matched"))
     )
-    w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("lang"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("lang").alias("pred_lang"), "score", "n_matched")
-    )
-    return doc_sizes.join(best, "doc_id", "left").select(
+    score = F.col("matched") + (F.col("n_tokens") - F.col("n_matched")) * F.lit(_FLOOR)
+    best = F.when(F.col("lang").isNotNull(), F.struct((-score).alias("neg"), "lang", "n_matched"))
+    return scored.groupBy("doc_id", "n_tokens").agg(F.min(best).alias("_b")).select(
         "doc_id",
-        "pred_lang",
-        F.coalesce("score", F.col("n_tokens") * F.lit(_FLOOR)).alias("score"),
-        F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
+        F.col("_b.lang").alias("pred_lang"),
+        F.coalesce(-F.col("_b.neg"), F.col("n_tokens") * F.lit(_FLOOR)).alias("score"),
+        F.coalesce("_b.n_matched", F.lit(0)).alias("n_matched"),
     )
 
 
-def repetition_metrics(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher-style repetition signals per doc (Rae et al. 2021 §A1.1 use
-    these to drop template/spam pages before LLM training): type-token
-    ratio, most-frequent-token fraction, most-frequent-bigram fraction.
-
-    Shape at 100 TB: these are PER-DOCUMENT statistics, so the whole
-    operator is ONE narrow projection — zero shuffles, zero joins, fully
-    whole-stage-codegen (r7 redesign; the previous explode→groupBy→join
-    form shuffled the token stream twice and re-scanned the corpus three
-    times for row-local math). The top-frequency counts come from the
-    max run length of the SORTED token/bigram array, computed with a
-    higher-order aggregate over a (prev, run, best) struct — all
-    JVM-side array expressions, no Python. Docs with no tokens survive
-    with n_tokens=0 and null ratios; single-token docs have no bigrams
-    → null top_bigram_frac (unchanged semantics, value-identical to the
-    grouped form and the DuckDB oracle).
-
-    ORDER-PRESERVATION DEPENDENCY: callers (q45) sort the slim input
-    BELOW this projection and rely on the projection staying narrow
-    (no shuffle/join/agg between rows) so the output keeps the input
-    order. If a future change adds a wide step here, the presentation
-    order breaks silently — tests/test_order_preservation.py gates
-    this."""
+def _with_repetition(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus its text's repetition signals as ``_n_tokens``,
+    ``_type_token_ratio``, ``_top_token_frac`` and ``_top_bigram_frac``:
+    the one definition ``repetition_metrics`` reports and the corpus gate
+    filters on. Narrow projections only."""
 
     def _max_run(arr):
         # max run length of a sorted array: fold (prev, run, best)
@@ -261,16 +239,6 @@ def repetition_metrics(
             lambda acc: acc.best,
         )
 
-    # coalesce: NULL text must yield n_tokens=0 (the pre-r7
-    # explode+left-join path coalesced missing docs to 0; size(NULL)
-    # would propagate NULL, or -1 under legacy sizeOfNull).
-    words = F.coalesce(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), "\\s+"),
-            lambda x: x != F.lit(""),
-        ),
-        F.array().cast("array<string>"),
-    )
     n_idx = F.size("_w") - 1
     idx = F.when(n_idx >= 1, F.sequence(F.lit(1), n_idx)).otherwise(
         F.array().cast("array<int>")
@@ -281,31 +249,53 @@ def repetition_metrics(
             " ", F.element_at("_w", i), F.element_at("_w", i + F.lit(1))
         ),
     )
+    n = F.col("_n_tokens")
     return (
-        df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-        .select(
-            "doc_id",
-            F.size("_w").alias("n_tokens"),
-            F.size(F.array_distinct("_w")).alias("n_distinct"),
-            _max_run(F.col("_w")).alias("top_cnt"),
-            bigrams.alias("_b"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.when(
-                F.col("n_tokens") > 0,
-                F.round(F.col("n_distinct") / F.col("n_tokens"), 4),
-            ).alias("type_token_ratio"),
-            F.when(
-                F.col("n_tokens") > 0,
-                F.round(F.col("top_cnt") / F.col("n_tokens"), 4),
-            ).alias("top_token_frac"),
-            F.when(
-                F.size("_b") > 0,
-                F.round(_max_run(F.col("_b")) / F.size("_b"), 4),
-            ).alias("top_bigram_frac"),
-        )
+        df.withColumn("_w", _tokens(F.col(text_col)))
+        .withColumns({
+            "_n_tokens": F.size("_w"),
+            "_n_distinct": F.size(F.array_distinct("_w")),
+            "_top_cnt": _max_run(F.col("_w")),
+            "_b": bigrams,
+        })
+        .withColumns({
+            "_type_token_ratio": F.when(n > 0, F.round(F.col("_n_distinct") / n, 4)),
+            "_top_token_frac": F.when(n > 0, F.round(F.col("_top_cnt") / n, 4)),
+            "_top_bigram_frac": F.when(
+                F.size("_b") > 0, F.round(_max_run(F.col("_b")) / F.size("_b"), 4)
+            ),
+        })
+        .drop("_w", "_n_distinct", "_top_cnt", "_b")
+    )
+
+
+def repetition_metrics(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Gopher-style repetition signals per doc (Rae et al. 2021 §A1.1 use
+    these to drop template/spam pages before LLM training): type-token
+    ratio, most-frequent-token fraction, most-frequent-bigram fraction.
+
+    Shape at 100 TB: these are PER-DOCUMENT statistics, so the whole
+    operator is ONE narrow projection — zero shuffles, zero joins. The
+    top-frequency counts come from the
+    max run length of the SORTED token/bigram array, computed with a
+    higher-order aggregate over a (prev, run, best) struct — all
+    JVM-side array expressions, no Python. Docs with no tokens (NULL
+    text included) survive with n_tokens=0 and null ratios; single-token
+    docs have no bigrams → null top_bigram_frac (value-identical to the
+    DuckDB oracle).
+
+    ORDER-PRESERVATION DEPENDENCY: callers (q45) sort the slim input
+    BELOW this projection and rely on the projection staying narrow
+    (no shuffle/join/agg between rows) so the output keeps the input
+    order. If a future change adds a wide step here, the presentation
+    order breaks silently — tests/test_order_preservation.py gates
+    this."""
+    slim = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+    cols = ("n_tokens", "type_token_ratio", "top_token_frac", "top_bigram_frac")
+    return _with_repetition(slim, "_text").select(
+        "doc_id", *[F.col(f"_{c}").alias(c) for c in cols]
     )
 
 
@@ -368,12 +358,7 @@ def hashed_linear_score(
     nb = int(n_buckets)
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "\\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("tok"),
+        F.explode(_tokens(F.col(text_col))).alias("tok"),
     )
     from .dedup import _h32
 

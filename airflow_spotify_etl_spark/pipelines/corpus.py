@@ -10,11 +10,12 @@ does — cheapest filter first, each stage shrinking the next stage's input:
 
 Stage costs at scale (why this order):
 1. quality gate      — narrow projection + filter, scan speed.
-2. repetition gate   — per-doc token aggregates (Gopher-style TTR /
-   top-fraction cuts); one doc-keyed shuffle, drops templated mass
-   BEFORE the dedup tiers would waste candidate work on it.
+2. repetition gate   — per-doc token statistics (Gopher-style TTR /
+   top-fraction cuts) as a row-local filter, no shuffle; drops templated
+   mass BEFORE the dedup tiers would waste candidate work on it.
 3. language ID       — explode + broadcast-join + per-doc agg.
-4. exact dedup       — one skew-free shuffle on md5(text).
+4. exact dedup       — one skew-free shuffle on md5(text); the
+   deduplicated count rides the frontier checkpoint as an Observation.
 5. MinHash near-dedup— the LSH banding path; runs on the ALREADY exact-
    deduped survivors, so boilerplate mass is gone before the joins.
 6. stratified mixing — deterministic hash down-sampling per language to
@@ -23,8 +24,8 @@ Stage costs at scale (why this order):
    pruning (per-language training mixes read only their slice).
 
 Every stage is an operator this repo oracle-checks individually
-(q18/q45/q20/q21/q25/q47/q23); this module is their composition, tested
-end-to-end in tests/test_corpus_pipeline.py.
+(q18/q45/q29/q142/q20/q21/q25/q47/q23); this module is their
+composition, tested end-to-end in tests/test_corpus_pipeline.py.
 """
 
 from __future__ import annotations
@@ -32,11 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _checkpoint_observing
 from ..operators.dedup import connected_components, exact_dedup, minhash_lsh_pairs
-from ..operators.text import fit_lang_profiles, predict_lang
+from ..operators.text import _STOPWORDS, _with_repetition, fit_lang_profiles, predict_lang
 from ..sinks.writers import summary_record, summary_record_observed
 
-__all__ = ["quality_filter", "run_corpus_pipeline"]
+__all__ = ["quality_filter", "repetition_filter", "run_corpus_pipeline"]
 
 
 def quality_filter(
@@ -53,8 +55,7 @@ def quality_filter(
     n_words = F.size(words)
     n_chars = F.length(text_col)
     n_alpha = F.length(F.regexp_replace(F.col(text_col), "[^A-Za-z0-9]", ""))
-    stop = F.array(*[F.lit(s) for s in
-                     ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]])
+    stop = F.array(*[F.lit(s) for s in _STOPWORDS])
     n_stop = F.size(F.filter(words, lambda x: F.array_contains(stop, x)))
     return docs.filter(
         (n_words >= min_words)
@@ -73,14 +74,12 @@ def repetition_filter(
     """Stage-2 gate: drop template/spam mass by repetition signals
     (operators/text.repetition_metrics as predicates — the Gopher cuts).
     Runs BEFORE the dedup tiers so their band buckets never fill with the
-    degenerate docs these thresholds remove."""
-    from ..operators.text import repetition_metrics
-
-    keep = repetition_metrics(docs, text_col, id_col).filter(
-        (F.col("type_token_ratio") >= min_type_token_ratio)
-        & (F.col("top_token_frac") <= max_top_token_frac)
-    ).select("doc_id")
-    return docs.join(keep, "doc_id", "left_semi")
+    degenerate docs these thresholds remove. Row-local: each row is kept
+    or dropped on its own text, so ``id_col`` plays no part."""
+    return _with_repetition(docs, text_col).filter(
+        (F.col("_type_token_ratio") >= min_type_token_ratio)
+        & (F.col("_top_token_frac") <= max_top_token_frac)
+    ).drop("_n_tokens", "_type_token_ratio", "_top_token_frac", "_top_bigram_frac")
 
 
 def run_corpus_pipeline(
@@ -139,9 +138,9 @@ def run_corpus_pipeline(
     # 4. exact dedup — keep the lowest doc_id per identical text.
     keepers = exact_dedup(clean).select(F.col("keeper").alias("doc_id"))
     uniq = clean.join(keepers, "doc_id", "left_semi")
-    # Materialize once: stages 4-6 all re-read this frontier.
-    uniq = uniq.localCheckpoint(eager=True)
-    n_exact = uniq.count()
+    # Materialize once: stages 4-6 all re-read this frontier. Its row
+    # count rides the checkpoint's own job.
+    uniq, n_exact = _checkpoint_observing(uniq, F.count(F.lit(1)))
 
     # 5. near-dedup — LSH candidates + candidate-only verification on the
     # exact-deduped survivors, resolved into CLUSTERS (near-dup relations

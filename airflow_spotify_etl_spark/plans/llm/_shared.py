@@ -7,10 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ...operators.text import _STOPWORDS  # noqa: F401  (the plans' stopword list)
 from ...sources.files import load_table
-
-# Tiny deterministic stopword list used by both engines.
-_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
 
 def _build_concurrently(builders):

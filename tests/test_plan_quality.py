@@ -111,6 +111,41 @@ def test_minhash_verify_joins_only_candidates(spark, sf_dir):
     assert optimized.count("Join Inner, (shingle") <= 1
 
 
+def test_corpus_frontier_steps_are_row_local(spark, sf_dir):
+    """The corpus frontier's per-document steps must not join a per-doc
+    frame back onto the documents: the two gates filter in place (one
+    scan, no join), the profile fit takes each language's total without a
+    join, and lang-ID scores every doc with no window and at most one
+    non-broadcast join over at most two scans."""
+    import re
+
+    from airflow_spotify_etl_spark.operators.text import (
+        fit_lang_profiles,
+        predict_lang,
+    )
+    from airflow_spotify_etl_spark.pipelines.corpus import (
+        quality_filter,
+        repetition_filter,
+    )
+    from airflow_spotify_etl_spark.sources.files import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    gates = _final_plan(repetition_filter(quality_filter(docs)))
+    assert gates.count("FileScan parquet") == 1
+    assert "Join" not in gates
+
+    profiles = fit_lang_profiles(docs)
+    assert "Join" not in _final_plan(profiles)
+
+    # A checkpointed fit, so the plan holds only predict_lang's own work.
+    plan = _final_plan(predict_lang(docs, profiles.localCheckpoint()))
+    assert plan.count("FileScan parquet") + plan.count("Scan ExistingRDD") <= 2
+    assert "Window" not in plan
+    joins = re.findall(r"\b\w+Join\b|\bCartesianProduct\b", plan)
+    assert joins, "predict_lang must broadcast-join the profiles"
+    assert sum(not j.startswith("Broadcast") for j in joins) <= 1, joins
+
+
 def test_quality_report_is_one_aggregate_pass(spark, sf_dir):
     from airflow_spotify_etl_spark.operators.quality import quality_report
     from airflow_spotify_etl_spark.sources.files import load_table

@@ -35,6 +35,35 @@ def test_lang_id_beats_chance(spark, sf_dir):
     assert preds.count() == docs.count()  # every doc classified
 
 
+def test_predict_lang_closed_form(spark):
+    """NB scores on a literal model: score = Σ matched weights − 18 per
+    unmatched token; a score tie goes to the lower lang; a doc matching no
+    profile, or with no tokens (NULL or empty text), gets pred_lang null,
+    n_matched 0 and the floor-only score n_tokens · −18; every doc
+    appears exactly once."""
+    profiles = spark.createDataFrame(
+        [("de", "x", -2.0), ("en", "y", -2.0), ("en", "a", -0.5), ("de", "b", -0.25)],
+        "lang string, gram string, weight double",
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "X y"),          # de and en both score -2 - 18 = -20 → de
+            (2, "zzz qqq  www"),  # no profile token
+            (3, None),
+            (4, ""),
+            (5, "a A b"),        # en -19.0 (2 matched) beats de -36.25
+        ],
+        "doc_id long, text string",
+    )
+    rows = predict_lang(docs, profiles).collect()
+    assert sorted(r.doc_id for r in rows) == [1, 2, 3, 4, 5]
+    got = {r.doc_id: (r.pred_lang, r.score, r.n_matched) for r in rows}
+    assert got[1] == ("de", -20.0, 1)
+    assert got[2] == (None, 3 * -18.0, 0)
+    assert got[3] == (None, 0.0, 0) and got[4] == (None, 0.0, 0)
+    assert got[5] == ("en", -19.0, 2)
+
+
 def test_repetition_metrics_closed_form(spark):
     from airflow_spotify_etl_spark.operators.text import repetition_metrics
 
