@@ -10,6 +10,23 @@ from airflow_spotify_etl_spark.session import get_spark
 SF0001 = "/root/testdata/sf0.001"
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _driver_without_archive(tmp_path_factory):
+    """Start every test driver, in this process and in its children, the
+    way it starts without the class-data archive (session.py): point
+    ``XDG_CACHE_HOME`` at a per-session cache in which the engine's
+    directory is a file. A test run then neither trains the archive that
+    later runs on the host start from nor pays its dump at exit.
+    ``tests/test_session.py`` trains and uses its own archives in
+    ``tmp_path``."""
+    cache = tmp_path_factory.mktemp("xdg-cache")
+    (cache / "airflow_spotify_etl_spark").write_text("")
+    mp = pytest.MonkeyPatch()
+    mp.setenv("XDG_CACHE_HOME", str(cache))
+    yield
+    mp.undo()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests")
@@ -163,6 +180,8 @@ _SLOW_TESTS = {
     "test_r9_suite.py::test_delay_curve_monitor_equals_batch_q378",
     "test_r9_suite.py::test_q377_perfect_agreement",
     "test_r9_suite.py::test_q377_reversed_rankings",
+    "test_session.py::test_first_run_trains_and_second_run_uses_the_archive",
+    "test_session.py::test_garbage_archive_is_rejected_deleted_and_the_run_correct",
     "test_similarity.py::test_embedding_drift_identical_and_shifted_snapshots",
     "test_similarity.py::test_ivf_pq_probe_all_equals_plain_adc",
     "test_similarity.py::test_pq_adc_is_reconstruction_dot_and_beats_chance",
