@@ -4,13 +4,14 @@ Four tiers, cheapest-first — a production pipeline composes them left to
 right so each stage prunes the candidate space for the next:
 
 1. ``exact_dedup``        — md5-groupBy; uniform hash key, skew-free shuffle.
-2. ``ngram_jaccard_pairs``— EXACT word-n-gram Jaccard via a shingle
-   self-join. Quadratic only within shingle buckets; correct but the most
-   expensive tier (oracle-checkable — plans/llm/dedup.py q24).
+2. ``ngram_jaccard_pairs``— EXACT word-n-gram Jaccard: pairs are expanded
+   inside capped shingle buckets with no join. Quadratic only within a
+   bucket; correct but the most expensive tier (oracle-checkable —
+   plans/llm/dedup.py q24).
 3. ``minhash_lsh_pairs``  — MinHash signatures + LSH banding: candidate
-   pairs meet in band buckets (equi-join), then exact-Jaccard verification
-   of candidates only. THE scale path: shuffle volume is O(docs × bands),
-   never O(docs²).
+   pairs are expanded inside capped band buckets (no join), then
+   exact-Jaccard verification of candidates only. THE scale path: shuffle
+   volume is O(docs × bands), never O(docs²).
 4. ``simhash_pairs``      — 64-bit SimHash + block blocking + Hamming
    radius; cheapest signature, coarsest recall.
 
@@ -18,9 +19,15 @@ All hashing uses Spark built-ins (crc32 / xxhash64 / pmod) inside
 whole-stage codegen — no Python UDFs anywhere.
 
 Skew note: a shingle shared by thousands of docs (boilerplate) creates a hot
-bucket in tiers 2-3. ``max_bucket`` drops buckets above the cap — standard
+bucket in tiers 2-4. ``max_bucket`` drops buckets above the cap — standard
 practice (boilerplate shingles carry no dedup signal) and what keeps the
-self-join bounded at 100 TB.
+quadratic in-bucket pair expansion bounded at 100 TB.
+
+Each plan fragment the tiers share is written once: the token rule
+(``text._tokens``), the word-span stream (``_word_spans``), the capped
+bucket count (``_capped``), the sized-set overlap (``_sized_sets``,
+``_set_overlap``, ``_jaccard_tail``), the banding (``_banded``) and the
+bucket-to-pairs expansion (``_bucket_pairs``).
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .graph import _directed_double
+from .text import _tokens, normalize_text
 
 __all__ = [
     "exact_dedup",
@@ -102,8 +110,6 @@ def canonical_dedup(
     all NULL-text docs share one NULL-keyed window group (one keeper) but
     are excluded from ``n_canonical`` (COUNT DISTINCT skips NULL), the
     identical convention in both engines."""
-    from .text import normalize_text
-
     n = df.select(
         F.col(id_col),
         F.col(group_col),
@@ -119,6 +125,80 @@ def canonical_dedup(
             F.count(F.when(F.col(id_col) == F.col("keeper"), 1)).alias("n_kept"),
         )
         .orderBy(group_col)
+    )
+
+
+def _word_spans(
+    base: DataFrame, n_spans: Column, width: int, stride: int
+) -> DataFrame:
+    """(doc_id, wi, wh): for each ``wi`` in [0, ``n_spans``), the md5 of
+    the doc's words ``wi·stride + 1`` to ``wi·stride + width`` (1-based,
+    space-joined) of ``base``'s ``_w`` column. ``n_spans`` is the caller's
+    span count over ``_w`` (≤ 0 gives no span). The one word-span stream
+    of the chunk, window and winnowing operators: a shuffle-free
+    sequence-explode whose only output besides the ids is the 128-bit
+    hash, so the span text never rides a shuffle."""
+    n = n_spans.cast("int")
+    idx = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
+        F.array().cast("array<int>")
+    )
+    span = F.slice(F.col("_w"), F.col("wi") * stride + 1, width)
+    return base.select("doc_id", "_w", F.explode(idx).alias("wi")).select(
+        "doc_id", "wi", F.md5(F.array_join(span, " ")).alias("wh")
+    )
+
+
+def _words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, _w): each doc's words under the one token rule."""
+    return df.select(F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("_w"))
+
+
+def _chunk_rebuild(
+    df: DataFrame,
+    id_col: str,
+    base: DataFrame,
+    marked: DataFrame,
+    cw: int,
+    counter: str,
+    counted: Column,
+) -> DataFrame:
+    """(doc_id, n_chunks, ``counter``, text_clean) for EVERY doc of
+    ``df``: ``marked``'s (doc_id, wi, keep) chunks rolled up per doc, with
+    ``counter`` the number of chunks where ``counted`` holds, and the
+    surviving text rebuilt by re-slicing ``base``'s word array at the kept
+    chunk indices — one doc_id-keyed join (uniform key) that shares the
+    per-doc aggregate's partitioning. A doc with no chunk reports zeros
+    and an empty text."""
+    per_doc = marked.groupBy("doc_id").agg(
+        F.count("*").alias("n_chunks"),
+        F.sum(counted.cast("long")).alias(counter),
+        F.array_sort(
+            F.collect_list(F.when(F.col("keep"), F.col("wi")))
+        ).alias("_kept_ci"),
+    )
+    rebuilt = base.join(per_doc, "doc_id").select(
+        "doc_id",
+        "n_chunks",
+        counter,
+        F.array_join(
+            F.transform(
+                F.col("_kept_ci"),
+                lambda ci: F.array_join(
+                    F.slice(F.col("_w"), ci * cw + 1, cw), " "
+                ),
+            ),
+            " ",
+        ).alias("text_clean"),
+    )
+    return (
+        df.select(F.col(id_col).alias("doc_id"))
+        .join(rebuilt, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
+            F.coalesce(counter, F.lit(0)).alias(counter),
+            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
+        )
     )
 
 
@@ -147,56 +227,14 @@ def chunk_dedup(
     text is rebuilt afterwards by re-slicing each doc's word array: one
     doc_id-keyed join (uniform key) against the kept chunk indices, which
     shares the per-doc aggregate's partitioning."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-    n_chunks = F.ceil(F.size("_w") / F.lit(float(chunk_words))).cast("int")
-    idx = F.when(n_chunks >= 1, F.sequence(F.lit(0), n_chunks - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
     cw = int(chunk_words)
-    chunk_of = f"array_join(slice(_w, _ci * {cw} + 1, {cw}), ' ')"
-    # Narrow chunk stream: (md5(chunk), doc_id, ci). 128-bit hash ≡ chunk
+    base = _words(df, text_col, id_col)
+    # Narrow chunk stream: (doc_id, wi, md5(chunk)). 128-bit hash ≡ chunk
     # identity for dedup purposes; the text is recomputed at rebuild.
-    chunks = base.select("doc_id", "_w", F.explode(idx).alias("_ci")).select(
-        "doc_id",
-        F.col("_ci").alias("ci"),
-        F.md5(F.expr(chunk_of)).alias("ch"),
-    )
-    w = W.partitionBy("ch").orderBy("doc_id", "ci")
+    chunks = _word_spans(base, F.ceil(F.size("_w") / cw), cw, cw)
+    w = W.partitionBy("wh").orderBy("doc_id", "wi")
     marked = chunks.withColumn("keep", F.row_number().over(w) == 1)
-    per_doc = marked.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.array_sort(
-            F.collect_list(F.when(F.col("keep"), F.col("ci")))
-        ).alias("_kept_ci"),
-    )
-    rebuilt = base.join(per_doc, "doc_id").select(
-        "doc_id",
-        "n_chunks",
-        "n_kept",
-        F.array_join(
-            F.transform(
-                F.col("_kept_ci"),
-                lambda ci: F.array_join(
-                    F.slice(F.col("_w"), ci * cw + 1, cw), " "
-                ),
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
+    return _chunk_rebuild(df, id_col, base, marked, cw, "n_kept", F.col("keep"))
 
 
 def boilerplate_excision(
@@ -226,57 +264,15 @@ def boilerplate_excision(
     frequency relation (a boilerplate hot key joins against its ONE
     frequency row — no multiplication). Rebuild is the shared
     re-slicing join keyed on doc_id, a uniform key."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-    n_chunks = F.ceil(F.size("_w") / F.lit(float(chunk_words))).cast("int")
-    idx = F.when(n_chunks >= 1, F.sequence(F.lit(0), n_chunks - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
     cw = int(chunk_words)
-    chunk_of = f"array_join(slice(_w, _ci * {cw} + 1, {cw}), ' ')"
-    chunks = base.select("doc_id", "_w", F.explode(idx).alias("_ci")).select(
-        "doc_id",
-        F.col("_ci").alias("ci"),
-        F.md5(F.expr(chunk_of)).alias("ch"),
-    )
-    freq = chunks.groupBy("ch").agg(
-        F.countDistinct("doc_id").alias("_df")
-    )
-    marked = chunks.join(freq, "ch").withColumn(
+    base = _words(df, text_col, id_col)
+    chunks = _word_spans(base, F.ceil(F.size("_w") / cw), cw, cw)
+    freq = chunks.groupBy("wh").agg(F.countDistinct("doc_id").alias("_df"))
+    marked = chunks.join(freq, "wh").withColumn(
         "keep", F.col("_df") < int(min_docs)
     )
-    per_doc = marked.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_removed"),
-        F.array_sort(
-            F.collect_list(F.when(F.col("keep"), F.col("ci")))
-        ).alias("_kept_ci"),
-    )
-    rebuilt = base.join(per_doc, "doc_id").select(
-        "doc_id",
-        "n_chunks",
-        "n_removed",
-        F.array_join(
-            F.transform(
-                F.col("_kept_ci"),
-                lambda ci: F.array_join(
-                    F.slice(F.col("_w"), ci * cw + 1, cw), " "
-                ),
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
+    return _chunk_rebuild(
+        df, id_col, base, marked, cw, "n_removed", ~F.col("keep")
     )
 
 
@@ -321,22 +317,11 @@ def span_dup_profile(
     large relations."""
     wv = int(window_words)
     sv = int(stride)
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-    n_pos = F.when(
-        F.size("_w") >= wv,
-        ((F.size("_w") - F.lit(wv)) / F.lit(sv)).cast("int") + 1,
-    ).otherwise(F.lit(0))
-    idx = F.when(n_pos >= 1, F.sequence(F.lit(0), n_pos - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    span_of = f"array_join(slice(_w, _wi * {sv} + 1, {wv}), ' ')"
-    wins = base.select("doc_id", "_w", F.explode(idx).alias("_wi")).select(
-        "doc_id",
-        F.col("_wi").alias("wi"),
-        F.md5(F.expr(span_of)).alias("wh"),
+    wins = _word_spans(
+        _words(df, text_col, id_col),
+        F.floor((F.size("_w") - wv) / sv) + 1,
+        wv,
+        sv,
     )
     cnt = F.count("*").over(W.partitionBy("wh"))
     marked = wins.withColumn("dup", cnt > 1)
@@ -409,25 +394,11 @@ def span_excise(
     co-partitioned anti-join of the token stream against that removal
     set, both keyed (doc_id, pos) — uniform keys, linear everywhere."""
     wv = int(window_words)
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
+    base = _words(df, text_col, id_col)
     toks = base.select(
         "doc_id", F.posexplode("_w").alias("pos", "tok")
     )  # pos 0-based
-    n_pos = F.when(
-        F.size("_w") >= wv, F.size("_w") - F.lit(wv) + 1
-    ).otherwise(F.lit(0))
-    idx = F.when(n_pos >= 1, F.sequence(F.lit(0), n_pos - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    span_of = f"array_join(slice(_w, _wi + 1, {wv}), ' ')"
-    wins = base.select("doc_id", "_w", F.explode(idx).alias("_wi")).select(
-        "doc_id",
-        F.col("_wi").alias("wi"),
-        F.md5(F.expr(span_of)).alias("wh"),
-    )
+    wins = _word_spans(base, F.size("_w") - wv + 1, wv, 1)
     first = F.row_number().over(W.partitionBy("wh").orderBy("doc_id", "wi"))
     losers = wins.withColumn("rn", first).filter(F.col("rn") > 1)
     removed = losers.select(
@@ -568,21 +539,8 @@ def winnowed_fingerprints(
     """
     wv = int(window_words)
     kv = int(winnow_k)
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit("")
-    )
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
-    n_pos = F.when(
-        F.size("_w") >= wv, F.size("_w") - F.lit(wv) + 1
-    ).otherwise(F.lit(0))
-    idx = F.when(n_pos >= 1, F.sequence(F.lit(0), n_pos - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    span_of = f"array_join(slice(_w, _wi + 1, {wv}), ' ')"
-    wins = base.select("doc_id", "_w", F.explode(idx).alias("_wi")).select(
-        "doc_id",
-        F.col("_wi").alias("wi"),
-        F.md5(F.expr(span_of)).alias("wh"),
+    wins = _word_spans(
+        _words(df, text_col, id_col), F.size("_w") - wv + 1, wv, 1
     )
     key = F.concat(
         F.col("wh"), F.lit(":"), F.lpad(F.col("wi").cast("string"), 12, "0")
@@ -685,13 +643,42 @@ def shingle(
     return out.distinct() if distinct else out
 
 
-def _sized_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int, max_bucket: int | None
+def _capped(rel: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """``rel`` with ``_bucket_n``, the number of rows in each row's
+    ``keys`` bucket, counted by a window (so a following groupBy on the
+    same keys reuses its partitioning), and buckets above ``cap`` dropped
+    (no cap when ``cap`` is None or 0). The one hot-bucket cap of the
+    shingle, band and block tiers: a bucket above the cap is boilerplate
+    or near-constant signatures, carries no dedup signal, and would cost
+    C(bucket, 2) pairs."""
+    out = rel.withColumn("_bucket_n", F.count("*").over(W.partitionBy(*keys)))
+    return out.filter(F.col("_bucket_n") <= cap) if cap else out
+
+
+def _bucket_pairs(
+    buckets: DataFrame, keys: list[str], member: Column, a: str, b: str
 ) -> DataFrame:
-    """(doc_id, shingle, n_shingles, _bucket_n) rows with BOTH pruning
-    counters attached in-row — no side tables, so downstream never joins
-    doc sizes back in (a size join invites the planner to broadcast a
-    misestimated pair aggregate; at 50k-doc stress that OOMed the driver).
+    """(``a``, ``b``): every pair of ``member`` values that share a
+    ``keys`` bucket of ``buckets``, once, with a < b — the join-free
+    expansion (collect_list per bucket, then a double explode). A struct
+    member orders by its first field, the id, which is unique within a
+    bucket. Callers pass capped buckets (see ``_capped``) so every
+    collected array is bounded; the pair list may repeat across buckets."""
+    ids = buckets.groupBy(*keys).agg(F.collect_list(member).alias("ids"))
+    return (
+        ids.select(F.explode("ids").alias(a), "ids")
+        .select(a, F.explode("ids").alias(b))
+        .filter(F.col(a) < F.col(b))
+    )
+
+
+def _sized_sets(items: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_id, shingle, n_shingles, _bucket_n) from any (doc_id, shingle)
+    item relation (word n-grams here, payload block hashes in
+    operators/multimodal), with BOTH pruning counters attached in-row —
+    no side tables, so downstream never joins doc sizes back in (a size
+    join invites the planner to broadcast a misestimated pair aggregate;
+    at 50k-doc stress that OOMed the driver).
 
     TWO shuffles for the whole phase:
     1. ``groupBy(doc_id).collect_set`` over the narrow shingle stream —
@@ -708,20 +695,60 @@ def _sized_shingles(
       candidate generation; Jaccard denominators stay the doc's true
       distinct-shingle count. The oracle mirrors this (plans/llm/dedup.py).
     """
-    sh = (
-        shingle(df, text_col, id_col, n, distinct=False)
-        .groupBy("doc_id")
+    sized = (
+        items.groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("_shs"))
         .select(
             "doc_id",
             F.size("_shs").alias("n_shingles"),
             F.explode("_shs").alias("shingle"),
         )
-        .withColumn("_bucket_n", F.count("*").over(W.partitionBy("shingle")))
     )
-    if max_bucket:
-        sh = sh.filter(F.col("_bucket_n") <= max_bucket)
-    return sh
+    return _capped(sized, ["shingle"], max_bucket)
+
+
+def _sized_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_bucket: int | None
+) -> DataFrame:
+    """``_sized_sets`` over the docs' word ``n``-gram shingles."""
+    return _sized_sets(shingle(df, text_col, id_col, n, distinct=False), max_bucket)
+
+
+def _set_overlap(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, na, nb) for every doc pair sharing ≥ 1
+    item of a ``_sized_sets`` relation: ``inter`` items in common, and
+    both set sizes. Singleton buckets exit before the expansion (they
+    cannot form a pair); the sizes ride inside the bucket structs, so
+    the same grouped count that yields the intersection yields the
+    denominators, with no size join-back."""
+    pairs = _bucket_pairs(
+        sh.filter(F.col("_bucket_n") >= 2),
+        ["shingle"],
+        F.struct("doc_id", "n_shingles"),
+        "a",
+        "b",
+    )
+    return pairs.groupBy(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).agg(
+        F.count("*").alias("inter"),
+        F.min("a.n_shingles").alias("na"),
+        F.min("b.n_shingles").alias("nb"),
+    )
+
+
+def _jaccard_tail(inter: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, inter, na, nb, jaccard): the set-overlap pairs
+    whose Jaccard, inter / (na + nb − inter) rounded to 4 places, reaches
+    ``threshold`` — the one pair rule of every Jaccard tier."""
+    return (
+        inter.withColumn(
+            "jaccard",
+            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -749,31 +776,7 @@ def ngram_jaccard_pairs(
     rebuilding it per tier."""
     if sh is None:
         sh = _sized_shingles(df, text_col, id_col, n, max_bucket)
-    buckets = (
-        sh.filter(F.col("_bucket_n") >= 2)
-        .groupBy("shingle")
-        .agg(F.collect_list(F.struct("doc_id", "n_shingles")).alias("ids"))
-    )
-    expanded = (
-        buckets.select(F.explode("ids").alias("a"), "ids")
-        .select("a", F.explode("ids").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    inter = expanded.groupBy(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    ).agg(
-        F.count("*").alias("inter"),
-        F.min("a.n_shingles").alias("na"),
-        F.min("b.n_shingles").alias("nb"),
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
-    )
+    return _jaccard_tail(_set_overlap(sh), threshold)
 
 
 def containment_pairs(
@@ -797,24 +800,7 @@ def containment_pairs(
     Scale shape: identical to ngram_jaccard_pairs — the join-free
     capped bucket expansion (hot boilerplate shingles dropped at
     ``max_bucket``), one grouped pair count, no self-join anywhere."""
-    sh = _sized_shingles(df, text_col, id_col, n, max_bucket)
-    buckets = (
-        sh.filter(F.col("_bucket_n") >= 2)
-        .groupBy("shingle")
-        .agg(F.collect_list(F.struct("doc_id", "n_shingles")).alias("ids"))
-    )
-    expanded = (
-        buckets.select(F.explode("ids").alias("a"), "ids")
-        .select("a", F.explode("ids").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    inter = expanded.groupBy(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    ).agg(
-        F.count("*").alias("inter"),
-        F.min("a.n_shingles").alias("na"),
-        F.min("b.n_shingles").alias("nb"),
-    )
+    inter = _set_overlap(_sized_shingles(df, text_col, id_col, n, max_bucket))
     return (
         inter.filter(
             (100 * F.col("inter") >= int(containment_pct) * F.least("na", "nb"))
@@ -1005,25 +991,34 @@ def minhash_lsh_pairs(
 
 
 def _banded(
+    rel: DataFrame, cols: list[str], band_arr: Column, max_band_bucket: int | None
+) -> DataFrame:
+    """(*cols, band, bh, _bucket_n): one row per element of each row's
+    ``band_arr`` (its position is the band, its value the band hash),
+    with each (band, bh) bucket's population from a window. Buckets above
+    ``max_band_bucket`` and singletons (no pair to form) are dropped. The
+    one banding of the MinHash, SimHash and hyperplane LSH tiers and of
+    the MinHash delta probe."""
+    banded = _capped(
+        rel.select(*cols, F.posexplode(band_arr).alias("band", "bh")),
+        ["band", "bh"],
+        max_band_bucket,
+    )
+    return banded.filter(F.col("_bucket_n") >= 2)
+
+
+def _minhash_bands(
     sig: DataFrame, bands: int, r: int, max_band_bucket: int | None
 ) -> DataFrame:
-    """(doc_id, band, bh, _bucket_n): each doc's ``bands`` band hashes
-    (xxhash64 of r consecutive signature values), with each bucket's
-    population from a window. Buckets above ``max_band_bucket`` and
-    singletons (no pair to form) are dropped. The one banding shared by
-    the full self-pairs expansion and the delta probe."""
+    """``_banded`` over a (doc_id, sig) MinHash relation: band b hashes
+    (xxhash64) the r signature values from b·r on."""
     band_arr = F.array(
         *[
             F.xxhash64(F.concat_ws(",", *[F.col("sig")[b * r + j].cast("string") for j in range(r)]))
             for b in range(bands)
         ]
     )
-    banded = sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band", "bh")
-    ).withColumn("_bucket_n", F.count("*").over(W.partitionBy("band", "bh")))
-    if max_band_bucket:
-        banded = banded.filter(F.col("_bucket_n") <= max_band_bucket)
-    return banded.filter(F.col("_bucket_n") >= 2)
+    return _banded(sig, ["doc_id"], band_arr, max_band_bucket)
 
 
 def _band_candidates(
@@ -1034,17 +1029,13 @@ def _band_candidates(
     ``minhash_lsh_pairs``, factored out so sweep queries (q170) can
     band ONE cached signature pass several ways instead of recomputing
     the k minhashes per arm."""
-    buckets = (
-        _banded(sig, bands, r, max_band_bucket)
-        .groupBy("band", "bh")
-        .agg(F.collect_list("doc_id").alias("ids"))
-    )
-    return (
-        buckets.select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(
+        _minhash_bands(sig, bands, r, max_band_bucket),
+        ["band", "bh"],
+        F.col("doc_id"),
+        "doc_a",
+        "doc_b",
+    ).distinct()
 
 
 def _jaccard_verify(
@@ -1086,14 +1077,7 @@ def _jaccard_verify(
             F.min("nb").alias("nb"),
         )
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
-    )
+    return _jaccard_tail(inter, threshold)
 
 
 def minhash_lsh_pairs_delta(
@@ -1125,7 +1109,7 @@ def minhash_lsh_pairs_delta(
     full = corpus.unionByName(delta)
     r = k // bands
     sig = minhash_signatures(full, text_col, id_col, k, n)
-    banded = _banded(sig, bands, r, max_band_bucket)
+    banded = _minhash_bands(sig, bands, r, max_band_bucket)
     delta_ids = delta.select(F.col(id_col).alias("doc_id")).distinct()
     banded_delta = banded.join(delta_ids, "doc_id", "left_semi")
     probe = banded_delta.select(
@@ -1213,20 +1197,11 @@ def simhash_pairs(
             for i in range(blocks)
         ]
     )
-    blocked = sig.select(
-        "doc_id", "simhash", F.posexplode(block_arr).alias("blk", "bv")
-    ).withColumn("_bucket_n", F.count("*").over(W.partitionBy("blk", "bv")))
-    if max_block_bucket:
-        blocked = blocked.filter(F.col("_bucket_n") <= max_block_bucket)
-    buckets = (
-        blocked.filter(F.col("_bucket_n") >= 2)
-        .groupBy("blk", "bv")
-        .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ids"))
-    )
+    blocked = _banded(sig, ["doc_id", "simhash"], block_arr, max_block_bucket)
     return (
-        buckets.select(F.explode("ids").alias("a"), "ids")
-        .select("a", F.explode("ids").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        _bucket_pairs(
+            blocked, ["band", "bh"], F.struct("doc_id", "simhash"), "a", "b"
+        )
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

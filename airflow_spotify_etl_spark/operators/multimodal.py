@@ -35,9 +35,10 @@ import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .dedup import _h32, _jaccard_tail, _set_overlap, _sized_sets
 
 __all__ = [
     "MEDIA_KINDS",
@@ -385,18 +386,14 @@ def binary_block_pairs(
     start = _HDR_LEN + 1 if skip_header else 1
     hx = F.lower(F.hex(F.expr(f"substring({content_col}, {start}, 2147483647)")))
     hb = 2 * int(block_bytes)
-    base = media.select(F.col(id_col).alias("_id"), hx.alias("_hx"))
+    base = media.select(F.col(id_col).alias("doc_id"), hx.alias("_hx"))
     n_idx = F.ceil(F.length("_hx") / F.lit(float(hb))).cast("int")
     idx = F.when(n_idx >= 1, F.sequence(F.lit(0), n_idx - 1)).otherwise(
         F.array().cast("array<int>")
     )
-    blocks = (
-        base.select("_id", "_hx", F.explode(idx).alias("_i"))
-        .select(
-            "_id",
-            F.md5(F.expr(f"substr(_hx, _i * {hb} + 1, {hb})")).alias("bh"),
-        )
-        .distinct()
+    blocks = base.select("doc_id", "_hx", F.explode(idx).alias("_i")).select(
+        "doc_id",
+        F.md5(F.expr(f"substr(_hx, _i * {hb} + 1, {hb})")).alias("shingle"),
     )
     return _hash_set_jaccard(blocks, threshold, max_bucket)
 
@@ -404,47 +401,23 @@ def binary_block_pairs(
 def _hash_set_jaccard(
     blocks: DataFrame, threshold: float, max_bucket: int
 ) -> DataFrame:
-    """Shared Jaccard tail for the binary near-dup tiers: (_id, bh)
-    distinct hash sets → capped inverted index → join-free pair
-    expansion → one grouped intersection count → thresholded Jaccard
-    (the q24/q115 candidate discipline)."""
-    sizes = blocks.groupBy("_id").agg(F.count("*").alias("nb"))
-    sized = blocks.join(sizes, "_id")
-    inv = (
-        sized.groupBy("bh")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("_id", "nb"))).alias("ps"),
-            F.count("*").alias("df"),
-        )
-        .filter((F.col("df") >= 2) & (F.col("df") <= int(max_bucket)))
-    )
-    pair = F.expr(
-        "flatten(transform(ps, (x, ix) -> "
-        "transform(slice(ps, ix + 2, size(ps)), "
-        "y -> struct(x._id as a, y._id as b, x.nb as na, y.nb as nb))))"
-    )
-    inter = (
-        inv.select(F.explode(pair).alias("pr"))
-        .select("pr.a", "pr.b", "pr.na", "pr.nb")
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = F.round(
-        F.col("inter").cast("double")
-        / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-        4,
-    )
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= float(threshold))
-        .select(
-            F.col("a").alias("asset_a"),
-            F.col("b").alias("asset_b"),
-            "inter",
-            F.col("na").alias("blocks_a"),
-            F.col("nb").alias("blocks_b"),
-            "jaccard",
-        )
+    """Shared Jaccard tail for the binary near-dup tiers: the text tiers'
+    capped set-overlap Jaccard (operators/dedup ``_sized_sets``,
+    ``_set_overlap``, ``_jaccard_tail``) over the (doc_id, shingle)
+    block-hash rows, renamed to asset terms. Block sets are distinct per
+    asset by the sizing's collect_set, the sizes ride in the bucket
+    structs (no size join) and the pairs come from the join-free capped
+    bucket expansion."""
+    pairs = _jaccard_tail(_set_overlap(_sized_sets(blocks, max_bucket)), threshold)
+    # Set sizes are int (size of the collected set); the binary tiers
+    # report block counts as bigint.
+    return pairs.select(
+        F.col("doc_a").alias("asset_a"),
+        F.col("doc_b").alias("asset_b"),
+        "inter",
+        F.col("na").cast("long").alias("blocks_a"),
+        F.col("nb").cast("long").alias("blocks_b"),
+        "jaccard",
     )
 
 
@@ -472,51 +445,42 @@ def binary_cdc_pairs(
     pipeline — rolling boundary rule, cumulative block ids, block
     digests, capped candidate Jaccard — replays in SQL (q133).
 
-    Scale: per-asset work is one position explode (payload-length rows
-    carrying only id + 8-hex windows), a per-asset cumulative-sum
-    window on the uniform id key, and the shared capped-inverted-index
-    tail. Expected block size = ``divisor`` bytes; the hot-block cap
-    bounds the candidate space exactly as in every other tier."""
+    Scale: per-asset work is row-local — one filter over the payload's
+    byte positions picks the boundaries (an interpreted higher-order
+    function, but no exchange: blocks are cut on the row that holds the
+    payload, so nothing joins back to it), one explode of the blocks,
+    then the shared capped-inverted-index tail. Expected block size =
+    ``divisor`` bytes; the hot-block cap bounds the candidate space
+    exactly as in every other tier."""
     start = _HDR_LEN + 1 if skip_header else 1
     hx = F.lower(
         F.hex(F.expr(f"substring({content_col}, {start}, 2147483647)"))
     )
-    base = media.select(F.col(id_col).alias("_id"), hx.alias("_hx"))
     nbytes = (F.length("_hx") / 2).cast("int")
-    pos = F.explode(
-        F.when(nbytes >= 1, F.sequence(F.lit(1), nbytes)).otherwise(
-            F.array().cast("array<int>")
-        )
+
+    def cut(p):
+        # A boundary AFTER byte p (never inside the first 3 bytes) where
+        # the hash of the 4-byte window ending at p is 0 mod divisor.
+        window_hex = F.substr("_hx", 2 * p - 7, F.lit(8))
+        return F.pmod(_h32(window_hex), F.lit(int(divisor))) == 0
+
+    positions = F.when(nbytes >= 4, F.sequence(F.lit(4), nbytes)).otherwise(
+        F.array().cast("array<int>")
     )
-    p = base.select("_id", "_hx", pos.alias("_p"))
-    window_hex = F.expr("substr(_hx, 2 * _p - 7, 8)")
-    h = F.conv(F.substring(F.md5(window_hex), 1, 8), 16, 10).cast("long")
-    # a boundary AFTER byte _p (never inside the first 3 bytes)
-    flagged = p.withColumn(
-        "_b",
-        ((F.col("_p") >= 4) & (F.pmod(h, F.lit(int(divisor))) == 0)).cast(
-            "int"
-        ),
+    # A block ends at each boundary and at the last byte.
+    ends = F.array_distinct(F.concat(F.filter(positions, cut), F.array(nbytes)))
+    assets = media.select(F.col(id_col).alias("doc_id"), hx.alias("_hx")).select(
+        "doc_id", "_hx", ends.alias("_e")
     )
-    w = (
-        W.partitionBy("_id")
-        .orderBy("_p")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    assigned = flagged.withColumn(
-        "_blk", F.coalesce(F.sum("_b").over(w), F.lit(0))
-    )
-    spans = assigned.groupBy("_id", "_blk").agg(
-        F.min("_p").alias("_a"), F.max("_p").alias("_z")
-    )
+    # Block i spans bytes (end[i-1], end[i]], with end[-1] = 0; an empty
+    # payload's lone end 0 is no block.
+    prev = F.element_at(F.concat(F.array(F.lit(0)), F.col("_e")), F.col("_i") + 1)
     blocks = (
-        spans.join(base, "_id")
+        assets.select("doc_id", "_hx", "_e", F.posexplode("_e").alias("_i", "_z"))
+        .filter(F.col("_z") >= 1)
         .select(
-            "_id",
-            F.md5(
-                F.expr("substr(_hx, 2 * (_a - 1) + 1, 2 * (_z - _a + 1))")
-            ).alias("bh"),
+            "doc_id",
+            F.md5(F.substr("_hx", 2 * prev + 1, 2 * (F.col("_z") - prev))).alias("shingle"),
         )
-        .distinct()
     )
     return _hash_set_jaccard(blocks, threshold, max_bucket)

@@ -29,6 +29,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .dedup import _h32
+from .text import _tokens
 
 __all__ = ["pack_documents"]
 
@@ -47,9 +48,8 @@ def pack_documents(
     hash) and ONE window exchange on the shard key; at 1000 executors each
     shard packs independently and the window sort is bounded by shard size
     — pick n_shards >= cluster parallelism."""
-    toks = F.size(
-        F.filter(F.split(F.lower(F.col(text_col)), "\\s+"), lambda x: x != F.lit(""))
-    )
+    # NULL text keeps a NULL token array, so its count stays NULL, not 0.
+    toks = F.size(F.when(F.col(text_col).isNotNull(), _tokens(F.col(text_col))))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         toks.alias("n_tokens"),

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .dedup import _h32
+from .text import _tokens
 
 __all__ = [
     "stratified_sample",
@@ -346,12 +347,7 @@ def dsir_log_weights(
     def toks(df: DataFrame) -> DataFrame:
         t = df.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), "\\s+"),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("tok"),
+            F.explode(_tokens(F.col(text_col))).alias("tok"),
         )
         return t.withColumn("b", _h32(F.col("tok")) % nb)
 

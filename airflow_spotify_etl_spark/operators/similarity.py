@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .dedup import _banded, _bucket_pairs
+
 __all__ = [
     "cosine_topk",
     "ivf_topk",
@@ -370,9 +372,10 @@ def cosine_pairs_lsh(
     threshold. P[bit match] = 1 - angle/π, so high-cosine pairs collide in
     some band with high probability while the cross join never materializes.
 
-    Candidates come from the same capped JOIN-FREE bucket expansion as the
-    text LSH tiers (operators/dedup.py): count vectors per (band, bit-hash)
-    bucket with a window, drop buckets above ``max_band_bucket``
+    Candidates come from the text LSH tiers' own banding and capped
+    JOIN-FREE bucket expansion (operators/dedup ``_banded`` and
+    ``_bucket_pairs``): count vectors per (band, bit-hash) bucket with a
+    window, drop buckets above ``max_band_bucket``
     (near-constant vectors — e.g. zero/padding embeddings — produce one hot
     band shared by the whole degenerate mass and would expand quadratically
     while carrying no near-dup signal), prune singletons, then
@@ -412,22 +415,13 @@ def cosine_pairs_lsh(
             for b in range(bands)
         ]
     )
-    banded = sketched.select(
-        id_col, F.posexplode(band_arr).alias("band", "bh")
-    ).withColumn("_bucket_n", F.count("*").over(W.partitionBy("band", "bh")))
-    if max_band_bucket:
-        banded = banded.filter(F.col("_bucket_n") <= max_band_bucket)
-    buckets = (
-        banded.filter(F.col("_bucket_n") >= 2)
-        .groupBy("band", "bh")
-        .agg(F.collect_list(id_col).alias("ids"))
-    )
-    candidates = (
-        buckets.select(F.explode("ids").alias("vec_a"), "ids")
-        .select("vec_a", F.explode("ids").alias("vec_b"))
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .distinct()
-    )
+    candidates = _bucket_pairs(
+        _banded(sketched, [id_col], band_arr, max_band_bucket),
+        ["band", "bh"],
+        F.col(id_col),
+        "vec_a",
+        "vec_b",
+    ).distinct()
     if not verify:
         return candidates
     va = sketched.select(

@@ -295,15 +295,59 @@ def test_round4b_ops_on_empty(spark):
 
 
 def test_round4b_text_ops_with_null_text(spark):
-    """NULL text must degrade gracefully (no rows / no pairs), never
-    raise — the PERMISSIVE-read contract extends to the new text ops."""
+    """NULL, empty and all-blank text must degrade gracefully (no rows /
+    no pairs / zero counts), never raise — the PERMISSIVE-read contract
+    extends to the new text ops. The exact outputs are pinned: a token-less
+    doc reports zeros, except ``pack_documents``, whose NULL-text doc keeps
+    a NULL token count (and so NULL seq/offset)."""
     from airflow_spotify_etl_spark.operators.bpe import bpe_merge_candidates
-    from airflow_spotify_etl_spark.operators.dedup import sparse_cosine_pairs
+    from airflow_spotify_etl_spark.operators.dedup import (
+        boilerplate_excision,
+        chunk_dedup,
+        sparse_cosine_pairs,
+        span_dup_profile,
+        span_excise,
+        winnowed_dup_profile,
+    )
+    from airflow_spotify_etl_spark.operators.packing import pack_documents
+    from airflow_spotify_etl_spark.operators.sampling import dsir_log_weights
 
     rows = [(1, None, "en", "s1", 0), (2, "a b c d", "en", "s1", 7),
-            (3, "a b c d", "en", "s1", 7)]
+            (3, "a b c d", "en", "s1", 7), (4, "", "en", "s1", 0),
+            (5, "   ", "en", "s1", 3)]
     docs = spark.createDataFrame(rows, DOC_SCHEMA)
     pairs = sparse_cosine_pairs(docs, threshold=0.0).collect()
     assert {(r.doc_a, r.doc_b) for r in pairs} == {(2, 3)}
     top = bpe_merge_candidates(docs, top_k=50).collect()
     assert all(r.n_occurrences >= 1 for r in top)
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    blank = [1, 4, 5]
+    assert rows_of(chunk_dedup(docs, chunk_words=2)) == sorted(
+        [(2, 2, 2, "a b c d"), (3, 2, 0, "")] + [(i, 0, 0, "") for i in blank]
+    )
+    assert rows_of(boilerplate_excision(docs, chunk_words=2)) == sorted(
+        [(2, 2, 2, ""), (3, 2, 2, "")] + [(i, 0, 0, "") for i in blank]
+    )
+    assert rows_of(span_dup_profile(docs, window_words=2)) == sorted(
+        [(2, 3, 3, 1.0, 3), (3, 3, 3, 1.0, 3)]
+        + [(i, 0, 0, 0.0, 0) for i in blank]
+    )
+    assert rows_of(span_excise(docs, window_words=2)) == sorted(
+        [(2, 4, 0, "a b c d"), (3, 4, 4, "")] + [(i, 0, 0, "") for i in blank]
+    )
+    assert rows_of(winnowed_dup_profile(docs, window_words=2, winnow_k=2)) == sorted(
+        [(2, 2, 2, 1.0), (3, 2, 2, 1.0)] + [(i, 0, 0, 0.0) for i in blank]
+    )
+    dsir = dsir_log_weights(docs, docs.filter("doc_id = 2"), n_buckets=16)
+    assert rows_of(dsir) == sorted(
+        [(2, 4, -0.8926), (3, 4, -0.8926)] + [(i, 0, 0.0) for i in blank]
+    )
+    packed = {r.doc_id: r for r in pack_documents(docs, capacity=4, n_shards=1).collect()}
+    assert {i: r.n_tokens for i, r in packed.items()} == {1: None, 2: 4, 3: 4, 4: 0, 5: 0}
+    assert (packed[1].seq, packed[1].offset) == (None, None)
+    assert sorted((r.seq, r.offset) for i, r in packed.items() if i != 1) == [
+        (0, 0), (1, 0), (2, 0), (2, 0)
+    ]

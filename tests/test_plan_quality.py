@@ -188,6 +188,39 @@ def test_lsh_candidate_generation_is_capped_and_join_free(spark, sf_dir):
     assert "Join Cross" not in full and full.count("Join Inner") <= 2, full
 
 
+def test_set_overlap_tiers_are_capped_and_join_free(spark, sf_dir):
+    """The four set-overlap Jaccard tiers (word n-gram Jaccard and
+    containment, block-hash and content-defined-chunk binary Jaccard)
+    must share the capped sized-set overlap: no Join anywhere in the
+    plan (set sizes ride inside the bucket structs, so no size join-back;
+    pairs come from the join-free bucket expansion) and the
+    ``_bucket_n <= cap`` filter present."""
+    from airflow_spotify_etl_spark.operators.dedup import (
+        containment_pairs,
+        ngram_jaccard_pairs,
+    )
+    from airflow_spotify_etl_spark.operators.multimodal import (
+        binary_block_pairs,
+        binary_cdc_pairs,
+    )
+    from airflow_spotify_etl_spark.sources.files import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    media = spark.createDataFrame(
+        [(i, bytes(range(i, i + 64))) for i in range(4)],
+        "media_id long, content binary",
+    )
+    for df in (
+        ngram_jaccard_pairs(docs),
+        containment_pairs(docs),
+        binary_block_pairs(media),
+        binary_cdc_pairs(media),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
+        assert "_bucket_n" in plan and "<= 1000" in plan, plan
+
+
 def test_pagerank_iteration_aggregates_without_reshuffle(spark):
     """pagerank's per-iteration inflow: edges are hash-partitioned by dst
     ONCE before the loop; the rank relation joins in via broadcast, so the
