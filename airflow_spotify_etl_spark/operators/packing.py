@@ -48,8 +48,9 @@ def pack_documents(
     hash) and ONE window exchange on the shard key; at 1000 executors each
     shard packs independently and the window sort is bounded by shard size
     — pick n_shards >= cluster parallelism."""
-    # NULL text keeps a NULL token array, so its count stays NULL, not 0.
-    toks = F.size(F.when(F.col(text_col).isNotNull(), _tokens(F.col(text_col))))
+    # NULL text has a NULL count, not 0, and not size(NULL), which is -1
+    # with spark.sql.ansi.enabled=false.
+    toks = F.when(F.col(text_col).isNotNull(), F.size(_tokens(F.col(text_col))))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         toks.alias("n_tokens"),

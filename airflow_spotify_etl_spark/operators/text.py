@@ -217,9 +217,12 @@ def _with_repetition(df: DataFrame, text_col: str) -> DataFrame:
     filters on. Narrow projections only."""
 
     def _max_run(arr):
-        # max run length of a sorted array: fold (prev, run, best)
+        # max run length of a sorted array: fold (prev, run, best).
+        # sort_array is whole-stage codegen'd; array_sort's default
+        # comparator is an interpreted lambda. The arrays hold no nulls,
+        # so the two orders agree.
         return F.aggregate(
-            F.array_sort(arr),
+            F.sort_array(arr),
             F.struct(
                 F.lit(None).cast("string").alias("prev"),
                 F.lit(0).cast("long").alias("run"),

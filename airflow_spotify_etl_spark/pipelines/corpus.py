@@ -13,6 +13,11 @@ Stage costs at scale (why this order):
 2. repetition gate   — per-doc token statistics (Gopher-style TTR /
    top-fraction cuts) as a row-local filter, no shuffle; drops templated
    mass BEFORE the dedup tiers would waste candidate work on it.
+   Stages 1-2 are materialized once, in one eager checkpoint whose job is
+   the build's only scan of its input; ``docs_in`` is an Observation on
+   that input riding the same job. Lang-ID's fit and predict, its join
+   and exact dedup all read the checkpoint, so no later stage re-derives
+   the gates.
 3. language ID       — explode + broadcast-join + per-doc agg.
 4. exact dedup       — one skew-free shuffle on md5(text); the
    deduplicated count rides the frontier checkpoint as an Observation.
@@ -30,7 +35,7 @@ composition, tested end-to-end in tests/test_corpus_pipeline.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _checkpoint_observing
@@ -96,13 +101,14 @@ def run_corpus_pipeline(
 ) -> dict:
     """Full corpus build; returns a K4-style summary of per-stage attrition
     (the numbers a pipeline operator actually watches)."""
-    n_in = docs.count()
-
-    # 1. quality gate
-    clean = quality_filter(docs, min_words=min_words)
-
-    # 2. repetition gate (Gopher cuts)
-    clean = repetition_filter(clean)
+    # 1-2. quality gate, then repetition gate (Gopher cuts), materialized
+    # once: stages 3-4 re-read the gated docs four times. The input's row
+    # count rides the checkpoint's job.
+    seen = Observation()
+    counted = docs.observe(seen, F.count(F.lit(1)).alias("n"))
+    clean = repetition_filter(quality_filter(counted, min_words=min_words))
+    clean = clean.localCheckpoint(eager=True)
+    n_in = seen.get["n"]
 
     # 2b. model-based quality gate — the hashed linear classifier (q104):
     # a second-tier cut after the heuristic gates, before any shuffle-

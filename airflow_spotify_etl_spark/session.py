@@ -260,6 +260,13 @@ def get_spark(
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # Quiet, headless local runs.
         "spark.ui.enabled": "false",
+        # No Python call-site capture: with it on, PySpark wraps every
+        # Column/functions call in py4j round trips (origin set and clear,
+        # a conf read) and a Python stack walk: more than half of the
+        # round trips of a cold operation. It only adds the Python
+        # file:line to an error's query context; errors still raise, with
+        # their JVM-side context (the SQL fragment and the plan).
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.driver.extraJavaOptions": "-Dlog4j2.level=warn",
     }
     if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):

@@ -351,3 +351,25 @@ def test_round4b_text_ops_with_null_text(spark):
     assert sorted((r.seq, r.offset) for i, r in packed.items() if i != 1) == [
         (0, 0), (1, 0), (2, 0), (2, 0)
     ]
+
+
+def test_pack_documents_null_text_with_ansi_off(spark):
+    """With ANSI off, ``size(NULL)`` is -1, not NULL. A NULL-text doc must
+    still get a NULL token count, so the docs after it in its shard keep
+    their offsets: doc 2 starts the first sequence at offset 0."""
+    from airflow_spotify_etl_spark.operators.packing import pack_documents
+
+    rows = [(1, None, "en", "s1", 0), (2, "a b c d", "en", "s1", 7),
+            (3, "a b", "en", "s1", 3)]
+    docs = spark.createDataFrame(rows, DOC_SCHEMA)
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        packed = {
+            r.doc_id: (r.n_tokens, r.seq, r.offset)
+            for r in pack_documents(docs, capacity=4, n_shards=1).collect()
+        }
+    finally:
+        spark.conf.set(key, before)
+    assert packed == {1: (None, None, None), 2: (4, 0, 0), 3: (2, 1, 0)}

@@ -146,6 +146,39 @@ def test_corpus_frontier_steps_are_row_local(spark, sf_dir):
     assert sum(not j.startswith("Broadcast") for j in joins) <= 1, joins
 
 
+def test_corpus_gates_run_once(spark, sf_dir, tmp_path, monkeypatch):
+    """The corpus build gates each document once: lang-ID's fit, predict
+    and join and exact dedup read the gated checkpoint, so the query
+    checkpointed as ``uniq`` scans no parquet (each of them re-scanned
+    the input and re-ran both gates before). The repetition statistics
+    sort with the codegen'd ``sort_array``, not ``array_sort``, whose
+    default comparator is an interpreted lambda."""
+    from airflow_spotify_etl_spark.pipelines import corpus
+    from airflow_spotify_etl_spark.pipelines.corpus import (
+        quality_filter,
+        repetition_filter,
+        run_corpus_pipeline,
+    )
+    from airflow_spotify_etl_spark.sources.files import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    gates = repetition_filter(quality_filter(docs))
+    assert "array_sort(" not in gates._jdf.queryExecution().optimizedPlan().toString()
+
+    checkpointed = []
+    real = corpus._checkpoint_observing
+
+    def capture(df, metric):
+        checkpointed.append(df)
+        return real(df, metric)
+
+    monkeypatch.setattr(corpus, "_checkpoint_observing", capture)
+    summary = run_corpus_pipeline(spark, docs, str(tmp_path / "corpus"))
+    assert summary["docs_in"] == docs.count()
+    uniq = _final_plan(checkpointed[0])
+    assert "FileScan parquet" not in uniq
+
+
 def test_quality_report_is_one_aggregate_pass(spark, sf_dir):
     from airflow_spotify_etl_spark.operators.quality import quality_report
     from airflow_spotify_etl_spark.sources.files import load_table

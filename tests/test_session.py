@@ -1,4 +1,5 @@
-"""The driver JVM's class-data archive (session.archive_launch, get_spark).
+"""The driver JVM's class-data archive (session.archive_launch, get_spark),
+and the session's call-site capture setting.
 
 The fast tests drive ``archive_launch`` over a fake JDK, Spark home and
 cache, with no JVM. The slow ones run a small pipeline in child processes
@@ -230,3 +231,43 @@ def test_get_spark_returns_the_active_session_unchanged(spark):
     again = get_spark("another-app", shuffle_partitions=int(before) + 7)
     assert again is spark
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+# ---------------------------------------------------------------------------
+# Python call-site capture is off: plan building pays no per-call round trips.
+# ---------------------------------------------------------------------------
+_MINHASH_BUILD_ROUND_TRIPS = 5900  # 1.5x the 3,933 measured with capture off
+
+
+def test_call_site_capture_is_off_and_errors_still_name_the_column(spark):
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        df.select("no_such_col").collect()
+
+
+def test_building_a_plan_costs_few_py4j_round_trips(spark, monkeypatch):
+    """Building, not running, ``minhash_lsh_pairs`` must not pay py4j
+    round trips per Column call: with call-site capture on, each call
+    also sets and clears a JVM origin and reads a conf. Counted by
+    wrapping the py4j connection's ``send_command``; the second build is
+    counted so one-time lookups of the first do not enter the count."""
+    from py4j.clientserver import ClientServerConnection
+
+    from airflow_spotify_etl_spark.operators.dedup import minhash_lsh_pairs
+
+    df = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string")
+    minhash_lsh_pairs(df)
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    minhash_lsh_pairs(df)
+    monkeypatch.setattr(ClientServerConnection, "send_command", real)
+    assert sent[0] <= _MINHASH_BUILD_ROUND_TRIPS, sent[0]
