@@ -1,4 +1,4 @@
-"""Date/time scalar expressions (SURVEY.md §2.2 P5/P6; §7 hard-problem #3).
+"""Date/time scalar expressions (SURVEY.md §2.2 P5; §7 hard-problem #3).
 
 All pure Catalyst expressions — safe inside whole-stage codegen at any scale.
 """
@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["lenient_to_date", "epoch_ms_ago", "iso_date_prefix"]
+__all__ = ["lenient_to_date", "iso_date_prefix"]
 
 
 def lenient_to_date(col: Column | str) -> Column:
@@ -20,12 +20,6 @@ def lenient_to_date(col: Column | str) -> Column:
     return F.when(c.rlike(r"^\d{4}$"), F.to_date(F.concat(c, F.lit("-01-01")))).when(
         c.rlike(r"^\d{4}-\d{2}$"), F.to_date(F.concat(c, F.lit("-01")))
     ).when(c.rlike(r"^\d{4}-\d{2}-\d{2}$"), F.to_date(c)).otherwise(F.lit(None))
-
-
-def epoch_ms_ago(hours: int = 24) -> Column:
-    """Epoch-milliseconds cursor N hours back (P6 — the reference's
-    ``int(yesterday.timestamp())*1000``, spotify_etl2.py:102-104)."""
-    return F.unix_millis(F.current_timestamp() - F.expr(f"INTERVAL {hours} HOURS"))
 
 
 def iso_date_prefix(col: Column | str) -> Column:

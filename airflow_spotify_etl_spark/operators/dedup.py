@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .graph import _directed_double
+from .graph import _directed_double, _min_label_round
 from .text import _tokens, normalize_text
 
 __all__ = [
@@ -871,8 +871,9 @@ def connected_components(
 
     Shape: the directed edge double is built and materialized once
     (graph._directed_double, partitioned by ``dst`` for execution width).
-    Each round joins the labels onto the double, unions each doc's own
-    label, and takes one per-doc min, materialized by ONE eager
+    Each round is graph._min_label_round (the labels joined onto the
+    double, each doc's own label unioned in, one per-doc min, the round
+    graph.label_propagation_trajectory runs), materialized by ONE eager
     localCheckpoint that keeps the lineage O(1); the count of changed
     labels rides that checkpoint's job as an Observation, so a round is
     one Spark action. The initial labels are checkpointed lazily and
@@ -888,17 +889,8 @@ def connected_components(
     )
     n_changed = 0
     for _ in range(max_iter):
-        # Each doc's candidates: its neighbors' labels plus its own label
-        # (flagged in ``own``); the min of them is the next label.
-        candidates = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .select(F.col("src").alias("doc_id"), "component", F.lit(None).alias("own"))
-            .unionByName(labels.withColumn("own", F.col("component")))
-        )
         labels, n_changed = _checkpoint_observing(
-            candidates.groupBy("doc_id").agg(
-                F.min("component").alias("component"), F.min("own").alias("own")
-            ),
+            _min_label_round(edges, labels, "doc_id", "component"),
             F.count_if(F.col("component") < F.col("own")),
         )
         labels = labels.drop("own")

@@ -143,10 +143,12 @@ def pagerank(
 
     rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u)·w(u,v)/out_w(u) + dangling/N)
 
-    with ``dangling = Σ rank(u)`` over nodes with no out-edges. Ranks are
-    rounded to ``rank_decimals`` in the OUTPUT only (iterations run at full
-    double precision); grouped double sums commute to ~1e-16, so round-6
-    values are engine-portable (same argument as the cosine oracles).
+    with ``dangling = Σ rank(u)`` over nodes with no out-edges: the
+    personalized walk (``_pagerank_fixpoint``) with teleport 1/N on every
+    node. Ranks are rounded to ``rank_decimals`` in the OUTPUT only
+    (iterations run at full double precision); grouped double sums
+    commute to ~1e-16, so round-6 values are engine-portable (same
+    argument as the cosine oracles).
 
     ``broadcast_ranks`` picks the scale regime:
 
@@ -161,11 +163,59 @@ def pagerank(
       aggregation then pays one contributions-sized exchange on ``dst``.
       The edge relation itself still never re-partitions inside the loop.
     """
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col
-        else F.lit(1.0)
+    return _pagerank_fixpoint(
+        edges, src_col, dst_col, weight_col, damping, iters, rank_decimals,
+        broadcast_ranks, seeds_k=None,
     )
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    weight_col: str | None = None,
+    damping: float = 0.85,
+    iters: int = 5,
+    seeds_k: int = 3,
+    rank_decimals: int = 6,
+) -> DataFrame:
+    """Personalized PageRank: teleport lands on a SEED SET instead of
+    uniformly — rank'(v) = (1-d)·p(v) + d·(Σ inflow + dangling·p(v))
+    with p = 1/k on the k smallest node ids, 0 elsewhere (a
+    deterministic, relationally-derived seed set, so the oracle replays
+    it with ORDER BY node LIMIT k). The random-walk-with-restart
+    similarity used for "related items from THESE items" — the
+    recommendation/expansion counterpart of global PageRank's
+    importance; with k = N it is global PageRank. Runs ``pagerank``'s
+    fixpoint in its broadcast regime."""
+    return _pagerank_fixpoint(
+        edges, src_col, dst_col, weight_col, damping, iters, rank_decimals,
+        broadcast_ranks=True, seeds_k=int(seeds_k),
+    )
+
+
+def _pagerank_fixpoint(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    weight_col: str | None,
+    damping: float,
+    iters: int,
+    rank_decimals: int,
+    broadcast_ranks: bool,
+    seeds_k: int | None,
+) -> DataFrame:
+    """The damped random walk with teleport vector p, one loop for both
+    PageRanks: p = 1/N on every node when ``seeds_k`` is None (the empty
+    graph raises, it has no node to rank), else 1/k on the k smallest
+    node ids. rank₀ = p and
+
+        rank'(v) = (1-d)·p(v) + d·(Σ_{u→v} rank(u)·w(u,v)/out_w(u) + dangling·p(v)).
+
+    Scale shape as in the module docstring (``pagerank`` names the two
+    regimes); out-weight and p ride WITH the node-sized rank relation, so
+    the edge side joins once per iteration."""
+    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     e = (
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
@@ -173,35 +223,34 @@ def pagerank(
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
         .repartition("dst" if broadcast_ranks else "src")
+        .persist()
     )
-    e = e.persist()
     outw = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list — no nodes to rank")
-    base = (1.0 - damping) / n
-
-    # Out-weight rides WITH the rank relation (node-sized, broadcast) so the
-    # edge side never joins more than once per iteration.
+    if seeds_k is None:
+        nodes = nodes.persist()
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty edge list — no nodes to rank")
+        nodes = nodes.withColumn("p", F.lit(1.0 / n))
+    else:
+        seeds = nodes.orderBy("node").limit(seeds_k).select(F.col("node").alias("_seed"))
+        p = F.when(F.col("_seed").isNotNull(), F.lit(1.0 / seeds_k)).otherwise(F.lit(0.0))
+        nodes = (
+            nodes.join(F.broadcast(seeds), nodes.node == F.col("_seed"), "left")
+            .select("node", p.alias("p"))
+            .persist()
+        )
     ranks = nodes.join(outw, nodes.node == outw.src, "left").select(
-        "node", F.lit(1.0 / n).alias("rank"), "out_w"
+        "node", "p", F.col("p").alias("rank"), "out_w"
     )
     for _ in range(iters):
-        # Dangling mass as a LAZY broadcast scalar (1-row aggregate cross-
-        # joined in) instead of a driver-side .first() per iteration: the
-        # whole fixpoint builds as one plan with zero mid-loop driver
-        # round-trips (measured 11.7 s → fixed-overhead-free at sf0.1).
-        # Same arithmetic as the oracle: sum(rank over danglers) / N.
         dang = ranks.filter(F.col("out_w").isNull()).agg(
-            (F.coalesce(F.sum("rank"), F.lit(0.0)) / F.lit(float(n))).alias(
-                "_dpn"
-            )
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
         )
         live = ranks.filter(F.col("out_w").isNotNull())
         rank_rel = F.broadcast(live) if broadcast_ranks else live.hint("merge")
@@ -214,14 +263,15 @@ def pagerank(
             .crossJoin(F.broadcast(dang))
             .select(
                 "node",
+                "p",
                 (
-                    F.lit(base)
+                    F.lit(1.0 - damping) * F.col("p")
                     + F.lit(damping)
-                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("_dpn"))
+                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("_dm") * F.col("p"))
                 ).alias("rank"),
             )
             .join(outw, F.col("node") == outw.src, "left")
-            .select("node", "rank", "out_w")
+            .select("node", "p", "rank", "out_w")
             .localCheckpoint(eager=False)
         )
     return ranks.select(
@@ -254,12 +304,12 @@ def adamic_adar_pairs(
     itself is a self-equi-join of the capped (u, i) relation on u with
     i_a < i_b — whole-stage codegen end to end, and both join inputs hash
     to the SAME u partitioning the degree aggregate already produced, so
-    the exchanges are reused (r10 redesign: the previous collect_set +
-    nested-transform explode avoided the u-shuffle but built every pair
-    through INTERPRETED higher-order functions — measured 11.1 s vs
-    3.8 s for this form at sf0.1, byte-identical output; the shuffles it
-    saved are over the slim distinct (u, i) relation, ~2% of the pair
-    volume that dominates either plan). The score is ONE grouped sum over
+    the exchanges are reused (a collect_set + nested-transform explode
+    avoids the u-shuffle but builds every pair through INTERPRETED
+    higher-order functions — measured 11.1 s vs 3.8 s for this form at
+    sf0.1, byte-identical output; the shuffles it saves are over the
+    slim distinct (u, i) relation, ~2% of the pair volume that dominates
+    either plan). The score is ONE grouped sum over
     (i, j) with map-side combine; output is top-k bounded."""
     inter = interactions.select(
         F.col(user_col).alias("u"), F.col(item_col).alias("i")
@@ -297,6 +347,51 @@ def _pair_expr(items_col: str):
     )
 
 
+def _capped_baskets(
+    interactions: DataFrame,
+    basket_col: str,
+    item_col: str,
+    max_basket: int,
+    min_size: int = 2,
+) -> DataFrame:
+    """The capped basket universe every basket operator counts over:
+    (b, items) with ``items`` the basket's sorted distinct item array,
+    keeping baskets of ``min_size``..``max_basket`` items (the q111/q24
+    power-basket discipline: a basket that holds everything carries no
+    pairwise signal, and its expansion is the quadratic hazard)."""
+    return (
+        interactions.select(F.col(basket_col).alias("b"), F.col(item_col).alias("i"))
+        .distinct()
+        .groupBy("b")
+        .agg(F.array_sort(F.collect_set("i")).alias("items"))
+        .filter((F.size("items") >= min_size) & (F.size("items") <= int(max_basket)))
+    )
+
+
+def _pair_counts(baskets: DataFrame, min_pair_count: int) -> DataFrame:
+    """(item_a, item_b, n_ab, n_a, n_b) over a capped basket universe,
+    item_a < item_b: the join-free C(n,2) pair expansion rolled up by ONE
+    grouped count with map-side combine, shrunk by ``min_pair_count``
+    BEFORE the two single-count joins."""
+    singles = baskets.select(F.explode("items").alias("i")).groupBy("i").agg(
+        F.count("*").alias("n_i")
+    )
+    pairs = (
+        baskets.select(F.explode(_pair_expr("items")).alias("p"))
+        .select(F.col("p.a").alias("item_a"), F.col("p.b").alias("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(F.count("*").alias("n_ab"))
+        .filter(F.col("n_ab") >= int(min_pair_count))
+    )
+    return pairs.join(
+        singles.select(F.col("i").alias("item_a"), F.col("n_i").alias("n_a")),
+        "item_a",
+    ).join(
+        singles.select(F.col("i").alias("item_b"), F.col("n_i").alias("n_b")),
+        "item_b",
+    )
+
+
 def association_rules(
     interactions: DataFrame,
     basket_col: str,
@@ -313,47 +408,16 @@ def association_rules(
     singles counts, pair counts, and N all come from that one universe,
     so support/confidence/lift are mutually consistent probabilities.
 
-    Scale shape: join-free C(n,2) pair expansion (nested transform, the
-    adamic_adar path) with the per-basket cap bounding the quadratic
-    blowup; pair rollup is ONE grouped count with map-side combine; the
-    ``min_pair_count`` filter shrinks the relation BEFORE the two
-    single-count joins; output is top-k bounded on the integer lift.
-    N·n_ab outgrows BIGINT near 10⁹ baskets × 10⁹ pair count — the
-    DECIMAL casts are that ceiling."""
-    inter = interactions.select(
-        F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct()
-    baskets = (
-        inter.groupBy("b")
-        .agg(F.array_sort(F.collect_set("i")).alias("items"))
-        .filter(
-            (F.size("items") >= 2) & (F.size("items") <= int(max_basket))
-        )
-    )
+    Scale shape: the shared pair rollup (``_pair_counts``) over the
+    capped universe (``_capped_baskets``); output is top-k bounded on the
+    integer lift. N·n_ab outgrows BIGINT near 10⁹ baskets × 10⁹ pair
+    count — the DECIMAL casts are that ceiling."""
+    baskets = _capped_baskets(interactions, basket_col, item_col, max_basket)
     n_tot = baskets.agg(F.count("*").alias("n_baskets"))
-    singles = baskets.select(F.explode("items").alias("i")).groupBy("i").agg(
-        F.count("*").alias("n_i")
-    )
-    pairs = (
-        baskets.select(F.explode(_pair_expr("items")).alias("p"))
-        .select(F.col("p.a").alias("item_a"), F.col("p.b").alias("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= int(min_pair_count))
-    )
-    joined = (
-        pairs.join(
-            singles.select(F.col("i").alias("item_a"), F.col("n_i").alias("n_a")),
-            "item_a",
-        )
-        .join(
-            singles.select(F.col("i").alias("item_b"), F.col("n_i").alias("n_b")),
-            "item_b",
-        )
-        .crossJoin(F.broadcast(n_tot))
-    )
     return (
-        joined.select(
+        _pair_counts(baskets, min_pair_count)
+        .crossJoin(F.broadcast(n_tot))
+        .select(
             "item_a", "item_b", "n_ab", "n_a", "n_b",
             F.expr(
                 "cast(n_ab as decimal(19,0)) * 1000000 div n_baskets"
@@ -374,96 +438,10 @@ def association_rules(
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str | None = None,
-    damping: float = 0.85,
-    iters: int = 5,
-    seeds_k: int = 3,
-    rank_decimals: int = 6,
-) -> DataFrame:
-    """Personalized PageRank: teleport lands on a SEED SET instead of
-    uniformly — rank'(v) = (1-d)·p(v) + d·(Σ inflow + dangling·p(v))
-    with p = 1/k on the k smallest node ids, 0 elsewhere (a
-    deterministic, relationally-derived seed set, so the oracle replays
-    it with ORDER BY node LIMIT k). The random-walk-with-restart
-    similarity used for "related items from THESE items" — the
-    recommendation/expansion counterpart of global PageRank's
-    importance. Same scale shape as ``pagerank``: edges partitioned
-    once, node-sized broadcast per iteration, dangling as a lazy 1-row
-    broadcast, zero mid-loop driver round-trips."""
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .repartition("dst")
-        .persist()
-    )
-    outw = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    k = int(seeds_k)
-    seed_rel = nodes.orderBy("node").limit(k).select(
-        F.col("node").alias("_seed")
-    )
-    nodes = (
-        nodes.join(F.broadcast(seed_rel), nodes.node == F.col("_seed"), "left")
-        .select(
-            "node",
-            F.when(F.col("_seed").isNotNull(), F.lit(1.0 / k))
-            .otherwise(F.lit(0.0))
-            .alias("p"),
-        )
-        .persist()
-    )
-    ranks = nodes.join(outw, nodes.node == outw.src, "left").select(
-        "node", "p", F.col("p").alias("rank"), "out_w"
-    )
-    for _ in range(iters):
-        dang = ranks.filter(F.col("out_w").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-        )
-        live = ranks.filter(F.col("out_w").isNotNull())
-        contrib = e.join(F.broadcast(live), e.src == F.col("node")).select(
-            "dst", (F.col("rank") * F.col("w") / F.col("out_w")).alias("c")
-        )
-        inflow = contrib.groupBy("dst").agg(F.sum("c").alias("inflow"))
-        ranks = (
-            nodes.join(inflow, nodes.node == inflow.dst, "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "p",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("_dm") * F.col("p")
-                    )
-                ).alias("rank"),
-            )
-            .join(outw, F.col("node") == outw.src, "left")
-            .select("node", "p", "rank", "out_w")
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
-        "node", F.round("rank", rank_decimals).alias("rank")
-    ).orderBy("node")
-
-
 def _shuffle_partitions(df: DataFrame) -> int:
     """``spark.sql.shuffle.partitions`` as an int, falling back to
     ``defaultParallelism`` on runtimes where the conf is a non-integer
-    string (e.g. ``'auto'`` under some AQE platforms) — ADVICE r11."""
+    string (e.g. ``'auto'`` under some AQE platforms)."""
     sess = df.sparkSession
     try:
         return int(sess.conf.get("spark.sql.shuffle.partitions"))
@@ -475,24 +453,19 @@ def _directed_double(edges: DataFrame, part_key: str) -> DataFrame:
     """The directed double (src,dst) ∪ (dst,src) of an undirected edge
     list, built in ONE pass via explode (no union of two legs, so an
     expensive edge derivation upstream executes once), hash-repartitioned
-    on ``part_key`` and eagerly localCheckpointed. This folds what used to
-    be TWO up-front materializations — raw-edge checkpoint, then a
-    two-leg union + repartition + second checkpoint (the r11 shape whose
-    extra pass was the q230 regression, VERDICT r11 item 3) — into one
-    pass and one materialization.
+    on ``part_key`` and eagerly localCheckpointed: one pass and one
+    materialization for every round that follows.
 
-    The repartition is kept, but for a different reason than r11 claimed:
+    The repartition buys execution WIDTH, not a reusable partitioning:
     under AQE a localCheckpoint scan reports ``UnknownPartitioning``
-    (q218's per-round plans show it), so the per-round joins can
-    never REUSE the partitioning — its real value is execution WIDTH.
-    Without it, AQE coalesces the (small-at-bench-scale) edge derivation
-    to one or two post-shuffle partitions, the checkpointed double
-    inherits them, and every one of the 6–8 per-round jobs runs 1–2
-    tasks wide on a 32-core session (measured: q230 12.2 → 16.0 s when
-    the repartition was dropped; restored, the single-pass build keeps
-    the r12 win). At production scale the input is already wide and the
-    repartition is one edge-sized exchange folded into the one-time
-    materialization, amortized over every round."""
+    (q218's per-round plans show it), so the per-round joins can never
+    reuse it. Without it, AQE coalesces the (small-at-bench-scale) edge
+    derivation to one or two post-shuffle partitions, the checkpointed
+    double inherits them, and every one of the 6–8 per-round jobs runs
+    1–2 tasks wide on a 32-core session (measured: q230 12.2 → 16.0 s
+    when the repartition was dropped). At production scale the input is
+    already wide and the repartition is one edge-sized exchange folded
+    into the one-time materialization, amortized over every round."""
     p = _shuffle_partitions(edges)
     return (
         edges.select("a", "b")
@@ -521,20 +494,17 @@ def kcore_peel(
     surviving subgraph — which converges to the k-core (a fixed point:
     two equal consecutive rows prove convergence inside the budget).
 
-    Scale shape (r12 rewrite, guide §2.4): the graph is held as its
-    DIRECTED double (src,dst) ∪ (dst,src), built in one explode pass and
-    checkpointed once up front (_directed_double) — each undirected edge
-    contributes one row per endpoint, so the per-round degree
-    aggregation is a plain ``groupBy(src)`` over ONE scan of the double
-    (before the rewrite every round union'd both edge columns — two
-    scans of the checkpoint feeding the same exchange), and only the
+    Scale shape: the graph is held as its DIRECTED double (src,dst) ∪
+    (dst,src), built in one explode pass and checkpointed once up front
+    (_directed_double) — each undirected edge contributes one row per
+    endpoint, so the per-round degree aggregation is a plain
+    ``groupBy(src)`` over ONE scan of the double, and only the
     vertex-sized survivor set moves in the two semi-joins (broadcast
     locally, vertex-keyed shuffles at scale). ``localCheckpoint``
     truncates the lineage every round so the plan does not grow with the
-    iteration count (same discipline as pagerank/personalized_pagerank
-    above). The round budget is fixed (peeling halves fast in practice;
-    the trajectory records whether the fixed point was reached), so the
-    job graph is bounded.
+    iteration count (the pagerank discipline). The round budget is fixed
+    (peeling halves fast in practice; the trajectory records whether the
+    fixed point was reached), so the job graph is bounded.
 
     ``edges`` must be distinct undirected pairs (a < b)."""
     e = _directed_double(edges, "src")
@@ -555,11 +525,10 @@ def kcore_peel(
         keep = deg.filter(F.col("d") >= int(k)).select("src")
         # A directed row survives iff BOTH endpoints survive; the
         # surviving double is exactly the double of the peeled subgraph.
-        # eager=False (r12): the plan lineage is truncated immediately but
-        # materialization is deferred, so the fixed-budget peel needs NO
-        # mid-loop driver action — all rounds pipeline inside the final
-        # job (the pagerank discipline; the trajectory has no mid-loop
-        # convergence test to sync on).
+        # eager=False: the lineage is truncated but materialization is
+        # deferred, so the fixed-budget peel needs NO mid-loop driver
+        # action — all rounds pipeline inside the final job (the
+        # trajectory has no mid-loop convergence test to sync on).
         e = (
             e.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
@@ -578,19 +547,33 @@ def copurchase_edges(lineitem: DataFrame, max_basket: int = 100) -> DataFrame:
     (assortativity) and any future graph query must build edges HERE
     so a cap change cannot silently decouple them. Join-free
     nested-transform pair expansion; only (a, b) pairs shuffle."""
-    baskets = (
-        lineitem.select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-        )
-        .distinct()
-        .groupBy("o")
-        .agg(F.array_sort(F.collect_set("p")).alias("items"))
-        .filter((F.size("items") >= 2) & (F.size("items") <= int(max_basket)))
-    )
+    baskets = _capped_baskets(lineitem, "l_orderkey", "l_partkey", max_basket)
     return (
         baskets.select(F.explode(_pair_expr("items")).alias("pr"))
         .select(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
         .distinct()
+    )
+
+
+def _min_label_round(
+    directed: DataFrame, labels: DataFrame, node: str, label: str
+) -> DataFrame:
+    """One min-label propagation round over a directed double
+    (``_directed_double``, columns src/dst) and a label relation
+    (``node``, ``label``): the labels joined onto the double by ``dst``
+    give every node its neighbours' labels, each node's own label is
+    unioned in, and one per-node min is the next label. The neighbour
+    multiset (a,lbl(b)) ∪ (b,lbl(a)) is exactly that one dst-join, so a
+    round is ONE edge-keyed join + one node-keyed min; locally the
+    node-sized labels broadcast into the checkpointed double and no edge
+    bytes move. The result also carries ``own``, the node's label before
+    the round, so ``label < own`` counts the labels that changed."""
+    return (
+        directed.join(labels, directed.dst == labels[node])
+        .select(F.col("src").alias(node), label, F.lit(None).alias("own"))
+        .unionByName(labels.withColumn("own", F.col(label)))
+        .groupBy(node)
+        .agg(F.min(label).alias(label), F.min("own").alias("own"))
     )
 
 
@@ -605,33 +588,19 @@ def label_propagation_trajectory(
     row per round with (n_components, largest_component) — makes
     convergence checkable (two equal consecutive rows) without
     requiring it, so a fixed round budget keeps the semantics exact
-    and oracle-comparable rather than hoped-for. (The production
-    CC operator, dedup.connected_components, runs the same propagation
-    until no label changes and refuses if it does not converge; this
-    fixed-round twin exists for bounded-round parity with an unrolled
-    SQL oracle, same trade as kcore_peel.)
-
-    Scale shape per round (r11 rewrite, guide §2.4 "remove shuffles
-    outright"): ONE edge-keyed label join + one vertex-keyed min — the
-    neighbor multiset (a,lbl(b)) ∪ (b,lbl(a)) is exactly the dst-join of
-    the label relation against the DIRECTED double (src,dst) ∪ (dst,src)
-    (before the r11 rewrite each round shuffled the edges TWICE, by
-    ``a`` and by ``b``, for a byte-identical result); locally the
-    node-sized labels broadcast into the checkpointed double, so no
-    edge bytes move in any round.
-    r12: the double is built in ONE explode pass (_directed_double)
-    instead of a raw-edge checkpoint followed by a two-leg union +
-    repartition + second checkpoint — the r11 extra materialization that
-    outweighed the per-round saving at bench scale (VERDICT r11 item 3).
-    The repartition survives inside _directed_double for execution width
-    (see its docstring — dropping it let AQE coalesce the double to 1–2
-    partitions and every round ran effectively single-task). The vertex
-    set now derives from the checkpointed double (distinct src), not
-    from a second pass over the edge derivation."""
+    and comparable with an unrolled SQL oracle (same trade as
+    kcore_peel). dedup.connected_components runs the same round
+    (``_min_label_round``) until no label changes, one eager checkpoint
+    per round; here the rounds checkpoint lazily, so the fixed-budget
+    propagation needs no mid-loop driver action and pipelines inside
+    the final job. The vertex set derives from the checkpointed double
+    (distinct src), not from a second pass over the edge derivation."""
     directed = _directed_double(edges, "dst")
-    verts = directed.select(F.col("src").alias("v")).distinct()
-    labels = verts.select("v", F.col("v").alias("lbl")).localCheckpoint(
-        eager=False
+    labels = (
+        directed.select(F.col("src").alias("v"))
+        .distinct()
+        .withColumn("lbl", F.col("v"))
+        .localCheckpoint(eager=False)
     )
 
     def _summary(lb: DataFrame, r: int) -> DataFrame:
@@ -644,16 +613,9 @@ def label_propagation_trajectory(
 
     out = _summary(labels, 0)
     for r in range(1, int(rounds) + 1):
-        nbr = directed.join(
-            labels.withColumnRenamed("v", "dst"), "dst"
-        ).select(F.col("src").alias("v"), "lbl")
-        # eager=False (r12): lineage truncation without a per-round driver
-        # action — the whole fixed-budget propagation pipelines inside the
-        # final job (the pagerank discipline).
         labels = (
-            labels.unionAll(nbr)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"))
+            _min_label_round(directed, labels, "v", "lbl")
+            .drop("own")
             .localCheckpoint(eager=False)
         )
         out = out.unionAll(_summary(labels, r))
@@ -675,46 +637,24 @@ def item_cosine_recommendations(
     (ranking uses the exact integer cos²·10¹² = n_ij²·10¹²/(n_i·n_j),
     monotone in cosine, deterministic neighbor-id tie-break).
 
-    Scale shape: same capped-basket universe as association_rules (the
-    q111 power-basket discipline bounds the C(n,2) expansion); pair
-    rollup is ONE grouped count with map-side combine;
-    ``min_pair_count`` shrinks the relation before the two
-    broadcast-able singles joins; the per-item top-k is a keyed window
-    that compiles to map-side WindowGroupLimit — output is
-    per_item·|items|, linear in the catalogue, never quadratic."""
-    inter = interactions.select(
-        F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct()
-    baskets = (
-        inter.groupBy("b")
-        .agg(F.array_sort(F.collect_set("i")).alias("items"))
-        .filter(
-            (F.size("items") >= 2) & (F.size("items") <= int(max_basket))
-        )
-    )
-    singles = baskets.select(F.explode("items").alias("i")).groupBy("i").agg(
-        F.count("*").alias("n_i")
-    )
-    pairs = (
-        baskets.select(F.explode(_pair_expr("items")).alias("p"))
-        .select(F.col("p.a").alias("item"), F.col("p.b").alias("rec"))
-        .groupBy("item", "rec")
-        .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= int(min_pair_count))
-    )
-    both = pairs.unionByName(
-        pairs.select(
-            F.col("rec").alias("item"), F.col("item").alias("rec"), "n_ab"
-        )
+    Scale shape: the pair rollup association_rules uses
+    (``_pair_counts`` over ``_capped_baskets``), emitted in both
+    directions; the per-item top-k is a keyed window that compiles to
+    map-side WindowGroupLimit — output is per_item·|items|, linear in
+    the catalogue, never quadratic."""
+    pc = _pair_counts(
+        _capped_baskets(interactions, basket_col, item_col, max_basket),
+        min_pair_count,
     )
     joined = (
-        both.join(
-            singles.select(F.col("i").alias("item"), F.col("n_i").alias("n_a")),
-            "item",
+        pc.select(
+            F.col("item_a").alias("item"), F.col("item_b").alias("rec"), "n_ab", "n_a", "n_b"
         )
-        .join(
-            singles.select(F.col("i").alias("rec"), F.col("n_i").alias("n_b")),
-            "rec",
+        .unionByName(
+            pc.select(
+                F.col("item_b").alias("item"), F.col("item_a").alias("rec"), "n_ab",
+                F.col("n_b").alias("n_a"), F.col("n_a").alias("n_b"),
+            )
         )
         .select(
             "item", "rec", "n_ab", "n_a", "n_b",
@@ -769,15 +709,8 @@ def frequent_triples(
     avoids), ONE grouped count with map-side combine, min_support
     shrink before the 1-row basket-total broadcast, TakeOrdered
     top-k with full lexicographic tie-break."""
-    inter = interactions.select(
-        F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct()
-    baskets = (
-        inter.groupBy("b")
-        .agg(F.array_sort(F.collect_set("i")).alias("items"))
-        .filter(
-            (F.size("items") >= 3) & (F.size("items") <= int(max_basket))
-        )
+    baskets = _capped_baskets(
+        interactions, basket_col, item_col, max_basket, min_size=3
     )
     n_tot = baskets.agg(F.count("*").alias("n_baskets"))
     triples = (

@@ -107,50 +107,25 @@ def quota_sample(
     strata_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "quota",
-    precut: bool = True,
 ) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, chosen by deterministic
     hash order (rank column ``rn`` ∈ 1..k). The fixed-budget counterpart
     of rate-based `stratified_sample`.
 
     The rank itself needs a per-stratum window — a shuffle keyed on
-    ``strata_col``. With ``precut`` (default), a map-side combine runs
-    first: each input partition locally keeps only its k smallest hashes
-    per stratum (the global top-k is a subset of the union of per-
-    partition top-ks, so this is EXACT), shrinking the shuffle from |df|
-    rows to ≤ k · strata · partitions. At 100 TB with k=1000 that is the
-    difference between shuffling the corpus and shuffling a rounding
-    error of it — the same partial-aggregate idea Catalyst applies to
-    sums, hand-applied to an order statistic."""
-    import pandas as pd
-
+    ``strata_col``. Catalyst plans the ``row_number() <= k`` filter as a
+    Partial WindowGroupLimit below that exchange (for k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by default):
+    each task keeps only its k smallest hashes per stratum (the global
+    top-k is a subset of the union of per-partition top-ks, so this is
+    EXACT), shrinking the shuffle from |df| rows to ≤ k · strata ·
+    partitions — inside the JVM, with no Python worker."""
     h = _h32(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    hashed = df.select(id_col, strata_col).withColumn("h", h)
-
-    if precut:
-        # Derive the id/strata types from the input schema — hardcoding
-        # them (long/string) silently miscast any other id type (ADVICE r3).
-        from pyspark.sql.types import StructType
-
-        in_fields = {f.name: f for f in hashed.schema.fields}
-        out_schema = StructType(
-            [in_fields[id_col], in_fields[strata_col], in_fields["h"]]
-        )
-
-        def local_topk(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield (
-                        pdf.sort_values(["h", id_col])
-                        .groupby(strata_col, sort=False)
-                        .head(k)
-                    )
-
-        hashed = hashed.mapInPandas(local_topk, out_schema)
-
     rn = F.row_number().over(W.partitionBy(strata_col).orderBy("h", id_col))
     return (
-        hashed.withColumn("rn", rn)
+        df.select(id_col, strata_col)
+        .withColumn("h", h)
+        .withColumn("rn", rn)
         .filter(F.col("rn") <= k)
         .select(id_col, strata_col, "rn")
     )

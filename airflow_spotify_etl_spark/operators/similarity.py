@@ -21,7 +21,7 @@ scoring loop.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -304,6 +304,21 @@ def hash_seed_centroids(
     return [(i, [float(x) for x in r["cv"]]) for i, r in enumerate(rows)]
 
 
+def _probe_cells(centroids: list[tuple[int, list[float]]], nprobe: int) -> Column:
+    """The nprobe nearest cells of the query vector in ``_qv``, one row
+    each (an explode): the _assign_cells argmax idea, but keeping the top
+    nprobe — sort the per-row (sim, cell) structs, slice the tail, so
+    ties break to the higher cell id. |q| is constant per row and |ĉ|=1,
+    so the plain dot ranks identically to cosine. ivf_search and
+    ivf_pq_topk share it, so q56's oracle argument carries to both."""
+    qscored = F.transform(
+        _unit_mat(centroids),
+        lambda cv, i: F.struct(_dot(F.col("_qv"), cv).alias("sim"), i.alias("cell")),
+    )
+    probes = F.slice(F.reverse(F.array_sort(qscored)), 1, nprobe)
+    return F.explode(F.transform(probes, lambda s: s["cell"]))
+
+
 def ivf_search(
     corpus: DataFrame,
     queries: DataFrame,
@@ -322,25 +337,10 @@ def ivf_search(
         "_vd", _as_double(vec_col)
     ).withColumn("_vn", _norm(F.col("_vd")))
 
-    # nprobe nearest cells per query — same argmax-projection idea, but keep
-    # the top nprobe: sort the per-row (sim, cell) structs, slice the tail.
-    # (|q| constant per row and |ĉ|=1 → plain dot ranks identically to
-    # cosine.)
-    qv = _as_double(vec_col)
-    qscored = F.transform(
-        _unit_mat(centroids),
-        lambda cv, i: F.struct(
-            _dot(F.col("_qv"), cv).alias("sim"),
-            i.alias("cell"),
-        ),
-    )
-    probes = F.slice(F.reverse(F.array_sort(qscored)), 1, nprobe)
     qcells = (
-        queries.select(F.col(query_id_col), qv.alias("_qv"))
+        queries.select(F.col(query_id_col), _as_double(vec_col).alias("_qv"))
         .withColumn("_qn", _norm(F.col("_qv")))
-        .withColumn(
-            "cell", F.explode(F.transform(probes, lambda s: s["cell"]))
-        )
+        .withColumn("cell", _probe_cells(centroids, nprobe))
     )
     scored = assigned.join(F.broadcast(qcells), "cell").withColumn(
         "cosine_sim",
@@ -641,21 +641,9 @@ def ivf_pq_topk(
     partitions of a table ~64× narrower than the corpus."""
     assigned = _pq_index(corpus, centroids, books, vec_col, id_col)
 
-    # nprobe closest cells per query — identical selection (and tie-break:
-    # sim DESC, cell DESC) to ivf_search, so q56's oracle argument carries.
-    qv = _as_double(vec_col)
-    qscored = F.transform(
-        _unit_mat(centroids),
-        lambda cv, i: F.struct(
-            _dot(F.col("_qv"), cv).alias("sim"),
-            i.alias("cell"),
-        ),
-    )
-    probes = F.slice(F.reverse(F.array_sort(qscored)), 1, nprobe)
-    qcells = (
-        queries.select(F.col(query_id_col), qv.alias("_qv"))
-        .withColumn("cell", F.explode(F.transform(probes, lambda s: s["cell"])))
-    )
+    qcells = queries.select(
+        F.col(query_id_col), _as_double(vec_col).alias("_qv")
+    ).withColumn("cell", _probe_cells(centroids, nprobe))
 
     joined = assigned.join(F.broadcast(qcells), "cell")
     return _adc_ranked(joined, books, k, id_col, query_id_col)

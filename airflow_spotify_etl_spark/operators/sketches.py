@@ -91,35 +91,23 @@ def kmv_group_sketch(
     arithmetic; a separate pytest checks its accuracy against truth.
 
     Scale shape: distinct-ify the (group, hash) stream (one map-side-
-    combining exchange, narrow rows), then an EXACT map-side bottom-k
-    precut per partition (the quota_sample combine: the global bottom-k
-    is a subset of the union of per-partition bottom-ks) so the final
-    per-group window sees ≤ k·partitions rows instead of each group's
-    entire distinct set — without the precut, a billion-value group
-    funnels through one window partition. The output is ≤ k rows per
-    group — broadcastable for any downstream pair analysis regardless of
-    corpus size.
+    combining exchange, narrow rows), then the per-group bottom-k window,
+    whose ``row_number() <= k`` filter Catalyst plans as a Partial
+    WindowGroupLimit below the window's exchange (k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by default):
+    each task ships at most k rows per group (the global bottom-k is a
+    subset of the union of per-partition bottom-ks, so the cut is exact),
+    so a billion-value group never funnels whole through one window
+    partition. The output is ≤ k rows per group — broadcastable for any
+    downstream pair analysis regardless of corpus size.
 
     Returns (group_col, h, rn) rows with rn ∈ 1..k ordered by h."""
-    from pyspark.sql.types import StructType
-
     from .dedup import _h32
 
     v = value_col if not isinstance(value_col, str) else F.col(value_col)
     hashed = df.select(F.col(group_col), _h32(v).alias("h")).distinct()
-
-    in_fields = {f.name: f for f in hashed.schema.fields}
-    out_schema = StructType([in_fields[group_col], in_fields["h"]])
-    kv = int(k)
-
-    def local_bottomk(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pdf.sort_values("h").groupby(group_col, sort=False).head(kv)
-
-    precut = hashed.mapInPandas(local_bottomk, out_schema)
     rn = F.row_number().over(W.partitionBy(group_col).orderBy("h"))
-    return precut.withColumn("rn", rn).filter(F.col("rn") <= kv)
+    return hashed.withColumn("rn", rn).filter(F.col("rn") <= int(k))
 
 
 def kmv_pair_overlap(mins: DataFrame, group_col: str, k: int = 256) -> DataFrame:

@@ -128,7 +128,7 @@ def q71_per_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart of rate-based mixing (q47), via operators/sampling.py
     `quota_sample`. row_number over the portable md5 order makes the
     chosen set content-addressed: any engine, any partitioning, same
-    sample. The map-side pre-cut (each partition locally keeps its 10
+    sample. The window's Partial WindowGroupLimit (each task keeps its 10
     smallest hashes per stratum — exact, since the global top-k is a
     subset of the union of local top-ks) shrinks the window shuffle from
     |corpus| rows to ≤ k·strata·partitions."""

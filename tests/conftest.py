@@ -118,6 +118,8 @@ _SLOW_TESTS = {
     "test_graph.py::test_pagerank_hub_matches_numpy",
     "test_graph.py::test_pagerank_smj_fallback_matches_broadcast",
     "test_graph.py::test_personalized_pagerank_mass_near_seeds",
+    "test_graph.py::test_global_pagerank_is_personalized_with_every_node_seeded",
+    "test_graph.py::test_label_propagation_converges_to_connected_components",
     "test_graph.py::test_triangle_count_known_graphs",
     "test_incremental.py::test_cdc_apply_order_ties_are_deterministic",
     "test_incremental.py::test_scd2_apply_delta_planted_hot_key",

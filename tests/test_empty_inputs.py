@@ -64,7 +64,6 @@ def test_sampling_on_empty(spark):
     assert stratified_sample(docs, {"en": 0.5}).count() == 0
     assert weighted_sample(docs.withColumn("w", F.lit(0.5)), "w").count() == 0
     assert quota_sample(docs, 5).count() == 0
-    assert quota_sample(docs, 5, precut=False).count() == 0
 
 
 def test_connected_components_on_empty_edges(spark):

@@ -202,3 +202,39 @@ def test_triangle_count_known_graphs(spark):
     r = triangle_count(df).collect()[0]
     assert (r.n_triangles, r.n_wedges) == (1, 5)
     assert r.global_clustering == 0.6
+
+
+def test_global_pagerank_is_personalized_with_every_node_seeded(spark):
+    """Global PageRank is the personalized walk with teleport 1/N on every
+    node: seeding all N nodes reproduces pagerank at rank_decimals, on a
+    weighted graph with a dangling node and a node with no in-edges."""
+    from airflow_spotify_etl_spark.operators.graph import personalized_pagerank
+
+    df = spark.createDataFrame(
+        [(1, 2, 1.0), (1, 3, 3.0), (2, 3, 1.0), (3, 1, 1.0), (2, 4, 2.0), (5, 1, 1.0)],
+        "src long, dst long, w double",
+    )
+    want = pagerank(df, weight_col="w").collect()
+    got = personalized_pagerank(df, weight_col="w", seeds_k=5).collect()
+    assert got == want
+
+
+def test_label_propagation_converges_to_connected_components(spark):
+    """Both min-label loops agree: on separate chains (diameters 3, 2, 1,
+    ids shuffled along each chain), the last trajectory row's
+    n_components equals the number of distinct components that
+    connected_components returns."""
+    from airflow_spotify_etl_spark.operators.dedup import connected_components
+    from airflow_spotify_etl_spark.operators.graph import (
+        label_propagation_trajectory,
+    )
+
+    chains = [[7, 3, 9, 1], [12, 15, 11], [20, 21]]
+    edges = [(min(u, v), max(u, v)) for c in chains for u, v in zip(c, c[1:])]
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    traj = label_propagation_trajectory(pairs, rounds=4).collect()
+    cc = connected_components(pairs, "a", "b")
+    n_cc = cc.select("component").distinct().count()
+    assert n_cc == len(chains)
+    assert traj[-1].n_components == n_cc
+    assert traj[-1].largest_component == 4

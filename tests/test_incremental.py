@@ -146,15 +146,30 @@ def test_histogram_covers_all_orders(spark, sf_dir):
 
 
 def test_quota_sample_precut_is_exact(spark, sf_dir):
-    """The map-side pre-cut must not change the chosen sample: global
-    top-k per stratum is a subset of the union of per-partition top-ks."""
+    """The per-task pre-cut is Catalyst's: the stratum window's
+    ``rn <= k`` plans as a Partial WindowGroupLimit below the exchange,
+    with no Python worker (no MapInPandas / PythonMapInArrow node), and
+    it does not change the chosen sample — the global top-k per stratum
+    is a subset of the union of per-partition top-ks."""
+    import re
+
     from airflow_spotify_etl_spark.operators.sampling import quota_sample
 
     docs = load_table(spark, sf_dir, "documents").repartition(7)
-    fast = {(r.doc_id, r.source, r.rn)
-            for r in quota_sample(docs, 5, precut=True).collect()}
-    plain = {(r.doc_id, r.source, r.rn)
-             for r in quota_sample(docs, 5, precut=False).collect()}
+    df = quota_sample(docs, 5)
+    fast = {(r.doc_id, r.source, r.rn) for r in df.collect()}
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"WindowGroupLimit .*row_number\(\), 5, Partial", plan), plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan, plan
+    threshold = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")  # the plain window, no group limit
+    try:
+        plain_df = quota_sample(docs, 5)
+        plain = {(r.doc_id, r.source, r.rn) for r in plain_df.collect()}
+        assert "WindowGroupLimit" not in plain_df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(threshold, old)
     assert fast == plain
     per_stratum = {}
     for _, s, _ in fast:

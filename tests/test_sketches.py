@@ -115,8 +115,11 @@ def test_kmv_estimates_track_truth_at_scale(spark):
 
 
 def test_kmv_precut_matches_unbounded_window(spark):
-    """The map-side bottom-k precut is exact: the sketch equals the one a
+    """The per-task bottom-k cut is Catalyst's Partial WindowGroupLimit,
+    with no Python worker, and it is exact: the sketch equals the one a
     plain global window would produce (same rows, same ranks)."""
+    import re
+
     from pyspark.sql import Window as W
 
     from airflow_spotify_etl_spark.operators.dedup import _h32
@@ -131,7 +134,17 @@ def test_kmv_precut_matches_unbounded_window(spark):
         .withColumn("rn", F.row_number().over(W.partitionBy("g").orderBy("h")))
         .filter(F.col("rn") <= 64)
     )
-    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    threshold = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")  # the reference runs without the cut
+    try:
+        want = {tuple(r) for r in ref.collect()}
+    finally:
+        spark.conf.set(threshold, old)
+    assert {tuple(r) for r in got.collect()} == want
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"WindowGroupLimit .*row_number\(\), 64, Partial", plan), plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan, plan
 
 
 def test_exact_heavy_hitters_guarantee_under_adversarial_partitioning(spark):
