@@ -1,18 +1,49 @@
 """Embedding similarity search (north star: ANN over array<float> columns).
 
-- ``cosine_topk``        — exact brute-force top-k: broadcast the query set,
-  JVM-side dot products via zip_with/aggregate, per-partition top-k then a
-  tiny global merge. The correctness baseline; linear scan of the corpus.
-- ``ivf_topk``           — IVF-style ANN: partition the corpus into nlist
-  Voronoi cells (deterministic seed centroids + one Lloyd refinement),
-  search only the nprobe closest cells per query. The scale path: at 100 TB
-  the corpus is written partitioned by cell id, so a query reads nprobe/nlist
-  of the data (partition pruning), and the scan within a cell is the same
-  codegen'd dot product.
-- ``cosine_pairs_lsh``   — all-pairs near-duplicate detection by random
-  hyperplane LSH (sign sketch = SimHash over dimensions): pairs meeting in
-  sketch-band buckets get exact cosine verification. Avoids the O(n²)
-  cross join entirely.
+Operators:
+
+- ``cosine_topk`` — exact brute-force top-k: broadcast the query set,
+  JVM-side dot products via zip_with/aggregate, per-query top-k. The
+  correctness baseline; linear scan of the corpus.
+- ``ivf_topk`` — IVF ANN under trained centroids: partition the corpus
+  into nlist Voronoi cells, search only the nprobe closest cells per
+  query. At 100 TB the corpus is written partitioned by cell id, so a
+  query reads nprobe/nlist of the data (partition pruning), and the scan
+  within a cell is the same dot product.
+- ``ivf_search`` — the IVF search under a fixed centroid list: trained
+  (``ivf_topk``) or ``hash_seed_centroids``' untrained, SQL-replayable
+  seeds.
+- ``cosine_pairs_lsh`` — all-pairs near-duplicate vectors by random
+  hyperplane LSH with exact cosine verification; avoids the O(n²) cross
+  join entirely.
+- ``diversity_cap`` — SemDeDup-style per-cell cap sampling.
+- ``pq_codebooks`` / ``pq_codebooks_trained`` — hash-seeded and k-means
+  product-quantization codebooks; ``pq_encode`` the PQ encode;
+  ``pq_adc_topk`` asymmetric-distance search over the codes.
+- ``ivf_pq_topk`` — the IVF-PQ composition; ``write_ann_index`` /
+  ``search_ann_index`` — the same index stored partitioned by cell and
+  searched with partition pruning.
+- ``quantize_int8`` — SQ8 per-vector int8 quantization.
+- ``embedding_drift`` / ``centroid_sums`` / ``drift_between`` — per-label
+  centroid drift over order-independent quantized sums.
+
+Shared kernels. Each decision the operators make has one definition, so
+the parity contracts the oracles and tests pin (seeded IVF and IVF-PQ ≡
+their SQL replays, stored index ≡ in-memory IVF-PQ) hold because both
+sides run the same code:
+
+- ``_training_sample`` — the bounded deterministic training sample;
+- ``_lloyd`` — the Lloyd loop, distance passed in;
+- ``_unit_mat`` / ``_assign_cells`` — the unit centroids and the cell
+  argmax;
+- ``_ranked_cells`` / ``_probes`` — the ranked probe-cell list (nearest
+  first, ties to the higher cell) and each query's nprobe prefix;
+- ``_query_side`` / ``_cosine`` / ``_top_k`` — the cosine scorer and the
+  per-group ``row_number ≤ k`` tail (``_cosine_ranked`` composes them);
+- ``_adc_ranked`` — the asymmetric-distance scorer;
+- ``_centroid_partials`` / ``_centroid_rel`` — the quantized per-(label,
+  dim) sums and their svec reassembly (streaming/embedding_monitor.py
+  stores and folds the same partials).
 
 Everything stays in built-in higher-order array functions — no Python in the
 scoring loop.
@@ -25,7 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .dedup import _banded, _bucket_pairs
+from .dedup import _banded, _bucket_pairs, _h32
 
 __all__ = [
     "cosine_topk",
@@ -66,6 +97,56 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _top_k(df: DataFrame, by: list[str], order: Column, id_col: str, k: int) -> DataFrame:
+    """THE per-group top-k tail: ``rank`` = row_number over ``by`` ordered
+    by ``order``, ties to the lowest id, kept while ≤ k. Catalyst plans the
+    filter as a Partial WindowGroupLimit below the exchange, so each task
+    ships at most k rows per group (plan-gated for q95, q97 and q100)."""
+    w = W.partitionBy(*by).orderBy(order, F.col(id_col))
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _query_side(df: DataFrame, vec_col: str, *cols: str) -> DataFrame:
+    """``cols`` plus the vector as doubles in ``_qv`` and its norm in
+    ``_qn``, for a small relation (a query set, a bounded sample). Norms
+    are per-VECTOR constants: each side binds its own once in its
+    projection, never inside the scored row, where the query norm would
+    be re-evaluated |corpus| times (array folds are interpreted, not
+    codegen'd, so redundant folds dominate the scan cost). ONE projection:
+    over an ORDER BY … LIMIT sample a second stacked projection stops
+    Catalyst from planning TakeOrderedAndProject and sorts the whole
+    input instead."""
+    qv = _as_double(vec_col)
+    return df.select(*cols, qv.alias("_qv"), _norm(qv).alias("_qn"))
+
+
+def _cosine() -> Column:
+    """THE cosine scorer of a joined row: query ``_qv``/``_qn`` against
+    corpus ``_vd``/``_vn``, one left-to-right double fold — the chain the
+    SQL oracles replay with list_dot_product."""
+    return _dot(F.col("_qv"), F.col("_vd")) / (F.col("_qn") * F.col("_vn"))
+
+
+def _cosine_ranked(
+    joined: DataFrame,
+    k: int,
+    id_col: str,
+    query_id_col: str,
+    payload: list[str] | None = None,
+) -> DataFrame:
+    """Per-query cosine top-k of a (query ⋈ corpus) relation — the tail
+    cosine_topk and ivf_search share."""
+    scored = joined.withColumn("cosine_sim", _cosine())
+    ranked = _top_k(scored, [query_id_col], F.col("cosine_sim").desc(), id_col, k)
+    return ranked.select(
+        query_id_col,
+        "rank",
+        id_col,
+        F.round("cosine_sim", 4).alias("cosine_sim"),
+        *(payload or []),
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -76,54 +157,33 @@ def cosine_topk(
     payload: list[str] | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per query. ``queries`` must be small enough to
-    broadcast (the usual ANN shape: few queries, huge corpus)."""
-    # Norms are per-VECTOR constants: compute each side's norm once in its
-    # projection instead of inside the scored row (where the query norm would
-    # be re-evaluated |corpus| times — array folds are interpreted, not
-    # codegen'd, so redundant folds dominate the scan cost).
-    q = queries.select(
-        F.col(query_id_col), _as_double(vec_col).alias("_qv")
-    ).withColumn("_qn", _norm(F.col("_qv")))
+    broadcast (the usual ANN shape: few queries, huge corpus); ``payload``
+    corpus columns ride along into the result."""
     c = corpus.select(
-        F.col(id_col), *(payload or []), _as_double(vec_col).alias("_v")
-    ).withColumn("_vn", _norm(F.col("_v")))
-    scored = c.join(F.broadcast(q)).withColumn(
-        "cosine_sim",
-        _dot(F.col("_qv"), F.col("_v")) / (F.col("_qn") * F.col("_vn")),
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, F.round("cosine_sim", 4).alias("cosine_sim"), *(payload or []))
-    )
+        F.col(id_col), *(payload or []), _as_double(vec_col).alias("_vd")
+    ).withColumn("_vn", _norm(F.col("_vd")))
+    joined = c.join(F.broadcast(_query_side(queries, vec_col, query_id_col)))
+    return _cosine_ranked(joined, k, id_col, query_id_col, payload)
 
 
-def _unit_mat(centroids: list[tuple[int, list[float]]]):
+def _unit_mat(centroids: list[tuple[int, list[float]]]) -> Column:
     """ONE literal ``array<array<double>>`` of unit-normalized centroids,
-    indexed by cell id (``_centroids`` emits dense ids 0..nlist-1, so the
-    array position IS the cell). A single Literal node — building it as
-    nlist × dim nested ``F.lit`` calls instead gives Catalyst a thousand-node
-    expression tree and costs ~1 s of analysis/optimization per query at
-    nlist=16, growing with nlist. Unit-normalizing driver-side makes every
-    executor-side score a plain dot product: dot(v, ĉ) ranks identically to
-    dot(v, c)/|c|, and the per-row per-cell norm fold (interpreted, like all
-    array aggregates) disappears entirely."""
-    return F.lit(_unit_rows(centroids))
-
-
-def _unit_rows(centroids: list[tuple[int, list[float]]]) -> list[list[float]]:
-    """Driver-side unit-normalized centroid rows in dense cell order —
-    the single source _unit_mat lifts into a literal and
-    search_ann_index's driver-side probe selection folds over (one
-    normalization, identical floats everywhere)."""
+    indexed by cell id: the ids must be dense 0..nlist-1 (ValueError
+    otherwise), so the array position IS the cell. A single Literal node —
+    building it as nlist × dim nested ``F.lit`` calls instead gives
+    Catalyst a thousand-node expression tree and costs ~1 s of
+    analysis/optimization per query at nlist=16, growing with nlist.
+    Unit-normalizing driver-side makes every executor-side score a plain
+    dot product: dot(v, ĉ) ranks identically to dot(v, c)/|c|, and the
+    per-row per-cell norm fold (interpreted, like all array aggregates)
+    disappears entirely."""
     mat = []
     for cell, cv in sorted(centroids):
         if cell != len(mat):
             raise ValueError("centroid cell ids must be dense 0..nlist-1")
         n = sum(x * x for x in cv) ** 0.5 or 1.0
         mat.append([float(x) / n for x in cv])
-    return mat
+    return F.lit(mat)
 
 
 def _adc_ranked(
@@ -146,12 +206,9 @@ def _adc_ranked(
             F.element_at(F.lit(book), F.col(f"code_{j}") + 1),
         )
         adc = term if adc is None else adc + term
-    w = W.partitionBy(query_id_col).orderBy(F.col("_adc").desc(), F.col(id_col))
-    return (
-        joined.withColumn("_adc", adc)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, F.round("_adc", 4).alias("adc_sim"))
+    scored = joined.withColumn("_adc", adc)
+    return _top_k(scored, [query_id_col], F.col("_adc").desc(), id_col, k).select(
+        query_id_col, "rank", id_col, F.round("_adc", 4).alias("adc_sim")
     )
 
 
@@ -170,71 +227,91 @@ def _pq_index(
     )
 
 
+def _training_sample(
+    corpus: DataFrame, vec_col: str, id_col: str, n: int, key=F.xxhash64
+) -> np.ndarray:
+    """THE bounded training sample: the n rows with the smallest
+    ``key(id)``, ties to the lowest id, as a float64 matrix. ONE Spark job
+    — TakeOrderedAndProject, per-partition top-n + driver merge, no full
+    sort. This is the FAISS shape: training always uses a bounded sample
+    (a hash slice is pseudo-random and deterministic — no Date/random),
+    because cell means from ~1k vectors/cell are as good as cell means
+    from the full corpus. An empty corpus raises ValueError."""
+    rows = (
+        corpus.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("cv"))
+        .orderBy(key(F.col("_id")), F.col("_id"))
+        .limit(n)
+        .collect()
+    )
+    if not rows:
+        raise ValueError("ANN training sample: corpus is empty — no vectors to draw")
+    return np.array([r["cv"] for r in rows], dtype="float64")
+
+
+def _md5_key(id_col: Column) -> Column:
+    """The engine-portable sample key: DuckDB recomputes this md5 slice
+    (('0x'||substr(md5(id),1,8))::BIGINT), unlike xxhash64."""
+    return _h32(id_col.cast("string"))
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int, nearest) -> np.ndarray:
+    """THE Lloyd loop, driver-side in numpy over a training sample: the
+    seeds are the first k rows (k clamped to the sample size — FAISS warns
+    and degrades the same way); each round assigns every row to
+    ``nearest(X, C)`` and moves each centroid to its members' mean. An
+    emptied cell keeps its previous centroid, so the cell-id space stays
+    dense. A driver matmul over ≤16k×dim beats a multi-job distributed
+    Lloyd whose every step is scheduling overhead."""
+    C = X[:k].copy()
+    for _ in range(iters):
+        assign = nearest(X, C)
+        for c in range(len(C)):
+            members = X[assign == c]
+            if len(members):
+                C[c] = members.mean(axis=0)
+    return C
+
+
 def _centroids(
     corpus: DataFrame,
     vec_col: str,
     id_col: str,
     nlist: int,
-    dim: int,
     max_train: int = 16384,
     lloyd_iters: int = 2,
 ) -> list[tuple[int, list[float]]]:
-    """Deterministic centroids: ONE Spark job collects a bounded training
-    sample (the max_train lowest-xxhash64(id) rows — TakeOrderedAndProject,
-    per-partition top-k + driver merge, no full sort), then Lloyd runs
-    driver-side in numpy. This is the FAISS shape: IVF training always uses
-    a bounded sample (a hash slice is pseudo-random and deterministic — no
-    Date/random), because cell means from ~1k vectors/cell are as good as
-    cell means from the full corpus, and a driver matmul over ≤16k×dim
-    beats a multi-job distributed Lloyd whose every step is scheduling
-    overhead. Seeds are the nlist lowest-hash rows, ties to the lowest id;
-    an emptied cell keeps its previous centroid so the cell-id space stays
-    dense. Returns a driver-side list that rides into the assignment
-    projection as a broadcast literal instead of a join side."""
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("cv"))
-        .orderBy(F.xxhash64("_id"), F.col("_id"))
-        .limit(max_train)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("IVF training: corpus is empty — no vectors to cluster")
-    # Fewer vectors than requested cells: clamp (FAISS warns and degrades the
-    # same way) — the previous DataFrame implementation degraded gracefully
-    # and the argmax projection must too, instead of IndexError.
-    nlist = min(nlist, len(rows))
-    X = np.array([list(r["cv"]) for r in rows], dtype="float64")
-    cents = X[:nlist].copy()
-    for _ in range(lloyd_iters):
-        # Nearest by cosine ≡ argmax of dot against unit centroids (|x|
-        # constant per row); first-max ties to the lowest cell id, matching
-        # the executor-side assignment's tie-break.
-        unit = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-        assign = np.argmax(X @ unit.T, axis=1)
-        for c in range(nlist):
-            members = X[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return [(i, [float(x) for x in cents[i]]) for i in range(nlist)]
+    """Trained IVF centroids: Lloyd over the bounded xxhash64 training
+    sample. Nearest by cosine ≡ argmax of dot against unit centroids (|x|
+    constant per row); first-max ties to the lowest cell id, matching the
+    executor-side assignment's tie-break. Returns a driver-side list that
+    rides into the assignment projection as a literal instead of a join
+    side."""
+
+    def nearest(X, C):
+        unit = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+        return np.argmax(X @ unit.T, axis=1)
+
+    X = _training_sample(corpus, vec_col, id_col, max_train)
+    return list(enumerate(_lloyd(X, nlist, lloyd_iters, nearest).tolist()))
 
 
 def _assign_cells(
     df: DataFrame, centroids: list[tuple[int, list[float]]], vec_col: str, id_col: str
 ) -> DataFrame:
     """Nearest-centroid assignment as a per-row ARGMAX PROJECTION over the
-    literal centroid array: transform → struct(sim, -cell) → array_max.
-    Zero joins, zero extra rows, zero shuffle — the narrow-plan replacement
-    for the corpus×nlist join+window (which explodes rows nlist× and
-    shuffles the whole corpus). Ties break to the lowest cell id.
+    literal centroid array: ``cell`` = array_position(sims, array_max(sims))
+    − 1. Zero joins, zero extra rows, zero shuffle — the narrow-plan
+    replacement for the corpus×nlist join+window (which explodes rows
+    nlist× and shuffles the whole corpus).
 
     Ranking is by dot(v,ĉ) against unit centroids (see _unit_mat): |v| is
     constant across cells and |ĉ|=1, so the argmax equals the cosine argmax
-    with one fused multiply-add fold per cell. The argmax itself is
-    array_position(sims, array_max(sims)) — first occurrence, so ties break
-    to the lowest cell id (matching np.argmax in _centroids' Lloyd). The
-    double-cast of the vector binds ONCE via a scratch column — folds are
-    interpreted, so repeating the cast per cell would multiply the scan
-    cost nlist×."""
+    with one fused multiply-add fold per cell. array_position finds the
+    first occurrence, so ties break to the lowest cell id (matching
+    np.argmax in _centroids' Lloyd). The vector's double cast binds ONCE
+    in ``_vd``, which stays for the caller's scoring — folds are
+    interpreted, so repeating the cast per cell or per score would
+    multiply the scan cost."""
     sims = F.transform(_unit_mat(centroids), lambda cv: _dot(F.col("_vd"), cv))
     return (
         df.withColumn("_vd", _as_double(vec_col))
@@ -242,7 +319,7 @@ def _assign_cells(
         .withColumn(
             "cell", (F.array_position("_sims", F.array_max("_sims")) - 1).cast("int")
         )
-        .drop("_vd", "_sims")
+        .drop("_sims")
     )
 
 
@@ -255,7 +332,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    dim: int = 64,
 ) -> DataFrame:
     """IVF ANN: search only the nprobe nearest cells per query.
 
@@ -263,7 +339,7 @@ def ivf_topk(
     partitioned by cell; here assignment runs inline as a narrow argmax
     projection (no join, no row explosion — see _assign_cells). Recall vs
     the exact scan is tested in tests/test_similarity.py."""
-    cents = _centroids(corpus, vec_col, id_col, nlist, dim)
+    cents = _centroids(corpus, vec_col, id_col, nlist)
     return ivf_search(
         corpus,
         queries,
@@ -284,39 +360,42 @@ def hash_seed_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Untrained IVF seeds: the nlist corpus vectors with the smallest
     engine-portable md5-slice hash of their id (ties to the lowest id),
-    cell ids in hash order. A pseudo-random deterministic sample — the
-    Lloyd-free degenerate of _centroids' seeding, and, unlike xxhash64,
-    reproducible in DuckDB (('0x'||substr(md5(id),1,8))::BIGINT), which is
-    what lets the ENTIRE IVF search machinery (assignment argmax, probe
-    selection, in-cell scoring, top-k) be value-checked by a SQL oracle
+    cell ids in hash order — the Lloyd-free training sample. Unlike
+    xxhash64 the key is reproducible in DuckDB, which is what lets the
+    ENTIRE IVF search machinery (assignment argmax, probe selection,
+    in-cell scoring, top-k) be value-checked by a SQL oracle
     (plans/llm/ann.py q56). One bounded TakeOrderedAndProject job."""
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("cv"))
-        .orderBy(h, F.col("_id"))
-        .limit(nlist)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("IVF seeding: corpus is empty — no vectors to seed")
-    return [(i, [float(x) for x in r["cv"]]) for i, r in enumerate(rows)]
+    X = _training_sample(corpus, vec_col, id_col, nlist, _md5_key)
+    return list(enumerate(X.tolist()))
 
 
-def _probe_cells(centroids: list[tuple[int, list[float]]], nprobe: int) -> Column:
-    """The nprobe nearest cells of the query vector in ``_qv``, one row
-    each (an explode): the _assign_cells argmax idea, but keeping the top
-    nprobe — sort the per-row (sim, cell) structs, slice the tail, so
-    ties break to the higher cell id. |q| is constant per row and |ĉ|=1,
-    so the plain dot ranks identically to cosine. ivf_search and
-    ivf_pq_topk share it, so q56's oracle argument carries to both."""
-    qscored = F.transform(
+def _ranked_cells(centroids: list[tuple[int, list[float]]]) -> Column:
+    """THE ranked probe list of the query vector in ``_qv``: every cell id,
+    nearest first, ties to the HIGHER cell id (the reverse of the
+    ascending sort of per-cell (sim, cell) structs). |q| is constant per
+    row and |ĉ|=1, so the plain dot ranks identically to cosine. Every
+    probe selection — ivf_search, ivf_pq_topk, search_ann_index and the
+    q318/q336 sweeps — reads it, so q56's and q100's oracle arguments
+    carry to all of them."""
+    scored = F.transform(
         _unit_mat(centroids),
         lambda cv, i: F.struct(_dot(F.col("_qv"), cv).alias("sim"), i.alias("cell")),
     )
-    probes = F.slice(F.reverse(F.array_sort(qscored)), 1, nprobe)
-    return F.explode(F.transform(probes, lambda s: s["cell"]))
+    return F.transform(F.reverse(F.array_sort(scored)), lambda s: s["cell"])
+
+
+def _probes(
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    nprobe: int,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """(query id, ``_qv``, ``_qn``, cell): one row per probed cell — the
+    first nprobe entries of each query's ranked probe list."""
+    return _query_side(queries, vec_col, query_id_col).withColumn(
+        "cell", F.explode(F.slice(_ranked_cells(centroids), 1, nprobe))
+    )
 
 
 def ivf_search(
@@ -334,24 +413,11 @@ def ivf_search(
     so the search machinery runs under both trained (q27) and
     hash-seeded oracle-checkable (q56) centroids."""
     assigned = _assign_cells(corpus, centroids, vec_col, id_col).withColumn(
-        "_vd", _as_double(vec_col)
-    ).withColumn("_vn", _norm(F.col("_vd")))
-
-    qcells = (
-        queries.select(F.col(query_id_col), _as_double(vec_col).alias("_qv"))
-        .withColumn("_qn", _norm(F.col("_qv")))
-        .withColumn("cell", _probe_cells(centroids, nprobe))
+        "_vn", _norm(F.col("_vd"))
     )
-    scored = assigned.join(F.broadcast(qcells), "cell").withColumn(
-        "cosine_sim",
-        _dot(F.col("_qv"), F.col("_vd")) / (F.col("_qn") * F.col("_vn")),
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, F.round("cosine_sim", 4).alias("cosine_sim"))
-    )
+    qcells = _probes(queries, centroids, nprobe, vec_col, query_id_col)
+    joined = assigned.join(F.broadcast(qcells), "cell")
+    return _cosine_ranked(joined, k, id_col, query_id_col)
 
 
 def cosine_pairs_lsh(
@@ -371,6 +437,10 @@ def cosine_pairs_lsh(
     band the sketch, meet candidates per band, verify exact cosine ≥
     threshold. P[bit match] = 1 - angle/π, so high-cosine pairs collide in
     some band with high probability while the cross join never materializes.
+    Every vector must have length ``dim``: a shorter or longer one would
+    dot to NULL against every plane, sketch to all zeros and land every
+    such vector in one bucket per band, so it fails the query instead
+    (an in-plan raise_error — no extra Spark job).
 
     Candidates come from the text LSH tiers' own banding and capped
     JOIN-FREE bucket expansion (operators/dedup ``_banded`` and
@@ -402,10 +472,15 @@ def cosine_pairs_lsh(
         planes_lit,
         lambda p: F.when(_dot(F.col("_v"), p) > 0, F.lit(1)).otherwise(F.lit(0)),
     )
+    n = F.size(vec_col)
+    v = F.when(
+        n != dim,
+        F.raise_error(F.format_string(f"cosine_pairs_lsh: vector length %d != dim {dim}", n)),
+    ).otherwise(_as_double(vec_col))
     # Norm computed once per vector at sketch time — a vector re-appears
     # in every candidate pair it joins, and the norm fold is interpreted.
     sketched = (
-        corpus.select(F.col(id_col), _as_double(vec_col).alias("_v"))
+        corpus.select(F.col(id_col), v.alias("_v"))
         .withColumn("_bits", bits)
         .withColumn("_n", _norm(F.col("_v")))
     )
@@ -456,37 +531,51 @@ def diversity_cap(
     prototypical members (lowest cosine to the centroid), so the kept set
     spreads over the cell instead of piling onto its mode;
     ``keep='prototypes'`` flips the order for a representative-subset
-    draw.
+    draw. Any other ``keep`` raises ValueError.
 
-    Plan shape: assignment is the same argmax PROJECTION as _assign_cells
-    (zero joins, zero shuffle — the per-cell similarity falls out of the
-    same sims array via element_at, no recompute); the cap is one
-    row_number window keyed on cell id over the narrow (id, cell, sim)
-    projection — the embeddings themselves never shuffle, and the exchange
-    key is as balanced as the clustering (a pathological all-one-cell
-    corpus degrades to a single-reducer sort of ids+floats, not of
-    vectors). Under hash-seeded centroids (hash_seed_centroids) the whole
-    pipeline is SQL-replayable — oracle-checked in plans/llm/sampling.py q95."""
-    sims = F.transform(_unit_mat(centroids), lambda cv: _dot(F.col("_vd"), cv))
-    scored = (
-        corpus.withColumn("_vd", _as_double(vec_col))
-        .withColumn("_sims", sims)
-        .withColumn(
-            "cell", (F.array_position("_sims", F.array_max("_sims")) - 1).cast("int")
+    Plan shape: assignment is the _assign_cells argmax PROJECTION (zero
+    joins, zero shuffle; the centroid similarity is the same dot fold
+    against the assigned cell's unit centroid, over the same ``_vd``);
+    the cap is one row_number window keyed on cell id over the narrow
+    (id, cell, sim) projection — the embeddings themselves never shuffle,
+    and the exchange key is as balanced as the clustering (a pathological
+    all-one-cell corpus degrades to a single-reducer sort of ids+floats,
+    not of vectors). Under hash-seeded centroids (hash_seed_centroids)
+    the whole pipeline is SQL-replayable — oracle-checked in
+    plans/llm/sampling.py q95."""
+    if keep not in ("diverse", "prototypes"):
+        raise ValueError(
+            f"diversity_cap: keep must be 'diverse' or 'prototypes', not {keep!r}"
         )
-        .withColumn(
-            "_cs",
-            F.element_at("_sims", F.col("cell") + F.lit(1)) / _norm(F.col("_vd")),
-        )
-        .select(F.col(id_col), "cell", "_cs")
+    unit = F.element_at(_unit_mat(centroids), F.col("cell") + 1)
+    scored = _assign_cells(corpus, centroids, vec_col, id_col).select(
+        F.col(id_col), "cell", (_dot(F.col("_vd"), unit) / _norm(F.col("_vd"))).alias("_cs")
     )
     order = F.col("_cs").asc() if keep == "diverse" else F.col("_cs").desc()
-    w = W.partitionBy("cell").orderBy(order, F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= m)
-        .select("cell", "rank", id_col, F.round("_cs", 4).alias("centroid_sim"))
+    return _top_k(scored, ["cell"], order, id_col, m).select(
+        "cell", "rank", id_col, F.round("_cs", 4).alias("centroid_sim")
     )
+
+
+def _pq_books(
+    X: np.ndarray, n_sub: int, n_codes: int, lloyd_iters: int
+) -> list[list[list[float]]]:
+    """Per-subspace codebooks from a training sample: split it into
+    ``n_sub`` contiguous subspaces and run the Lloyd loop on each under
+    squared L2 (``lloyd_iters=0`` keeps the seed slices). Returns
+    books[j][c] = codeword vector."""
+    dim = X.shape[1]
+    if dim % n_sub:
+        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
+    d = dim // n_sub
+
+    def nearest(S, C):
+        return ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+
+    return [
+        _lloyd(X[:, j * d : (j + 1) * d], n_codes, lloyd_iters, nearest).tolist()
+        for j in range(n_sub)
+    ]
 
 
 def pq_codebooks(
@@ -503,12 +592,8 @@ def pq_codebooks(
     PQ pipeline (seeding, encoding argmin, ADC scoring, top-k) is
     replayable by a SQL oracle (plans/llm/ann.py q97), the q56 argument
     applied to compression. Returns books[j][c] = codeword vector."""
-    seeds = hash_seed_centroids(corpus, nlist=n_codes, vec_col=vec_col, id_col=id_col)
-    dim = len(seeds[0][1])
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
-    d = dim // n_sub
-    return [[vec[j * d : (j + 1) * d] for _, vec in seeds] for j in range(n_sub)]
+    X = _training_sample(corpus, vec_col, id_col, n_codes, _md5_key)
+    return _pq_books(X, n_sub, n_codes, 0)
 
 
 def pq_encode(
@@ -567,8 +652,7 @@ def pq_adc_topk(
     enc = pq_encode(corpus, books, vec_col, id_col).select(
         id_col, *[f"code_{j}" for j in range(len(books))]
     )
-    q = queries.select(F.col(query_id_col), _as_double(vec_col).alias("_qv"))
-    joined = enc.join(F.broadcast(q))
+    joined = enc.join(F.broadcast(_query_side(queries, vec_col, query_id_col)))
     return _adc_ranked(joined, books, k, id_col, query_id_col)
 
 
@@ -589,32 +673,8 @@ def pq_codebooks_trained(
     the seeded twin is the oracle-checkable one (the q27/q56 duality,
     applied to compression). Seeds are the first n_codes sample rows;
     emptied cells keep their previous codeword so code ids stay dense."""
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("cv"))
-        .orderBy(F.xxhash64("_id"), F.col("_id"))
-        .limit(max_train)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("PQ training: corpus is empty")
-    X = np.array([list(r["cv"]) for r in rows], dtype="float64")
-    dim = X.shape[1]
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
-    d = dim // n_sub
-    n_codes = min(n_codes, len(rows))
-    books = []
-    for j in range(n_sub):
-        S = X[:, j * d : (j + 1) * d]
-        C = S[:n_codes].copy()
-        for _ in range(lloyd_iters):
-            assign = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-            for c in range(n_codes):
-                members = S[assign == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
-        books.append([[float(x) for x in row] for row in C])
-    return books
+    X = _training_sample(corpus, vec_col, id_col, max_train)
+    return _pq_books(X, n_sub, n_codes, lloyd_iters)
 
 
 def ivf_pq_topk(
@@ -640,11 +700,7 @@ def ivf_pq_topk(
     codes) written partitioned by cell — a query touches nprobe
     partitions of a table ~64× narrower than the corpus."""
     assigned = _pq_index(corpus, centroids, books, vec_col, id_col)
-
-    qcells = queries.select(
-        F.col(query_id_col), _as_double(vec_col).alias("_qv")
-    ).withColumn("cell", _probe_cells(centroids, nprobe))
-
+    qcells = _probes(queries, centroids, nprobe, vec_col, query_id_col)
     joined = assigned.join(F.broadcast(qcells), "cell")
     return _adc_ranked(joined, books, k, id_col, query_id_col)
 
@@ -681,58 +737,17 @@ def search_ann_index(
     """Search a stored IVF-PQ index: the probed cells become a PARTITION
     FILTER on the index table — Spark reads nprobe/nlist of the
     partitions and nothing else (plan shows ``PartitionFilters: [cell
-    IN …]``; pytest-gated). The query set is small, so its probe cells
-    are computed driver-side from the centroid literals — no Spark job —
-    and the per-row work is the same ADC chain as ivf_pq_topk.
-    Result-identical to the in-memory composition (pytest-pinned)."""
-    U = _unit_rows(centroids)
-
-    qrows = queries.select(F.col(query_id_col), _as_double(vec_col).alias("_qv")).collect()
-    if not qrows:
+    IN …]``; pytest-gated). The query set is small: its probe rows (the
+    same ``_probes`` projection ivf_pq_topk joins) are collected once, as
+    one Arrow batch, to list the probed cells, and that batch is the
+    broadcast side, rebuilt on the JVM with the projection's own schema.
+    The per-row work is the same ADC chain as ivf_pq_topk, so the result
+    equals the in-memory composition (pytest-pinned)."""
+    probes = _probes(queries, centroids, nprobe, vec_col, query_id_col).toArrow()
+    if not probes.num_rows:
         raise ValueError("ANN search: empty query set")
-
-    def _seq_dot(a, b):
-        # STRICT left-fold, same accumulation order as the Catalyst
-        # `_dot` fold ivf_pq_topk probes with — a BLAS matmul's
-        # pairwise/SIMD accumulation could order two near-tied centroid
-        # sims differently and silently probe a different cell set,
-        # breaking the pinned result-parity with the in-memory path.
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    probe_pairs = []
-    for r in qrows:
-        qv = [float(x) for x in r["_qv"]]
-        sims = [_seq_dot(qv, u) for u in U]
-        # ties → HIGHEST cell, matching ivf_search/ivf_pq_topk's
-        # reverse(array_sort(struct(sim, cell))) selection.
-        order = sorted(range(len(sims)), key=lambda c: (-sims[c], -c))[:nprobe]
-        probe_pairs += [(r[query_id_col], int(c), qv) for c in order]
-    cells = sorted({c for _, c, _ in probe_pairs})
-
-    # Probe relation schema follows the query id's actual type (no
-    # hardcoded long — the quota_sample ADVICE lesson).
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    qid_field = next(f for f in queries.schema.fields if f.name == query_id_col)
-    qcells = spark.createDataFrame(
-        probe_pairs,
-        StructType(
-            [
-                qid_field,
-                StructField("cell", IntegerType()),
-                StructField("_qv", ArrayType(DoubleType())),
-            ]
-        ),
-    )
+    cells = sorted(set(probes.column("cell").to_pylist()))
+    qcells = spark.createDataFrame(probes).coalesce(1)
     idx = spark.read.parquet(path).filter(F.col("cell").isin(cells))
     joined = idx.join(F.broadcast(qcells), "cell")
     return _adc_ranked(joined, books, k, id_col, query_id_col)
@@ -833,31 +848,51 @@ def embedding_drift(
     return drift_between(o, nw, scale, min_cosine)
 
 
+def _centroid_partials(
+    df: DataFrame, vec_col: str, label_col: str, scale: int
+) -> tuple[DataFrame, DataFrame]:
+    """THE quantized centroid partials of ``df``: (label, dim, qsum) — each
+    component quantized to round(x·scale) and summed per (label, dim) as
+    an exact bigint, so any aggregation order or batch split gives the
+    same sum — and the per-label counts (label, n). Both merge by plain
+    addition (streaming/embedding_monitor.py stores them per batch)."""
+    x = F.posexplode(_as_double(vec_col)).alias("dim", "x")
+    sums = (
+        df.select(F.col(label_col).alias("label"), x)
+        .groupBy("label", "dim")
+        .agg(F.sum(F.round(F.col("x") * int(scale)).cast("long")).alias("qsum"))
+    )
+    n = df.groupBy(F.col(label_col).alias("label")).agg(F.count("*").alias("n"))
+    return sums, n
+
+
+def _centroid_rel(sums: DataFrame, n: DataFrame) -> DataFrame:
+    """Reassemble (label, dim, qsum) partials and (label, n) counts into the
+    (label, svec, n) relation: svec is the per-label sum vector in
+    dimension order."""
+    vec = sums.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "qsum"))),
+            lambda st: st["qsum"].cast("double"),
+        ).alias("svec")
+    )
+    return vec.join(n, "label")
+
+
 def centroid_sums(
     df: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
     scale: int = 10_000,
 ) -> DataFrame:
-        q = df.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(_as_double(vec_col)).alias("dim", "x"),
-        ).select(
-            "label",
-            "dim",
-            F.round(F.col("x") * int(scale)).cast("long").alias("q"),
-        )
-        sums = q.groupBy("label", "dim").agg(F.sum("q").alias("s"))
-        vec = sums.groupBy("label").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "s"))),
-                lambda st: st["s"].cast("double"),
-            ).alias("svec")
-        )
-        n = df.groupBy(F.col(label_col).alias("label")).agg(
-            F.count("*").alias("n")
-        )
-        return vec.join(n, "label")
+    """Per-label quantized centroid sums (label, svec, n): svec[d] is the
+    exact bigint sum of round(x_d·scale) over the label's vectors, as
+    doubles, and n its vector count. The order-independent state
+    ``embedding_drift`` compares (see its docstring for the integer
+    budget); the streaming centroid monitor folds its stored partials
+    into the same relation."""
+    return _centroid_rel(*_centroid_partials(df, vec_col, label_col, scale))
+
 
 def drift_between(
     o: DataFrame,

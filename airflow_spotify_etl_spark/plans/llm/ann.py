@@ -26,39 +26,20 @@ from .text import (
 
 def q22_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k neighbors (north star similarity-search
-    baseline): query set = vec_id < 5, corpus = the rest. The query side is
-    broadcast; dot products run via higher-order array functions in the JVM
-    (zip_with + aggregate), entirely shuffle-free for the corpus scan."""
+    baseline, operators/similarity.cosine_topk): query set = vec_id < 5,
+    corpus = the rest, each hit carrying its label. The query side is
+    broadcast; dot products run via higher-order array functions in the
+    JVM (zip_with + aggregate), entirely shuffle-free for the corpus
+    scan."""
+    from ...operators.similarity import cosine_topk
+
     emb = load_table(spark, sf_dir, "embeddings")
-    to_dbl = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
     queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), to_dbl("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    corpus = emb.filter(F.col("vec_id") >= 5).select(
-        "vec_id", "label", to_dbl("embedding").alias("v")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-
-    paired = corpus.join(F.broadcast(queries))
-    scored = paired.withColumn(
-        "cos",
-        dot(F.col("qv"), F.col("v"))
-        / (F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("v"), F.col("v")))),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", "rank", "vec_id", F.round("cos", 4).alias("cosine_sim"), "label"
-        )
-        .orderBy("query_id", "rank")
+    corpus = emb.filter(F.col("vec_id") >= 5)
+    return cosine_topk(corpus, queries, k=5, payload=["label"]).orderBy(
+        "query_id", "rank"
     )
 
 
@@ -1266,6 +1247,32 @@ ORDER BY t.query_id
 """
 
 
+def _sample_knn(
+    emb: DataFrame, salt: str, k: int, *cols: str
+) -> tuple[DataFrame, DataFrame]:
+    """The cosine k-NN graph of a fixed-size deterministic sample, shared
+    by q315 and q355: the 256 rows exact_k_sample draws under ``salt``
+    (md5-slice order, vec_id tiebreak — TakeOrderedAndProject), each
+    scored against every OTHER sampled vector with the shared cosine
+    scorer and cut to its top k by (cos DESC, nbr_id). The self-join is
+    k²-bounded (≤ 65 536 pairs) whatever the corpus size. Returns the
+    sample (vec_id, *cols, …) and the neighbour rows (vec_id, *cols,
+    nbr_id, nbr_<col>…, rank)."""
+    from ...operators.sampling import exact_k_sample
+    from ...operators.similarity import _cosine, _query_side, _top_k
+
+    sample = exact_k_sample(emb, 256, id_col="vec_id", salt=salt)
+    a = _query_side(sample, "embedding", "vec_id", *cols)
+    b = a.select(
+        F.col("vec_id").alias("nbr_id"),
+        *[F.col(c).alias(f"nbr_{c}") for c in cols],
+        F.col("_qv").alias("_vd"),
+        F.col("_qn").alias("_vn"),
+    )
+    scored = a.join(b, F.col("vec_id") != F.col("nbr_id")).withColumn("cos", _cosine())
+    return a, _top_k(scored, ["vec_id"], F.col("cos").desc(), "nbr_id", k)
+
+
 def q315_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hubness audit of the embedding space: the k-occurrence
     distribution N_5(x) (how often each vector appears in OTHER
@@ -1296,42 +1303,8 @@ def q315_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row — n sampled vectors, max/mean in-degree, the
     count of 'hubs' (N_5 ≥ 2·k), and the k-occurrence skewness."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings", parallelize=True)
-        .withColumn(
-            "_h",
-            F.expr(
-                "CAST(conv(substr(md5(concat('hub:',"
-                " CAST(vec_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-            ),
-        )
-        .orderBy("_h", "vec_id")
-        .limit(256)
-    )
-    a = emb.select("vec_id", F.expr(
-        "transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"))
-    b = a.select(F.col("vec_id").alias("nbr_id"), F.col("v").alias("w"))
-    dot = F.expr(
-        "aggregate(zip_with(v, w, (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-        " (acc, x) -> acc + x)"
-    )
-    norm = lambda c: F.sqrt(
-        F.expr(
-            f"aggregate(transform({c}, x -> x * x), CAST(0.0 AS DOUBLE),"
-            " (acc, x) -> acc + x)"
-        )
-    )
-    scored = (
-        a.join(b, F.col("vec_id") != F.col("nbr_id"))
-        .select(
-            "vec_id",
-            "nbr_id",
-            (dot / (norm("v") * norm("w"))).alias("cos"),
-        )
-    )
-    w5 = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nbr_id")
-    top5 = scored.withColumn("r", F.row_number().over(w5)).filter(
-        F.col("r") <= 5
+    a, top5 = _sample_knn(
+        load_table(spark, sf_dir, "embeddings", parallelize=True), "hub:", 5
     )
     deg = (
         a.select(F.col("vec_id").alias("nbr_id"))
@@ -1488,32 +1461,27 @@ FROM ({sql}) {tier}_arm"""
     )
 
 
-def q318_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 as a function of nprobe (1, 2, 4, 8, 16) for the
-    hash-seeded IVF tier — the probe-budget curve an ANN operator
-    publishes so capacity planning can pick the cheapest nprobe that
-    clears the recall SLO (extends the single-point audits q146/q317
-    to the whole sweep).
+def _nprobe_sweep(spark: SparkSession, sf_dir: str):
+    """The probe-all scoring q318 and q336 share: the hash-seeded IVF
+    tier (nlist=16; queries vec_id < 5, corpus the rest) scores the
+    corpus against every (query, cell) ONCE — each query's ranked probe
+    list (the operators' ``_ranked_cells``, exploded with its 1-based
+    cell_rank) joined to the assigned corpus — and cuts it to the
+    per-(query, cell) top-5 (≤ nq·nlist·5 rows). Every sweep point
+    nprobe ∈ {1, 2, 4, 8, 16} is then a filter cell_rank ≤ nprobe + top-5
+    over that bounded relation, and ground truth (probe-all = brute
+    force) falls out of the same relation.
 
-    ONE shared scoring pass, not five searches: the corpus is scored
-    probe-all once (every query × every cell), reduced to the per-
-    (query, cell) top-5 (≤ nq·nlist·5 rows — row_number windows), and
-    every sweep point is then a filter cell_rank ≤ nprobe + top-5 over
-    that bounded relation; ground truth (probe-all = brute force) falls
-    out of the same relation. recall_ppm is the exact integer
-    (hits·10⁶) div (5·n_queries).
-
-    Shape at 100 TB: the one probe-all scoring pass dominates and is
-    shared across all five sweep points (a naive sweep re-scans the
-    corpus per nprobe); everything after runs on nq·nlist·5 rows.
-    Engine-portable ordering: the identical left-to-right double dot
-    chains as q22/q56, vec_id/cell tiebreaks everywhere."""
+    Returns (n_queries as a one-row relation, the assigned corpus, the
+    ranked probe rows (query_id, cell, cell_rank, …), the broadcast nprobe
+    relation, hits_at_5 per nprobe)."""
     from ...operators.similarity import (
-        _as_double,
         _assign_cells,
-        _dot,
+        _cosine,
         _norm,
-        _unit_mat,
+        _query_side,
+        _ranked_cells,
+        _top_k,
         hash_seed_centroids,
     )
 
@@ -1524,82 +1492,65 @@ def q318_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") >= 5)
     cents = hash_seed_centroids(corpus, nlist=16)
     assigned = _assign_cells(corpus, cents, "embedding", "vec_id").select(
-        "vec_id",
-        "cell",
-        _as_double("embedding").alias("_vd"),
+        "vec_id", "cell", "_vd"
     ).withColumn("_vn", _norm(F.col("_vd")))
-
-    # every cell ranked per query: sim DESC, cell DESC (the ivf_search
-    # reverse(array_sort) tiebreak), rank = position in the sorted array
-    qscored = F.transform(
-        _unit_mat(cents),
-        lambda cv, i: F.struct(
-            _dot(F.col("_qv"), cv).alias("sim"), i.alias("cell")
-        ),
-    )
-    ranked = F.transform(
-        F.reverse(F.array_sort(qscored)),
-        lambda s, i: F.struct(
-            s["cell"].alias("cell"), (i + 1).alias("cell_rank")
-        ),
-    )
     qcells = (
-        queries.select("query_id", _as_double("embedding").alias("_qv"))
-        .withColumn("_qn", _norm(F.col("_qv")))
-        .withColumn("_rc", F.explode(ranked))
-        .select(
-            "query_id", "_qv", "_qn",
-            F.col("_rc.cell").alias("cell"),
-            F.col("_rc.cell_rank").alias("cell_rank"),
-        )
+        _query_side(queries, "embedding", "query_id")
+        .select("*", F.posexplode(_ranked_cells(cents)).alias("_pos", "cell"))
+        .withColumn("cell_rank", F.col("_pos") + 1)
     )
     scored = assigned.join(F.broadcast(qcells), "cell").select(
-        "query_id",
-        "cell_rank",
-        "vec_id",
-        (_dot(F.col("_qv"), F.col("_vd")) / (F.col("_qn") * F.col("_vn"))).alias(
-            "cos"
-        ),
+        "query_id", "cell_rank", "vec_id", _cosine().alias("cos")
     )
-    wc = W.partitionBy("query_id", "cell_rank").orderBy(
-        F.col("cos").desc(), "vec_id"
-    )
+    by_cos = F.col("cos").desc()
     cell_top = (
-        scored.withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= 5)
+        _top_k(scored, ["query_id", "cell_rank"], by_cos, "vec_id", 5)
         .select("query_id", "cell_rank", "vec_id", "cos")
         .localCheckpoint(eager=True)  # ≤ nq·nlist·5 rows, fanned into
         # the brute branch and all five sweep points (pinning convention)
     )
-    wq = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    brute = (
-        cell_top.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= 5)
-        .select("query_id", F.col("vec_id").alias("bvec"))
+    # The brute side's query id is aliased: joining cell_top's query_id to
+    # itself would be a trivially true predicate.
+    brute = _top_k(cell_top, ["query_id"], by_cos, "vec_id", 5).select(
+        F.col("query_id").alias("bq"), F.col("vec_id").alias("bvec")
     )
-    sweep = cell_top.crossJoin(
-        F.broadcast(
-            spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "nprobe int")
+    nprobes = F.broadcast(
+        spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "nprobe int")
+    )
+    sweep = cell_top.crossJoin(nprobes).filter(F.col("cell_rank") <= F.col("nprobe"))
+    hits = (
+        _top_k(sweep, ["nprobe", "query_id"], by_cos, "vec_id", 5)
+        .join(
+            brute,
+            (F.col("query_id") == F.col("bq")) & (F.col("vec_id") == F.col("bvec")),
+            "left_semi",
         )
-    ).filter(F.col("cell_rank") <= F.col("nprobe"))
-    wn = W.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cos").desc(), "vec_id"
-    )
-    topk = (
-        sweep.withColumn("_r", F.row_number().over(wn))
-        .filter(F.col("_r") <= 5)
-        .select("nprobe", "query_id", "vec_id")
-    )
-    hits = topk.join(
-        brute,
-        (topk.query_id == brute.query_id) & (topk.vec_id == brute.bvec),
-        "left_semi",
+        .groupBy("nprobe")
+        .agg(F.count("*").alias("hits_at_5"))
     )
     nq = queries.agg(F.count("*").alias("n_queries"))
+    return nq, assigned, qcells, nprobes, hits
+
+
+def q318_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 as a function of nprobe (1, 2, 4, 8, 16) for the
+    hash-seeded IVF tier — the probe-budget curve an ANN operator
+    publishes so capacity planning can pick the cheapest nprobe that
+    clears the recall SLO (extends the single-point audits q146/q317
+    to the whole sweep).
+
+    ONE shared scoring pass, not five searches (``_nprobe_sweep``,
+    shared with q336). recall_ppm is the exact integer (hits·10⁶) div
+    (5·n_queries).
+
+    Shape at 100 TB: the one probe-all scoring pass dominates and is
+    shared across all five sweep points (a naive sweep re-scans the
+    corpus per nprobe); everything after runs on nq·nlist·5 rows.
+    Engine-portable ordering: the identical left-to-right double dot
+    chains as q22/q56, vec_id/cell tiebreaks everywhere."""
+    nq, _, _, _, hits = _nprobe_sweep(spark, sf_dir)
     return (
-        hits.groupBy("nprobe")
-        .agg(F.count("*").alias("hits_at_5"))
-        .crossJoin(F.broadcast(nq))
+        hits.crossJoin(F.broadcast(nq))
         .select(
             "nprobe",
             "n_queries",
@@ -1902,51 +1853,8 @@ def q336_ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle assignment; the probe lists are nq·nlist rows; the
     one corpus-sized pass is the shared probe-all scoring (q318),
     amortized over every sweep point."""
-    from ...operators.similarity import (
-        _as_double,
-        _assign_cells,
-        _dot,
-        _norm,
-        _unit_mat,
-        hash_seed_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    cents = hash_seed_centroids(corpus, nlist=16)
-    assigned = _assign_cells(corpus, cents, "embedding", "vec_id").select(
-        "vec_id", "cell", _as_double("embedding").alias("_vd")
-    ).withColumn("_vn", _norm(F.col("_vd")))
+    nq, assigned, qcells, nprobes, hits = _nprobe_sweep(spark, sf_dir)
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("cell_m"))
-
-    qscored = F.transform(
-        _unit_mat(cents),
-        lambda cv, i: F.struct(
-            _dot(F.col("_qv"), cv).alias("sim"), i.alias("cell")
-        ),
-    )
-    ranked = F.transform(
-        F.reverse(F.array_sort(qscored)),
-        lambda s, i: F.struct(
-            s["cell"].alias("cell"), (i + 1).alias("cell_rank")
-        ),
-    )
-    qcells = (
-        queries.select("query_id", _as_double("embedding").alias("_qv"))
-        .withColumn("_qn", _norm(F.col("_qv")))
-        .withColumn("_rc", F.explode(ranked))
-        .select(
-            "query_id", "_qv", "_qn",
-            F.col("_rc.cell").alias("cell"),
-            F.col("_rc.cell_rank").alias("cell_rank"),
-        )
-    )
-    nprobes = F.broadcast(
-        spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "nprobe int")
-    )
     # exact work: candidates scored per (nprobe, query) = Σ probed cell sizes
     work = (
         qcells.select("query_id", "cell", "cell_rank")
@@ -1956,39 +1864,6 @@ def q336_ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nprobe")
         .agg(F.sum(F.coalesce("cell_m", F.lit(0))).alias("candidates"))
     )
-    # recall machinery shared with q318
-    scored = assigned.join(F.broadcast(qcells), "cell").select(
-        "query_id", "cell_rank", "vec_id",
-        (_dot(F.col("_qv"), F.col("_vd")) / (F.col("_qn") * F.col("_vn"))).alias("cos"),
-    )
-    wc = W.partitionBy("query_id", "cell_rank").orderBy(F.col("cos").desc(), "vec_id")
-    cell_top = (
-        scored.withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= 5)
-        .select("query_id", "cell_rank", "vec_id", "cos")
-        .localCheckpoint(eager=True)
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    brute = (
-        cell_top.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= 5)
-        .select("query_id", F.col("vec_id").alias("bvec"))
-    )
-    sweep = cell_top.crossJoin(nprobes).filter(
-        F.col("cell_rank") <= F.col("nprobe")
-    )
-    wn = W.partitionBy("nprobe", "query_id").orderBy(F.col("cos").desc(), "vec_id")
-    topk = (
-        sweep.withColumn("_r", F.row_number().over(wn))
-        .filter(F.col("_r") <= 5)
-        .select("nprobe", "query_id", "vec_id")
-    )
-    hits = topk.join(
-        brute,
-        (topk.query_id == brute.query_id) & (topk.vec_id == brute.bvec),
-        "left_semi",
-    ).groupBy("nprobe").agg(F.count("*").alias("hits_at_5"))
-    nq = queries.agg(F.count("*").alias("n_queries"))
     return (
         work.join(hits, "nprobe")
         .crossJoin(F.broadcast(nq))
@@ -2211,49 +2086,7 @@ def q355_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ 65 536 scored pairs) NO MATTER the corpus size; at 100 TB the
     same agreement stages run unchanged off the IVF-pruned kNN graph
     (q27/q56) instead of the brute pair set."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn(
-            "_h",
-            F.expr(
-                "CAST(conv(substr(md5(concat('knn:',"
-                " CAST(vec_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-            ),
-        )
-        .orderBy("_h", "vec_id")
-        .limit(256)
-    )
-    a = emb.select(
-        "vec_id",
-        "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    b = a.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("label").alias("nbr_label"),
-        F.col("v").alias("w"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(v, w, (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-        " (acc, x) -> acc + x)"
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.expr(
-            f"aggregate(transform({c}, x -> x * x), CAST(0.0 AS DOUBLE),"
-            " (acc, x) -> acc + x)"
-        )
-    )
-    scored = a.join(b, F.col("vec_id") != F.col("nbr_id")).select(
-        "vec_id",
-        "label",
-        "nbr_id",
-        "nbr_label",
-        (dot / (norm("v") * norm("w"))).alias("cos"),
-    )
-    w1 = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nbr_id")
-    nn = scored.withColumn("r", F.row_number().over(w1)).filter(
-        F.col("r") == 1
-    )
+    _, nn = _sample_knn(load_table(spark, sf_dir, "embeddings"), "knn:", 1, "label")
     return (
         nn.groupBy("label")
         .agg(

@@ -8,10 +8,12 @@ per-(label, dim) sums are integer-quantized, so partials from any batch
 split merge by plain addition with no float-order hazard, and per-label
 counts add. The store therefore uses the batch-partial layout of
 ``streaming/drain.write_partial``: each micro-batch writes its own
-(label, dim, qsum) + (label, n) partials under ``batch=<id>``,
-retry-overwrites only itself, and a reader folds the store into exactly
-the (label, svec, n) relation the shared ``drift_between`` comparison
-consumes. Flag math is the oracle-checked q122 code, not a streaming
+(label, dim, qsum) + (label, n) partials under ``batch=<id>`` — the
+batch operator's ``_centroid_partials`` — and retry-overwrites only
+itself; a reader sums the store and reassembles it with the batch
+operator's ``_centroid_rel`` into exactly the (label, svec, n) relation
+the shared ``drift_between`` comparison consumes. Quantization, sums and
+flag math are the oracle-checked q122 code, not a streaming
 re-implementation.
 
 Store size per batch: labels × dims bigints — independent of how many
@@ -36,20 +38,9 @@ def _apply_centroid_batch(
     label_col: str,
     scale: int,
 ) -> None:
-    from ..operators.similarity import _as_double
+    from ..operators.similarity import _centroid_partials
 
-    q = bdf.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(_as_double(vec_col)).alias("dim", "x"),
-    ).select(
-        "label",
-        "dim",
-        F.round(F.col("x") * int(scale)).cast("long").alias("q"),
-    )
-    sums = q.groupBy("label", "dim").agg(F.sum("q").alias("qsum"))
-    n = bdf.groupBy(F.col(label_col).alias("label")).agg(
-        F.count("*").alias("n")
-    )
+    sums, n = _centroid_partials(bdf, vec_col, label_col, scale)
     write_partial(sums, f"{store_path}/sums", batch_id)
     write_partial(n, f"{store_path}/counts", batch_id)
 
@@ -78,23 +69,19 @@ def read_centroids(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stored partials into the (label, svec, n) relation —
     identical to ``operators.similarity.centroid_sums`` over the union
     of every drained vector (additive integer merge; pytest-pinned)."""
+    from ..operators.similarity import _centroid_rel
+
     sums = (
         spark.read.parquet(f"{store_path}/sums")
         .groupBy("label", "dim")
-        .agg(F.sum("qsum").alias("s"))
-    )
-    vec = sums.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "s"))),
-            lambda st: st["s"].cast("double"),
-        ).alias("svec")
+        .agg(F.sum("qsum").alias("qsum"))
     )
     n = (
         spark.read.parquet(f"{store_path}/counts")
         .groupBy("label")
         .agg(F.sum("n").alias("n"))
     )
-    return vec.join(n, "label")
+    return _centroid_rel(sums, n)
 
 
 def read_drift(

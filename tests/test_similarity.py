@@ -27,6 +27,18 @@ def _queries(emb):
     )
 
 
+def _jobs_during(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_bruteforce_self_similarity(spark, emb):
     # Querying the corpus WITH the query vectors included: rank-1 neighbor of
     # each query must be itself with cosine 1.0.
@@ -97,6 +109,30 @@ def test_lsh_pairs_finds_planted_duplicates(spark):
     assert (0, 100) in got
 
 
+def test_lsh_pairs_reject_vectors_of_another_dim(spark):
+    """A vector whose length is not ``dim`` would dot to NULL against
+    every plane, sketch to all zeros and share one bucket per band with
+    every other such vector. The query fails instead, from inside the
+    plan: building the frame runs no Spark job."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    base = rng.randn(10, 8)
+    rows = [(i, base[i].tolist()) for i in range(10)]
+    rows.append((100, (base[0] + 0.01 * rng.randn(8)).tolist()))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pairs, jobs = _jobs_during(
+        spark, "lsh-dim-build", lambda: cosine_pairs_lsh(df, threshold=0.95)
+    )
+    assert jobs == 0
+    # The raise reaches Python as a SparkRuntimeException, or wrapped in a
+    # Py4JJavaError when several query stages fail at once.
+    with pytest.raises(Exception, match="vector length 8 != dim 64"):
+        pairs.collect()
+    got = {(r.vec_a, r.vec_b) for r in cosine_pairs_lsh(df, threshold=0.95, dim=8).collect()}
+    assert (0, 100) in got
+
+
 def test_ivf_clamps_nlist_to_corpus_size(spark):
     """nlist > corpus size degrades gracefully (ADVICE r2): fewer cells,
     correct top-k — and an empty corpus raises a clear error."""
@@ -109,10 +145,10 @@ def test_ivf_clamps_nlist_to_corpus_size(spark):
     queries = spark.createDataFrame(
         [(0, [1.0, 0.0])], "query_id long, embedding array<float>"
     )
-    got = ivf_topk(corpus, queries, k=3, nlist=16, nprobe=16, dim=2)
+    got = ivf_topk(corpus, queries, k=3, nlist=16, nprobe=16)
     assert got.count() == 3  # all vectors still reachable
     with pytest.raises(ValueError, match="empty"):
-        _centroids(corpus.filter("vec_id < 0"), "embedding", "vec_id", 4, 2)
+        _centroids(corpus.filter("vec_id < 0"), "embedding", "vec_id", 4)
 
 
 def test_semantic_dedup_drops_planted_duplicate(spark):
@@ -153,6 +189,14 @@ def test_diversity_cap_caps_and_orders_each_cell(spark, emb):
     for cell in {r.cell for r in proto}:
         sims = [r.centroid_sim for r in sorted(proto, key=lambda r: r.rank) if r.cell == cell]
         assert sims == sorted(sims, reverse=True)
+
+
+def test_diversity_cap_rejects_unknown_keep(spark, emb):
+    from airflow_spotify_etl_spark.operators.similarity import diversity_cap
+
+    cents = hash_seed_centroids(emb, nlist=4)
+    with pytest.raises(ValueError, match="keep"):
+        diversity_cap(emb, cents, m=3, keep="diversity")
 
 
 def test_pq_encode_matches_numpy_argmin(spark, emb):
@@ -355,6 +399,52 @@ def test_ivf_search_rejects_sparse_centroid_ids(spark):
     cents = [(0, [1.0, 0.0]), (2, [0.0, 1.0])]
     with pytest.raises(ValueError, match="dense"):
         ivf_search(corpus, q, cents, k=1, nprobe=1)
+
+
+def test_probe_ties_go_to_the_higher_cell(spark, tmp_path):
+    """A query exactly equidistant from two unit centroids probes the
+    HIGHER cell in every probe selection: ivf_search, ivf_pq_topk and the
+    stored-index search all return cell 1's rows, the last two equal.
+    Besides reading the index's schema, search_ann_index runs exactly one
+    Spark job before its search: the collect of the small probe
+    relation."""
+    from airflow_spotify_etl_spark.operators.similarity import (
+        _assign_cells,
+        ivf_pq_topk,
+        pq_codebooks,
+        search_ann_index,
+        write_ann_index,
+    )
+
+    corpus = spark.createDataFrame(
+        [(0, [2.0, 0.1]), (1, [3.0, 0.2]), (2, [1.0, 0.3]),
+         (3, [0.1, 2.0]), (4, [0.2, 3.0]), (5, [0.3, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = spark.createDataFrame([(0, [1.0, 1.0])], "query_id long, embedding array<double>")
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    assigned = _assign_cells(corpus, cents, "embedding", "vec_id")
+    cell1 = {r.vec_id for r in assigned.filter("cell = 1").collect()}
+    assert cell1 == {3, 4, 5}
+
+    hits = ivf_search(corpus, q, cents, k=3, nprobe=1).collect()
+    assert {r.vec_id for r in hits} == cell1
+
+    books = pq_codebooks(corpus, n_sub=2, n_codes=4)
+    path = str(tmp_path / "ann_index")
+    write_ann_index(corpus, cents, books, path)
+    want = sorted(
+        tuple(r) for r in ivf_pq_topk(corpus, q, cents, books, k=3, nprobe=1).collect()
+    )
+    _, schema_jobs = _jobs_during(spark, "ann-index-schema", lambda: spark.read.parquet(path))
+    got, jobs = _jobs_during(
+        spark,
+        "ann-search-probes",
+        lambda: search_ann_index(spark, path, q, cents, books, k=3, nprobe=1),
+    )
+    assert jobs == schema_jobs + 1  # the index's schema read, one probe collect
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert {r[2] for r in want} == cell1
 
 
 def test_quantize_int8_error_bounds(spark, sf_dir):
